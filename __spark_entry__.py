@@ -8,7 +8,6 @@ operator family (SURVEY.md §2) with DuckDB oracle twins.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,18 +26,15 @@ def entry(spark: SparkSession) -> DataFrame:
         assign_tiles,
         knn_region_column,
     )
+    from osm_legal_default_speeds_spark.jobs.pipeline_job import (
+        load_default_ruleset,
+    )
     from osm_legal_default_speeds_spark.plans.driver_queries import (
         _roads_df,
-        mini_ruleset,
         synth_boundaries,
     )
     from osm_legal_default_speeds_spark.plans.native_cascade import (
         infer_speed_limits_native,
-    )
-    from osm_legal_default_speeds_spark.plans.rules_compiler import compile_ruleset
-    from osm_legal_default_speeds_spark.sources.rules_json import (
-        REFERENCE_DATASET_PATH,
-        load_rules_json,
     )
 
     sf_dir = "/root/testdata/sf0.001"
@@ -55,15 +51,9 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     located = assign_tiles(located, tile_res=7)
 
-    # full real rule dataset when available, else the embedded mini set
-    if os.path.exists(REFERENCE_DATASET_PATH):
-        _, road_types, speed_limits, _ = load_rules_json(REFERENCE_DATASET_PATH)
-        ruleset = compile_ruleset(road_types, speed_limits)
-    else:
-        ruleset = mini_ruleset()
-
     out = infer_speed_limits_native(
-        located, ruleset, country_col="region_code", tags_col="tags"
+        located, load_default_ruleset(), country_col="region_code",
+        tags_col="tags",
     )
     return out.select(
         "road_id",

@@ -52,6 +52,8 @@ def make_spark(app: str = "bench", cpus: str | None = None) -> SparkSession:
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # bench records keep stderr's tail: no console progress bars
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
 
@@ -93,7 +95,6 @@ def _run(df) -> int:
 def bench_queries(
     spark: SparkSession, sf_dir: str
 ) -> tuple[dict, dict, dict, list]:
-    from osm_legal_default_speeds_spark.operators.inference import infer_speed_limits
     from osm_legal_default_speeds_spark.operators.spatial import (
         assign_tiles,
         knn_region_column,
@@ -103,6 +104,9 @@ def bench_queries(
     from osm_legal_default_speeds_spark.plans.driver_queries import (
         _roads_df,
         synth_boundaries,
+    )
+    from osm_legal_default_speeds_spark.plans.native_cascade import (
+        infer_speed_limits_native,
     )
     from osm_legal_default_speeds_spark.plans.rules_compiler import compile_ruleset
     from osm_legal_default_speeds_spark.sources.rules_json import (
@@ -132,18 +136,10 @@ def bench_queries(
         )
         return roads.withColumn("country_code", cc)
 
-    def q_inference_full(spark, sf_dir):
-        """Broadcast-rules cascade over the full real dataset; roads get
-        real country codes spread across all 242 rule countries."""
-        out = infer_speed_limits(_real_cc_roads(spark, sf_dir), full_rules)
-        return out.select(
-            "road_id", F.col("speed_limit.certitude").alias("certitude")
-        )
-
     def q_inference_dedup(spark, sf_dir):
-        """Same cascade via the distinct -> infer -> join-back plan:
-        Python/Arrow cost is O(distinct combos), not O(rows)."""
-        out = infer_speed_limits(
+        """The native cascade via the distinct -> infer -> join-back
+        plan: per-row cascade cost is O(distinct combos), not O(rows)."""
+        out = infer_speed_limits_native(
             _real_cc_roads(spark, sf_dir), full_rules, dedup_inputs=True
         )
         return out.select(
@@ -151,12 +147,10 @@ def bench_queries(
         )
 
     def q_inference_native(spark, sf_dir):
-        """Same cascade compiled to pure Catalyst expressions — no
-        Python workers, no shuffle (plans.native_cascade)."""
-        from osm_legal_default_speeds_spark.plans.native_cascade import (
-            infer_speed_limits_native,
-        )
-
+        """The cascade over the full real dataset, compiled to pure
+        Catalyst expressions — no Python workers, no shuffle
+        (plans.native_cascade); roads get real country codes spread
+        across all 242 rule countries."""
         out = infer_speed_limits_native(_real_cc_roads(spark, sf_dir), full_rules)
         return out.select(
             "road_id", F.col("speed_limit.certitude").alias("certitude")
@@ -182,12 +176,7 @@ def bench_queries(
 
     def q_flagship(spark, sf_dir):
         """End-to-end: spatial jurisdiction + inference + tiling, on
-        the native Column cascade (fastest path, no Python workers —
-        the Arrow-UDF paths stay measured as inference_* above)."""
-        from osm_legal_default_speeds_spark.plans.native_cascade import (
-            infer_speed_limits_native,
-        )
-
+        the native Column cascade (no Python workers)."""
         roads = _par_roads(spark, sf_dir)
         lon, lat = F.col("lon"), F.col("lat")
         region = F.coalesce(
@@ -209,7 +198,6 @@ def bench_queries(
         )
 
     queries = {
-        "inference_full_rules": q_inference_full,
         "inference_dedup_plan": q_inference_dedup,
         "inference_native": q_inference_native,
         "spatial_pipeline": q_spatial_pipeline,
@@ -267,7 +255,7 @@ def bench_queries(
     # the headline set is fixed; record any dropped member IN the JSON
     # (the sole artifact of a bench run) so a shrunken total is visible
     expected = (
-        "inference_full_rules", "inference_dedup_plan", "inference_native",
+        "inference_dedup_plan", "inference_native",
         "spatial_pipeline", "tile_rollup", "flagship_e2e", "exact_dedup",
         "ann_topk", "text_quality", "image_verify", "minhash_near_dup",
     )
@@ -308,7 +296,6 @@ def scaling_df(spark: SparkSession, sf_dir: str, replicate: int):
     including it per-run turns a 4x-cores comparison into a
     serial-bottleneck measurement (Amdahl) and reports meaningless
     efficiency."""
-    from osm_legal_default_speeds_spark.operators.inference import infer_speed_limits
     from osm_legal_default_speeds_spark.operators.spatial import (
         assign_tiles,
         knn_region_column,
@@ -317,6 +304,9 @@ def scaling_df(spark: SparkSession, sf_dir: str, replicate: int):
     from osm_legal_default_speeds_spark.plans.driver_queries import (
         _roads_df,
         synth_boundaries,
+    )
+    from osm_legal_default_speeds_spark.plans.native_cascade import (
+        infer_speed_limits_native,
     )
     from osm_legal_default_speeds_spark.plans.rules_compiler import compile_ruleset
     from osm_legal_default_speeds_spark.sources.rules_json import (
@@ -351,22 +341,9 @@ def scaling_df(spark: SparkSession, sf_dir: str, replicate: int):
         knn_region_column(boundaries, lon, lat),
     )
     roads = assign_tiles(roads.withColumn("region_code", region), tile_res=7)
-    engine = os.environ.get("SPARK_GRAFT_ENGINE", "native")
-    if engine == "native":
-        # default: all-Catalyst cascade — no Python workers in the
-        # measured job, so scaling is not dragged by worker fork/IPC
-        from osm_legal_default_speeds_spark.plans.native_cascade import (
-            infer_speed_limits_native,
-        )
-
-        out = infer_speed_limits_native(
-            roads, full_rules, country_col="region_code"
-        )
-    else:
-        dedup = os.environ.get("SPARK_GRAFT_DEDUP", "0") == "1"
-        out = infer_speed_limits(
-            roads, full_rules, country_col="region_code", dedup_inputs=dedup
-        )
+    # all-Catalyst cascade: no Python workers in the measured job, so
+    # scaling is not dragged by worker fork/IPC
+    out = infer_speed_limits_native(roads, full_rules, country_col="region_code")
     return out.select(
         "road_id", "region_code", "tile_id",
         F.col("speed_limit.certitude").alias("certitude"),
@@ -602,12 +579,10 @@ def scaling_worker() -> None:
 
         big = scaling_df(spark, sf_dir, replicate)
         # The settle run IS the warm-up: plan analysis + codegen + JIT
-        # on THIS plan, and (for the SPARK_GRAFT_ENGINE=arrow leg) the
-        # Python worker pool fork + pandas/pyarrow imports (~3 core-s
-        # per worker). On a real cluster executors and their workers
-        # are long-lived, so steady-state throughput is the honest
-        # scaling metric; dropping this run would make the timed
-        # minimum measure 8-vs-32 interpreter startups instead.
+        # on THIS plan. On a real cluster executors are long-lived, so
+        # steady-state throughput is the honest scaling metric;
+        # dropping this run would make the timed minimum measure
+        # one-off plan compilation instead.
         _run(big)
         # min-of-3: the sandbox host shows large run-to-run variance
         # (noisy neighbors / variable turbo); the minimum is the least

@@ -7,12 +7,14 @@ capabilities of westnordost/osm-legal-default-speeds (reference at
 - ``functions``  — tag-filter expression DSL (parser -> AST), unit
   normalization, and native Spark Column compilation of filters.
 - ``plans``      — driver-side rule compiler (placeholder inlining,
-  cycle check, match-priority precomputation, relevant-key set) and a
-  pure-Python reference-semantics engine used as the in-UDF kernel and
-  as the differential-test oracle.
-- ``operators``  — distributed operators: broadcast rule-match cascade,
-  result assembly, spatial grid index / PIP / kNN / tiling, dedup,
-  similarity search, text analysis, image payload plumbing.
+  cycle check, match-priority precomputation, relevant-key set), the
+  speed-limit inference operator (``native_cascade``: the whole
+  match cascade and result assembly as Catalyst expressions), and a
+  pure-Python reference-semantics engine used as the differential-test
+  oracle.
+- ``operators``  — distributed operators: spatial grid index / PIP /
+  kNN / tiling, dedup, similarity search, text analysis, image payload
+  plumbing.
 - ``sources``    — dataset loaders (rules JSON) and deterministic
   synthetic fixture generators (images, geo, boundaries).
 - ``streaming``  — structured-streaming wrappers of the inference op.
@@ -38,13 +40,9 @@ from osm_legal_default_speeds_spark.plans.reference_engine import (  # noqa: F40
 def __getattr__(name):
     # Lazy re-exports of the Spark-dependent surface so importing the
     # package for the pure-Python engine never touches pyspark.
-    if name in ("infer_speed_limits", "prune_relevant_tags",
-                "is_relevant_tag_key_col"):
-        from osm_legal_default_speeds_spark.operators import inference
-
-        return getattr(inference, name)
     if name in ("infer_speed_limits_native", "create_result_tags_native",
-                "stage_result_tags"):
+                "stage_result_tags", "prune_relevant_tags",
+                "is_relevant_tag_key_col"):
         from osm_legal_default_speeds_spark.plans import native_cascade
 
         return getattr(native_cascade, name)

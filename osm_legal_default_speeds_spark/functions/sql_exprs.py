@@ -3,10 +3,9 @@
 The JVM-side / whole-stage-codegen path: compiles a parsed tag-filter
 AST into a ``pyspark.sql.Column`` over a ``map<string,string>`` column,
 and provides a native expression for unit-normalizing number parsing.
-Used when the predicate is known at plan time (fixed filters, the
-driver-contract oracle queries, pushdown-able pre-filters) — the
-data-driven per-country cascade stays in the Arrow UDF
-(``operators.inference``).
+Used for predicates known at plan time (fixed filters, the
+driver-contract oracle queries, pushdown-able pre-filters) and, per
+road-type name, by the all-native cascade (``plans.native_cascade``).
 
 Correctness notes mirrored from the reference:
 - regex atoms use FULL-string matching (``RegexOrSet.kt:22``): every

@@ -14,8 +14,8 @@ Used in three places:
 - result assembly speed capping / implicit-maxspeed detection
   (``LegalDefaultSpeeds.kt:253-304``).
 
-Also exports ``parse_number_with_unit_series`` (pandas-vectorized, the
-hot path inside Arrow UDF batches) and the unit-factor table consumed
+Also exports ``parse_number_with_unit_series`` (pandas-vectorized, for
+pandas batches) and the unit-factor table consumed
 by the native Spark Column compiler in ``functions.sql_exprs``.
 """
 

@@ -26,6 +26,7 @@ import argparse
 import json
 import os
 import sys
+import warnings
 import zipfile
 
 
@@ -57,9 +58,10 @@ def build_pyfiles_zip(dest_path: str, package_root: str | None = None) -> str:
 
 def load_default_ruleset():
     """The compiled FULL reference ruleset when the dataset file is
-    present, else the embedded mini ruleset — the fallback every job
-    entry point shares (imports stay lazy so --py-files resolution
-    happens on the cluster, not at module import)."""
+    present, else the embedded mini ruleset with a warning naming the
+    missing path — the fallback every job entry point and
+    ``__spark_entry__.entry`` share (imports stay lazy so --py-files
+    resolution happens on the cluster, not at module import)."""
     from osm_legal_default_speeds_spark.plans.driver_queries import (
         mini_ruleset,
     )
@@ -76,6 +78,12 @@ def load_default_ruleset():
             REFERENCE_DATASET_PATH
         )
         return compile_ruleset(road_types, speed_limits)
+    warnings.warn(
+        "rule dataset not found at REFERENCE_DATASET_PATH "
+        f"({REFERENCE_DATASET_PATH}); falling back to the embedded "
+        "mini rule set",
+        stacklevel=2,
+    )
     return mini_ruleset()
 
 
@@ -110,9 +118,6 @@ def main(argv: list[str] | None = None) -> None:
     # imports resolved from the --py-files zip on executors and driver
     from pyspark.sql import functions as F
 
-    from osm_legal_default_speeds_spark.operators.inference import (
-        infer_speed_limits,
-    )
     from osm_legal_default_speeds_spark.plans.native_cascade import (
         infer_speed_limits_native,
     )
@@ -142,12 +147,9 @@ def main(argv: list[str] | None = None) -> None:
         roads = assign_tiles(
             roads.withColumn("region_code", region), tile_res=args.tile_res
         )
-        engine = os.environ.get("SPARK_GRAFT_ENGINE", "native")
-        infer = (
-            infer_speed_limits_native if engine == "native"
-            else infer_speed_limits
+        out = infer_speed_limits_native(
+            roads, ruleset, country_col="region_code"
         )
-        out = infer(roads, ruleset, country_col="region_code")
         return out.select(
             "road_id",
             "region_code",

@@ -311,6 +311,9 @@ def bucket_hash(col: Column, j: int, width: int) -> Column:
     as a positive long, mod width. DuckDB twin:
     ``('0x' || substring(md5(j::VARCHAR || ':' || x), 1, 15))::BIGINT
     % width``."""
+    if width < 1:
+        # h % 0 is a silent NULL under non-ANSI Spark
+        raise ValueError(f"bucket_hash needs width >= 1, got width={width}")
     h = F.conv(
         F.substring(F.md5(F.concat(F.lit(f"{j}:"), col)), 1, 15), 16, 10
     ).cast("long")

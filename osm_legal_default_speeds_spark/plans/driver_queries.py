@@ -14,10 +14,12 @@ Query -> SURVEY §2 coverage (full inventory-to-query map: COVERAGE.md):
   bool_precedence    B1-B4, B7/B8 combinators
   effective_country  F14 subdivision -> country fallback
   relevant_keys      F16 map-internal key pruning
-  cascade_infer      C1-C5 match cascade + A1 first-match (Arrow UDF path)
-  relation_semijoin  C6 EXISTS over the relations array
-  override_column    C7 replacer hook as per-row overrides map
-  result_assembly    R1-R4 result map algebra incl. conditional capping
+  cascade_infer_native     C1-C5 match cascade + A1 first-match
+  relation_semijoin_native C6 EXISTS over the relations array
+  override_column_native   C7 replacer hook as per-row overrides map
+                           (through the dedup_inputs plan)
+  result_assembly_native   R1-R4 result map algebra incl. conditional
+                           capping
   grid_encode        graft: hierarchical grid encode + parent rollup
   grid_encode_ea     graft: equal-area (Lambert band) id space + rollup
   hex_encode         graft: hexagonal equal-area index (axial cube round)
@@ -48,10 +50,6 @@ from osm_legal_default_speeds_spark.functions.sql_exprs import (
     filter_to_column,
     number_with_unit_to_double,
 )
-from osm_legal_default_speeds_spark.operators.inference import (
-    infer_speed_limits,
-    prune_relevant_tags,
-)
 from osm_legal_default_speeds_spark.operators.spatial import (
     RectBoundary,
     assign_jurisdiction,
@@ -60,6 +58,10 @@ from osm_legal_default_speeds_spark.operators.spatial import (
     grid_parent,
     knn_region_column,
     tile_rollup,
+)
+from osm_legal_default_speeds_spark.plans.native_cascade import (
+    infer_speed_limits_native,
+    prune_relevant_tags,
 )
 from osm_legal_default_speeds_spark.plans.rules_compiler import compile_ruleset
 from osm_legal_default_speeds_spark.plans.rules_model import (
@@ -375,19 +377,6 @@ FROM roads
 """
 
 
-def q_cascade_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ruleset = mini_ruleset()
-    roads = _roads_df(spark, sf_dir)
-    out = infer_speed_limits(roads, ruleset)
-    r = F.col("speed_limit")
-    return out.select(
-        "road_id",
-        r.getField("road_type_name").alias("road_type_name"),
-        r.getField("certitude").alias("certitude"),
-        F.element_at(r.getField("tags"), F.lit("maxspeed")).alias("out_maxspeed"),
-    )
-
-
 SQL_CASCADE_INFER = f"""
 WITH roads AS ({_ROADS_SQL}),
 staged AS (
@@ -423,13 +412,9 @@ FROM resolved
 
 
 def q_cascade_infer_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C1-C5 on the all-native Column plan (plans.native_cascade): same
-    inputs, same oracle as cascade_infer — no Python eval nodes, no
-    shuffle (pinned by tests/test_native_cascade.py)."""
-    from osm_legal_default_speeds_spark.plans.native_cascade import (
-        infer_speed_limits_native,
-    )
-
+    """C1-C5 match cascade + A1 first-match on the all-native Column
+    plan (plans.native_cascade) — no Python eval nodes, no shuffle
+    (pinned by tests/test_native_cascade.py)."""
     ruleset = mini_ruleset()
     roads = _roads_df(spark, sf_dir)
     out = infer_speed_limits_native(roads, ruleset)
@@ -439,28 +424,6 @@ def q_cascade_infer_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.getField("road_type_name").alias("road_type_name"),
         r.getField("certitude").alias("certitude"),
         F.element_at(r.getField("tags"), F.lit("maxspeed")).alias("out_maxspeed"),
-    )
-
-
-def q_result_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ruleset = assembly_ruleset()
-    o = _read(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    maxspeed = F.when(k % 3 == 1, "60").when(k % 3 == 2, "90")
-    tags = F.when(
-        maxspeed.isNotNull(), F.create_map(F.lit("maxspeed"), maxspeed)
-    ).otherwise(F.create_map().cast("map<string,string>"))
-    roads = o.select(
-        k.alias("road_id"), F.lit("AB").alias("country_code"), tags.alias("tags")
-    )
-    out = infer_speed_limits(roads, ruleset)
-    t = F.col("speed_limit").getField("tags")
-    return out.select(
-        "road_id",
-        F.col("speed_limit").getField("certitude").alias("certitude"),
-        F.element_at(t, F.lit("maxspeed")).alias("out_maxspeed"),
-        F.element_at(t, F.lit("maxspeed:hgv")).alias("out_hgv"),
-        F.element_at(t, F.lit("maxspeed:conditional")).alias("out_cond"),
     )
 
 
@@ -477,12 +440,8 @@ FROM orders
 
 
 def q_result_assembly_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1-R4 as native map algebra (plans.native_cascade): same inputs
-    and oracle as result_assembly."""
-    from osm_legal_default_speeds_spark.plans.native_cascade import (
-        infer_speed_limits_native,
-    )
-
+    """R1-R4 result map algebra incl. conditional capping, as native
+    map expressions (plans.native_cascade)."""
     ruleset = assembly_ruleset()
     o = _read(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
@@ -519,40 +478,6 @@ def relations_ruleset():
     return compile_ruleset(road_types, rules)
 
 
-def q_relation_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C6: EXISTS over the road's relations array — a rule whose
-    relationFilter matches ANY relation tag-map wins at Exact
-    certitude; array-local, no shuffle."""
-    o = _read(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    rel = F.when(
-        k % 3 == 0,
-        F.array(F.create_map(F.lit("type"), F.lit("route"),
-                             F.lit("network"), F.lit("e-road"))),
-    ).when(
-        k % 3 == 1,
-        F.array(F.create_map(F.lit("type"), F.lit("route"),
-                             F.lit("network"), F.lit("lcn"))),
-    ).otherwise(F.array().cast("array<map<string,string>>"))
-    lit_v = F.when(k % 2 == 0, "yes").otherwise("no")
-    roads = o.select(
-        k.alias("road_id"),
-        F.lit("AB").alias("country_code"),
-        F.create_map(F.lit("lit"), lit_v).alias("tags"),
-        rel.alias("relations_tags"),
-    )
-    out = infer_speed_limits(
-        roads, relations_ruleset(), relations_col="relations_tags"
-    )
-    r = F.col("speed_limit")
-    return out.select(
-        "road_id",
-        r.getField("road_type_name").alias("road_type_name"),
-        r.getField("certitude").alias("certitude"),
-        F.element_at(r.getField("tags"), F.lit("maxspeed")).alias("out_maxspeed"),
-    )
-
-
 SQL_RELATION_SEMIJOIN = """
 SELECT o_orderkey AS road_id,
   CASE WHEN o_orderkey % 3 = 0 THEN 'euro road'
@@ -564,35 +489,6 @@ SELECT o_orderkey AS road_id,
        ELSE '100' END AS out_maxspeed
 FROM orders
 """
-
-
-def q_override_column(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C7: the replacer hook as a per-row overrides map column — a
-    true entry forces the named road type's predicate regardless of
-    tags (e.g. an is-urban signal from the spatial layer)."""
-    o = _read(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    overrides = F.when(
-        k % 5 == 0, F.create_map(F.lit("urban"), F.lit(True))
-    ).when(
-        k % 5 == 1, F.create_map(F.lit("urban"), F.lit(False))
-    )
-    lit_v = F.when(k % 2 == 0, "yes").otherwise("no")
-    roads = o.select(
-        k.alias("road_id"),
-        F.lit("AB").alias("country_code"),
-        F.create_map(F.lit("lit"), lit_v).alias("tags"),
-        overrides.cast("map<string,boolean>").alias("overrides"),
-    )
-    out = infer_speed_limits(
-        roads, relations_ruleset(), overrides_col="overrides"
-    )
-    r = F.col("speed_limit")
-    return out.select(
-        "road_id",
-        r.getField("road_type_name").alias("road_type_name"),
-        r.getField("certitude").alias("certitude"),
-    )
 
 
 SQL_OVERRIDE_COLUMN = """
@@ -609,13 +505,10 @@ FROM orders
 
 
 def q_relation_semijoin_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C6 on the all-native plan: the relationFilter compiles to an
-    array-local EXISTS over the relations column; same oracle as
-    relation_semijoin."""
-    from osm_legal_default_speeds_spark.plans.native_cascade import (
-        infer_speed_limits_native,
-    )
-
+    """C6: EXISTS over the road's relations array — a rule whose
+    relationFilter matches ANY relation tag-map wins at Exact
+    certitude. The relationFilter compiles to an array-local EXISTS
+    over the relations column; no shuffle."""
     o = _read(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     rel = F.when(
@@ -647,14 +540,13 @@ def q_relation_semijoin_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_override_column_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C7 on the all-native plan (override coalesce spliced around
-    every hoisted/inlined named predicate, incl. placeholder sites);
-    runs through the dedup_inputs composition so the distinct ->
-    native-infer -> broadcast-join-back plan is oracle-checked too."""
-    from osm_legal_default_speeds_spark.plans.native_cascade import (
-        infer_speed_limits_native,
-    )
-
+    """C7: the replacer hook as a per-row overrides map column — a
+    true entry forces the named road type's predicate regardless of
+    tags (e.g. an is-urban signal from the spatial layer). The override
+    coalesce is spliced around every hoisted/inlined named predicate,
+    incl. placeholder sites; runs through the dedup_inputs composition
+    so the distinct -> infer -> broadcast-join-back plan is
+    oracle-checked too."""
     o = _read(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     overrides = F.when(
@@ -1462,9 +1354,7 @@ QUERIES = {
     "bool_precedence": q_bool_precedence,
     "effective_country": q_effective_country,
     "relevant_keys": q_relevant_keys,
-    "cascade_infer": q_cascade_infer,
     "cascade_infer_native": q_cascade_infer_native,
-    "result_assembly": q_result_assembly,
     "result_assembly_native": q_result_assembly_native,
     "grid_encode": q_grid_encode,
     "grid_encode_ea": q_grid_encode_ea,
@@ -1480,9 +1370,7 @@ QUERIES = {
     "tile_rollup": q_tile_rollup,
     "tile_neighbors": q_tile_neighbors,
     "within_pairs": q_within_pairs,
-    "relation_semijoin": q_relation_semijoin,
     "relation_semijoin_native": q_relation_semijoin_native,
-    "override_column": q_override_column,
     "override_column_native": q_override_column_native,
     "sessionize_batch": q_sessionize_batch,
     **TRAININGDATA_QUERIES,
@@ -1494,10 +1382,8 @@ ORACLES = {
     "bool_precedence": SQL_BOOL_PRECEDENCE,
     "effective_country": SQL_EFFECTIVE_COUNTRY,
     "relevant_keys": SQL_RELEVANT_KEYS,
-    "cascade_infer": SQL_CASCADE_INFER,
     # the native Column plan answers the same contract as the Arrow path
     "cascade_infer_native": SQL_CASCADE_INFER,
-    "result_assembly": SQL_RESULT_ASSEMBLY,
     "result_assembly_native": SQL_RESULT_ASSEMBLY,
     "grid_encode": SQL_GRID_ENCODE,
     "grid_encode_ea": SQL_GRID_ENCODE_EA,
@@ -1513,9 +1399,7 @@ ORACLES = {
     "tile_rollup": SQL_TILE_ROLLUP,
     "tile_neighbors": SQL_TILE_NEIGHBORS,
     "within_pairs": SQL_WITHIN_PAIRS,
-    "relation_semijoin": SQL_RELATION_SEMIJOIN,
     "relation_semijoin_native": SQL_RELATION_SEMIJOIN,
-    "override_column": SQL_OVERRIDE_COLUMN,
     "override_column_native": SQL_OVERRIDE_COLUMN,
     "sessionize_batch": SQL_SESSIONIZE_BATCH,
     **TRAININGDATA_ORACLES,
@@ -2686,7 +2570,7 @@ ORACLES.update({"tile_hotspots": SQL_TILE_HOTSPOTS})
 #   CORRECTNESS row, raw registration order) ascending
 #
 # so never-checked queries lead, then the least-recently-verified.
-# With W=50 and ~109 queries a full rotation takes 3 rounds, which is
+# With W=50 and ~105 queries a full rotation takes 3 rounds, which is
 # the optimum the window capacity allows: no query outside the window
 # is ever staler than one inside, and anything >=3 rounds stale is
 # mechanically guaranteed a slot. _LAST_DRIVER_ROW is the pinned
@@ -2989,9 +2873,6 @@ def q_cascade_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The implied final corpus is exactly the fixture, so the result must
     ride the full-cascade oracle VERBATIM: any carry-over/drop/union
     defect surfaces as a hash mismatch against SQL_CASCADE_INFER."""
-    from osm_legal_default_speeds_spark.plans.native_cascade import (
-        infer_speed_limits_native,
-    )
     from osm_legal_default_speeds_spark.plans.rules_diff import (
         apply_road_changeset,
     )

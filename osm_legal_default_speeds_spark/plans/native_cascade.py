@@ -41,16 +41,21 @@ columns (~2x191 small codegen'd map probes for the full dataset); the
 ``dedup_inputs`` plan composes with this path too, bounding even that
 by distinct-combination cardinality.
 
-Known bounded deviation: speed-cap recursion (R3) is unrolled to
-``max_cap_depth`` key-nesting levels (default 4; the shipped dataset's
-deepest key, ``maxspeed:hgv:conditional``, is level 2). Inputs with
-deeper ``maxspeed:*`` chains should use the Arrow-UDF path
-(``operators.inference.infer_speed_limits``), which recurses without
-bound.
+Speed-cap recursion (R3) is unrolled to the rule set's own deepest
+``maxspeed:*`` nesting (``_rule_cap_depth``; the shipped dataset's
+deepest key, ``maxspeed:hgv:conditional``, is level 2). That bound is
+exact, not an approximation: results hold only rule-origin keys, so no
+deeper cap level can change an output.
+
+The relevant-key pruning projection (F16,
+``LegalDefaultSpeeds.kt:241-247``) lives here too as a native
+``map_filter`` expression (``prune_relevant_tags``): Catalyst prunes
+top-level columns but cannot prune inside a MapType.
 """
 
 from __future__ import annotations
 
+import warnings
 import weakref as _weakref
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -75,6 +80,44 @@ from osm_legal_default_speeds_spark.plans.rules_compiler import (
 )
 
 _EMPTY_TAGS = "map<string,string>"
+_RELATIONS_TYPE = "array<map<string,string>>"
+_OVERRIDES_TYPE = "map<string,boolean>"
+
+
+# --------------------------------------------------------------------------
+# relevant-key pruning (F16)
+# --------------------------------------------------------------------------
+
+def is_relevant_tag_key_col(ruleset: CompiledRuleSet, key_col: Column | str) -> Column:
+    """Native boolean Column equivalent of isRelevantTagKey
+    (LegalDefaultSpeeds.kt:246-247)."""
+    k = F.col(key_col) if isinstance(key_col, str) else key_col
+    strings = sorted(ruleset.relevant_key_strings)
+    cond = k.isin(*strings) if strings else F.lit(False)
+    regex = ruleset.combined_key_regex()
+    if regex is not None:
+        cond = cond | k.rlike(regex)
+    return cond
+
+
+def prune_relevant_tags(ruleset: CompiledRuleSet, tags_col: Column | str) -> Column:
+    """Native map-internal column pruning: keep only tag keys any rule
+    filter can reference. Runs JVM-side (whole-stage codegen), shrinking
+    the payload before shuffles.
+
+    Warns when ``maxspeed`` itself is not a relevant key: pruning would
+    then drop the input maxspeed, silently disabling the FromMaxSpeed
+    cascade stage (C3) and R1 input-echo subtraction. Real rule sets
+    always filter on maxspeed, so this never fires in production."""
+    if not ruleset.is_relevant_tag_key("maxspeed"):
+        warnings.warn(
+            "prune_relevant_tags: 'maxspeed' is not a relevant key in "
+            "this rule set, so pruning drops the input maxspeed and "
+            "disables the FromMaxSpeed stage / R1 input-echo semantics",
+            stacklevel=2,
+        )
+    tags = F.col(tags_col) if isinstance(tags_col, str) else tags_col
+    return F.map_filter(tags, lambda k, v: is_relevant_tag_key_col(ruleset, k))
 
 
 # --------------------------------------------------------------------------
@@ -583,49 +626,44 @@ def infer_speed_limits_native(
     relations_col: str | None = None,
     overrides_col: str | None = None,
     result_col: str = "speed_limit",
-    prune_keys: bool = False,
-    max_cap_depth: int | None = None,
     dedup_inputs: bool = False,
 ) -> DataFrame:
-    """Drop-in equivalent of ``operators.inference.infer_speed_limits``
-    on the all-native plan described in the module docstring. Appends
-    ``result_col`` struct (road_type_name, tags, certitude), null when
-    no rule matched. ``max_cap_depth=None`` derives the exact bound
-    from the rule set (``_rule_cap_depth``). ``dedup_inputs`` composes
-    the distinct -> infer -> broadcast-join-back plan with this kernel:
-    for highly repetitive inputs even the native per-row cost collapses
-    to distinct-combination cardinality."""
-    from osm_legal_default_speeds_spark.operators.inference import (
-        _infer_dedup,
-        prune_relevant_tags,
-    )
+    """The reference's ``getSpeedLimits`` as a whole-DataFrame
+    transformation on the all-native plan described in the module
+    docstring. Appends a ``result_col`` struct (road_type_name, tags,
+    certitude) — null when no rule matched (mirrors the reference
+    returning null, LegalDefaultSpeeds.kt:159,183); a pre-existing
+    ``result_col`` is replaced in place.
 
+    ``relations_col``: optional array<map<string,string>> column with the
+    tags of relations the road belongs to (C6).
+    ``overrides_col``: optional map<string,boolean> column forcing named
+    road-type predicates per row (the columnar replacerFn, C7) — e.g. an
+    ``is_urban`` signal from a spatial layer.
+    ``dedup_inputs``: evaluate the (pure) cascade once per distinct
+    (country, canonical tags [, relations, overrides]) combination and
+    broadcast-join the results back (``_infer_dedup``): for highly
+    repetitive inputs the per-row cost collapses to distinct-combination
+    cardinality."""
     if dedup_inputs:
-        # max_cap_depth must ride into the per-distinct kernel
-        # explicitly (_infer_dedup's kw carries only the column names):
-        # dropping it would make the same arguments cap differently
-        # depending on the dedup flag
         return _infer_dedup(
             df, ruleset, country_col, tags_col, relations_col,
-            overrides_col, result_col, prune_keys,
-            infer_fn=lambda d, rs, **kw: infer_speed_limits_native(
-                d, rs, max_cap_depth=max_cap_depth,
-                **{k: v for k, v in kw.items() if k != "dedup_inputs"},
-            ),
+            overrides_col, result_col,
         )
 
     spark = df.sparkSession
-    cap = max_cap_depth if max_cap_depth is not None else _rule_cap_depth(ruleset)
-    bundle = _get_bundle(ruleset, country_col, relations_col, overrides_col, cap)
+    bundle = _get_bundle(
+        ruleset, country_col, relations_col, overrides_col,
+        _rule_cap_depth(ruleset),
+    )
 
-    tags_expr: Column = F.col(tags_col)
-    if prune_keys:
-        tags_expr = prune_relevant_tags(ruleset, tags_expr)
     in_tags = "__nc_tags"
     orig_cols = list(df.columns)
     out = df.withColumns(
         {
-            in_tags: F.coalesce(tags_expr, F.create_map().cast(_EMPTY_TAGS)),
+            in_tags: F.coalesce(
+                F.col(tags_col), F.create_map().cast(_EMPTY_TAGS)
+            ),
             "__nc_eff": bundle["eff"],
         }
     )
@@ -699,9 +737,89 @@ def infer_speed_limits_native(
     # withColumn above REPLACED a pre-existing result_col in place, so
     # only append the name when it is new — appending unconditionally
     # would select the same name twice (AMBIGUOUS_REFERENCE downstream)
-    # where the Arrow-UDF operator replaces in place
     keep = orig_cols + ([] if result_col in orig_cols else [result_col])
     return out.select(*keep)
+
+
+def _canonical_map_key(col: Column) -> Column:
+    """Deterministic digest of a map column: sorted entry array ->
+    JSON -> md5. Equal dicts (any storage order) get equal keys."""
+    entries = F.array_sort(
+        F.map_entries(F.coalesce(col, F.create_map().cast(_EMPTY_TAGS)))
+    )
+    return F.md5(F.to_json(entries))
+
+
+def _infer_dedup(
+    df: DataFrame,
+    ruleset: CompiledRuleSet,
+    country_col: str,
+    tags_col: str,
+    relations_col: str | None,
+    overrides_col: str | None,
+    result_col: str,
+) -> DataFrame:
+    """distinct -> infer -> broadcast join-back plan (see
+    ``infer_speed_limits_native``'s ``dedup_inputs``).
+
+    The (distinct-combination -> result) side is broadcast: distinct
+    tag-combination cardinality is orders of magnitude below row count,
+    and the join-back side has no size statistics, so without the hint
+    Spark sorts the full fact side for a sort-merge join, which spills
+    and anti-scales.
+
+    Rejected alternative (measured): shuffle-hash join-back hoping
+    ReuseExchange would dedup the canonicalization between the
+    distinct branch and the fact side. It cannot fire —
+    ``dropDuplicates`` puts a map-side partial aggregate BELOW its
+    exchange, so the two exchanges' children differ — and the forced
+    shuffle of the fact side measured ~20% slower than the broadcast
+    join-back at sf0.1. The canonicalization is therefore computed on
+    both branches by design; it is pure map-side codegen and cheaper
+    than shuffling the corpus."""
+    key_col = "__infer_key"
+    key = _canonical_map_key(F.col(tags_col))
+    if relations_col is not None:
+        rel_canon = F.transform(
+            F.coalesce(
+                F.col(relations_col), F.array().cast(_RELATIONS_TYPE)
+            ),
+            lambda m: F.array_sort(F.map_entries(m)),
+        )
+        key = F.md5(F.concat(key, F.to_json(rel_canon)))
+    if overrides_col is not None:
+        ovr_canon = F.array_sort(
+            F.map_entries(
+                F.coalesce(F.col(overrides_col), F.create_map().cast(_OVERRIDES_TYPE))
+            )
+        )
+        key = F.md5(F.concat(key, F.to_json(ovr_canon)))
+    keyed = df.withColumn(key_col, key)
+
+    sel = [country_col, key_col, tags_col]
+    if relations_col is not None:
+        sel.append(relations_col)
+    if overrides_col is not None:
+        sel.append(overrides_col)
+    distinct = keyed.select(*sel).dropDuplicates([country_col, key_col])
+    inferred = infer_speed_limits_native(
+        distinct,
+        ruleset,
+        country_col=country_col,
+        tags_col=tags_col,
+        relations_col=relations_col,
+        overrides_col=overrides_col,
+        result_col=result_col,
+    ).select(country_col, key_col, result_col)
+
+    # replace a pre-existing result_col in place (same contract as the
+    # per-row plan's explicit keep-list) — joining it back alongside the
+    # original would select the same name twice (AMBIGUOUS_REFERENCE
+    # downstream)
+    if result_col in keyed.columns:
+        keyed = keyed.drop(result_col)
+    out = keyed.join(F.broadcast(inferred), [country_col, key_col], "left")
+    return out.drop(key_col)
 
 
 class _DimToken:

@@ -4,11 +4,9 @@ Row-level implementation of the reference query lifecycle
 (``LegalDefaultSpeeds.kt:151-304``), driven by a ``CompiledRuleSet``.
 It serves two roles:
 
-- the per-row kernel inside the Arrow-batched Spark UDF
-  (``operators.inference``) — every batch loops over this in plain
-  Python, which is the deliberate bit-for-bit-fidelity path called out
-  in SURVEY.md §7.0,
-- the differential-test oracle for the Spark operators.
+- the differential-test oracle for the Spark operators,
+- the driver-side pre-capping of each rule's result tags that
+  ``plans.native_cascade`` ships in its broadcast country dim.
 
 The match cascade (``LegalDefaultSpeeds.kt:161-183``):
   1. Exact       — first rule whose filter matches (priority order C1)

@@ -44,6 +44,10 @@ import json
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from osm_legal_default_speeds_spark.plans.native_cascade import (
+    infer_speed_limits_native,
+)
+
 
 def _canon(obj):
     """Canonical JSON-able form: dataclasses to sorted dicts, dict
@@ -105,7 +109,6 @@ def reinfer_changed(
     known_countries: list[str],
     id_col: str = "road_id",
     country_col: str = "country_code",
-    engine: str = "native",
     project=None,
     **infer_kwargs,
 ) -> DataFrame:
@@ -144,15 +147,9 @@ def reinfer_changed(
     keep_ids = roads.where(~is_changed | F.col(country_col).isNull()).select(
         id_col
     )
-    if engine == "native":
-        from osm_legal_default_speeds_spark.plans.native_cascade import (
-            infer_speed_limits_native as _infer,
-        )
-    else:
-        from osm_legal_default_speeds_spark.operators.inference import (
-            infer_speed_limits as _infer,
-        )
-    redo = _infer(redo_in, new_ruleset, country_col=country_col, **infer_kwargs)
+    redo = infer_speed_limits_native(
+        redo_in, new_ruleset, country_col=country_col, **infer_kwargs
+    )
     if project is not None:
         redo = project(redo)
     keep = old_results.join(keep_ids, id_col, "left_semi")
@@ -164,7 +161,6 @@ def infer_upserts(
     ruleset,
     id_col: str = "road_id",
     country_col: str = "country_code",
-    engine: str = "native",
     project=None,
     seq_col: str | None = None,
     assume_unique: bool = False,
@@ -217,15 +213,9 @@ def infer_upserts(
         )
     if seq_col is not None and seq_col in deduped.columns:
         deduped = deduped.drop(seq_col)
-    if engine == "native":
-        from osm_legal_default_speeds_spark.plans.native_cascade import (
-            infer_speed_limits_native as _infer,
-        )
-    else:
-        from osm_legal_default_speeds_spark.operators.inference import (
-            infer_speed_limits as _infer,
-        )
-    fresh = _infer(deduped, ruleset, country_col=country_col, **infer_kwargs)
+    fresh = infer_speed_limits_native(
+        deduped, ruleset, country_col=country_col, **infer_kwargs
+    )
     if project is not None:
         fresh = project(fresh)
     return fresh
@@ -238,7 +228,6 @@ def apply_road_changeset(
     ruleset,
     id_col: str = "road_id",
     country_col: str = "country_code",
-    engine: str = "native",
     project=None,
     broadcast_ids: bool = True,
     seq_col: str | None = None,
@@ -279,6 +268,6 @@ def apply_road_changeset(
     keep = old_results.join(touched, id_col, "left_anti")
     fresh = infer_upserts(
         upserted_roads, ruleset, id_col=id_col, country_col=country_col,
-        engine=engine, project=project, seq_col=seq_col, **infer_kwargs,
+        project=project, seq_col=seq_col, **infer_kwargs,
     )
     return keep.unionByName(fresh.select(*old_results.columns))

@@ -16,10 +16,10 @@ module provides the three canonical shapes:
    the Spark-native shape for operators Spark's built-ins can't
    express.
 3. ``streaming_speed_inference`` — the rule-inference cascade applied
-   to a stream of road rows: broadcast-compiled rules are closed over
-   by the same Arrow UDF the batch path uses; per micro-batch the plan
-   is identical to the batch plan (stateless map), demonstrating that
-   the core engine is execution-mode agnostic.
+   to a stream of road rows: the same native cascade the batch path
+   uses; per micro-batch the plan is identical to the batch plan
+   (stateless map), demonstrating that the core engine is
+   execution-mode agnostic.
 
 Scale notes: the rollup's shuffle is keyed by (window, event_type) —
 time-bucketed keys are naturally balanced; state store size is bounded
@@ -389,29 +389,18 @@ def streaming_speed_inference(
     ruleset,
     checkpoint_dir: str,
     sink_table: str = "stream_inference",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Apply the batch inference transformation to a stream of road
     rows (stateless per-row map — no watermark/state needed) and drain
-    with AvailableNow into a memory sink.
+    with AvailableNow into a memory sink. The all-Catalyst cascade's
+    broadcast country dim becomes a stream-static broadcast join, which
+    Structured Streaming supports natively; the whole per-batch plan
+    stays Python-free."""
+    from osm_legal_default_speeds_spark.plans.native_cascade import (
+        infer_speed_limits_native,
+    )
 
-    ``engine``: 'arrow' (broadcast rules + Arrow UDF) or 'native' (the
-    all-Catalyst cascade, plans.native_cascade — its broadcast country
-    dim becomes a stream-static broadcast join, which Structured
-    Streaming supports natively; the whole per-batch plan stays
-    Python-free)."""
-    if engine == "native":
-        from osm_legal_default_speeds_spark.plans.native_cascade import (
-            infer_speed_limits_native,
-        )
-
-        out = infer_speed_limits_native(roads_stream, ruleset)
-    else:
-        from osm_legal_default_speeds_spark.operators.inference import (
-            infer_speed_limits,
-        )
-
-        out = infer_speed_limits(roads_stream, ruleset)
+    out = infer_speed_limits_native(roads_stream, ruleset)
     projected = out.select(
         "road_id",
         F.col("speed_limit.road_type_name").alias("road_type_name"),

@@ -118,7 +118,6 @@ def commit_road_batch(
     batch_id: int,
     ruleset,
     project=None,
-    engine: str = "native",
     country_col: str = "country_code",
     compact_every: int | None = 16,
     seq_col: str = "seq",
@@ -134,10 +133,10 @@ def commit_road_batch(
     stored table is never read at commit time (contrast the tile
     commit, which must decode dirty blobs). The fresh side is
     ``rules_diff.infer_upserts``, shared with the batch twin: same
-    engine selection, same deterministic resolution of duplicate
-    same-id upserts within one micro-batch (multiple diff files
-    coalesced by maxFilesPerTrigger, or one diff editing an object
-    twice) — without it the store would serve duplicate key rows.
+    deterministic resolution of duplicate same-id upserts within one
+    micro-batch (multiple diff files coalesced by maxFilesPerTrigger,
+    or one diff editing an object twice) — without it the store would
+    serve duplicate key rows.
 
     Op ordering: when the batch schema carries ``seq_col``
     (ROAD_CHANGESET_SCHEMA_SEQ), each id's ops resolve LAST-WINS on it
@@ -183,7 +182,7 @@ def commit_road_batch(
         already_unique = False
     fresh = infer_upserts(
         upserted, ruleset, id_col=_KEY, country_col=country_col,
-        engine=engine, project=project, seq_col=seq_col,
+        project=project, seq_col=seq_col,
         assume_unique=already_unique, **infer_kwargs,
     )
     touched = batch.select(_KEY).distinct()
@@ -200,7 +199,6 @@ def streaming_inference_maintenance(
     store_dir: str,
     ruleset,
     project=None,
-    engine: str = "native",
     available_now: bool = True,
     max_files_per_trigger: int = 1,
     compact_every: int | None = 16,
@@ -226,7 +224,7 @@ def streaming_inference_maintenance(
         guard_stream_binding(store_dir, checkpoint_dir)
         commit_road_batch(
             spark, store_dir, batch, batch_id, ruleset,
-            project=project, engine=engine, compact_every=compact_every,
+            project=project, compact_every=compact_every,
             **infer_kwargs,
         )
 

@@ -148,10 +148,8 @@ def test_driver_window_composition():
         "events_rollup", "image_meta", "knn_indexed",
         # the core cascade set (reference semantics pins)
         "tagfilter_atoms", "units_normalize",
-        "cascade_infer", "cascade_infer_native",
-        "result_assembly", "result_assembly_native",
-        "relation_semijoin", "relation_semijoin_native",
-        "override_column", "override_column_native",
+        "cascade_infer_native", "result_assembly_native",
+        "relation_semijoin_native", "override_column_native",
     }
     missing = sorted(must_be_inside - set(window))
     assert not missing, f"rotated out of the driver window: {missing}"

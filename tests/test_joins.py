@@ -11,6 +11,7 @@ from osm_legal_default_speeds_spark.operators.joins import (
     windowed_range_join,
 )
 from osm_legal_default_speeds_spark.operators.sketches import (
+    bucket_hash,
     cms_lookup,
     cms_sketch,
 )
@@ -159,6 +160,9 @@ def test_sketch_params_fail_at_plan_time(spark):
         cms_sketch(df, "v", depth=4, width=0)
     with pytest.raises(ValueError, match="depth >= 1 and width >= 1"):
         cms_lookup(df, df, "v", depth=0, width=16)
+    # the public bucket function guards itself, not only its wrappers
+    with pytest.raises(ValueError, match="width >= 1"):
+        bucket_hash(F.col("v"), 0, 0)
     with pytest.raises(ValueError, match="k >= 2"):
         kmv_distinct(df, "v", k=1)
     with pytest.raises(ValueError, match=r"in \(0, 1\]"):
@@ -332,6 +336,20 @@ def test_asof_null_key_never_matches(spark):
     )
     assert got[1] == (None, None)  # NULL-key left: LEFT nulls
     assert got[2] == (30, "real")  # non-null keys unaffected
+
+
+def test_range_join_null_key_never_matches(spark):
+    # the key equality (l.k = r.k) is null-rejecting: a NULL-key left
+    # row gets no window rows (INNER -> absent) even when NULL-key right
+    # rows sit inside its window, and NULL-key right rows never leak
+    # into a non-null key's aggregate
+    got = _range_counts(
+        spark,
+        [(1, None, 1000), (2, 7, 1000)],
+        [(None, 950), (None, 990), (7, 950)],
+        100,
+    )
+    assert got == {2: 1}
 
 
 def test_asof_rejects_internal_column_collision(spark):

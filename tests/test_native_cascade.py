@@ -1,7 +1,7 @@
 """The all-native Column cascade (plans.native_cascade) must agree
-with the pure-Python reference engine — same differential corpus as the
-Arrow-UDF operator — and its physical plan must be map-only: no Python
-evaluation nodes and no shuffle exchange."""
+with the pure-Python reference engine on the ZA differential corpus,
+and its physical plan must be map-only: no Python evaluation nodes and
+no shuffle exchange."""
 
 import os
 
@@ -285,12 +285,13 @@ def test_dim_cache_is_per_session_and_unpinned(spark):
 
 
 def test_max_cap_depth_survives_dedup_inputs(spark, monkeypatch):
-    """A caller-supplied max_cap_depth must reach the kernel unchanged
-    when dedup_inputs wraps it in the distinct->infer->join-back plan
-    (the dedup lambda forwards it explicitly; _infer_dedup's kw only
-    carries column names), so the same arguments cap identically with
-    and without the dedup flag."""
+    """The cap-unroll depth derived from the rule set
+    (``_rule_cap_depth``) must reach the compiled bundle unchanged when
+    dedup_inputs wraps the kernel in the distinct->infer->join-back
+    plan, so the same arguments cap identically with and without the
+    dedup flag."""
     import osm_legal_default_speeds_spark.plans.native_cascade as nc
+    from osm_legal_default_speeds_spark.plans.rules_model import RoadTypeDef
 
     seen = []
     real = nc._get_bundle
@@ -300,7 +301,18 @@ def test_max_cap_depth_survives_dedup_inputs(spark, monkeypatch):
         return real(ruleset, country_col, relations_col, overrides_col, cap)
 
     monkeypatch.setattr(nc, "_get_bundle", spy)
-    ruleset = compile_ruleset(*za_defs())
+    road_types, rules = za_defs()
+    # one nested conditional subtag: the rule set's cap depth is 2
+    rules["ZA"] = [
+        RoadTypeDef(
+            r.name, {**r.tags, "maxspeed:hgv:conditional": "80 @ (wet)"}
+        )
+        if r.name == "motorway"
+        else r
+        for r in rules["ZA"]
+    ]
+    ruleset = compile_ruleset(road_types, rules)
+    assert nc._rule_cap_depth(ruleset) == 2
     df = spark.createDataFrame(
         [
             Row(
@@ -318,17 +330,21 @@ def test_max_cap_depth_survives_dedup_inputs(spark, monkeypatch):
         ruleset,
         relations_col="relations_tags",
         overrides_col="overrides",
-        max_cap_depth=3,
         dedup_inputs=True,
     )
-    assert seen == [3], f"kernel saw cap depths {seen}, wanted [3]"
-    assert out.collect()[0]["speed_limit"] is not None
+    assert seen == [2], f"kernel saw cap depths {seen}, wanted [2]"
+    got = out.collect()[0]["speed_limit"]
+    exp = LegalDefaultSpeedsEngine(ruleset=ruleset).get_speed_limits(
+        "ZA", {"highway": "motorway"}
+    )
+    assert (got.road_type_name, got.tags, got.certitude) == (
+        exp.road_type_name, exp.tags, exp.certitude
+    )
 
 
 def test_native_replaces_existing_result_col(spark):
-    """Drop-in parity with the Arrow-UDF operator when result_col
-    already exists on the input: withColumn semantics (replace in
-    place), never a duplicated column name."""
+    """When result_col already exists on the input: withColumn
+    semantics (replace in place), never a duplicated column name."""
     ruleset = compile_ruleset(*za_defs())
     df = spark.createDataFrame(
         [

@@ -1,6 +1,8 @@
-"""Spark operator tests: the broadcast-cascade UDF must agree with the
-pure-Python reference engine row-for-row (differential oracle), and the
-native Column compiler must agree with the AST evaluator."""
+"""Spark operator tests: the inference operator's dedup plan and
+null-relation handling must agree with the pure-Python reference engine
+row-for-row (differential oracle), and the native Column compiler must
+agree with the AST evaluator. The operator's main differentials live in
+test_native_cascade.py."""
 
 import os
 
@@ -28,8 +30,8 @@ from osm_legal_default_speeds_spark.functions.sql_exprs import (
 )
 from osm_legal_default_speeds_spark.functions.tagfilter_parser import parse_tag_filter
 from osm_legal_default_speeds_spark.functions.units import parse_number_with_unit
-from osm_legal_default_speeds_spark.operators.inference import (
-    infer_speed_limits,
+from osm_legal_default_speeds_spark.plans.native_cascade import (
+    infer_speed_limits_native,
     is_relevant_tag_key_col,
     prune_relevant_tags,
 )
@@ -119,92 +121,6 @@ def _expected(engine, cases):
         r = engine.get_speed_limits(cc, tags, rels, overrides=ovr)
         out.append(None if r is None else (r.road_type_name, r.tags, r.certitude))
     return out
-
-
-def test_infer_speed_limits_za_differential(spark):
-    road_types, rules = za_defs()
-    ruleset = compile_ruleset(road_types, rules)
-    engine = LegalDefaultSpeedsEngine(ruleset=ruleset)
-
-    rows = [
-        Row(
-            road_id=f"r{i}",
-            country_code=cc,
-            tags=tags,
-            relations_tags=rels,
-            overrides=ovr,
-        )
-        for i, (cc, tags, rels, ovr) in enumerate(ZA_CASES)
-    ]
-    df = spark.createDataFrame(rows, INPUT_SCHEMA).repartition(4)
-    out = infer_speed_limits(
-        df,
-        ruleset,
-        relations_col="relations_tags",
-        overrides_col="overrides",
-    )
-    got = {r["road_id"]: r["speed_limit"] for r in out.collect()}
-    expected = _expected(engine, ZA_CASES)
-    for i, exp in enumerate(expected):
-        g = got[f"r{i}"]
-        if exp is None:
-            assert g is None, f"case {i}: expected None, got {g}"
-        else:
-            assert g is not None, f"case {i}: expected {exp}, got None"
-            assert (g.road_type_name, g.tags, g.certitude) == exp, f"case {i}"
-
-
-@pytest.mark.skipif(
-    not os.path.exists(REFERENCE_DATASET_PATH), reason="reference dataset missing"
-)
-def test_infer_speed_limits_full_dataset_differential(spark):
-    """Synthetic grid of inputs x sample of countries on the real
-    1206-rule dataset: Spark operator output == pure engine output."""
-    _, road_types, speed_limits, _ = load_rules_json(REFERENCE_DATASET_PATH)
-    ruleset = compile_ruleset(road_types, speed_limits)
-    engine = LegalDefaultSpeedsEngine(ruleset=ruleset)
-
-    countries = ["DE", "US-ND", "DK", "FR", "GB", "IT", "US", "AU-NSW", "BE-VLG", "ZZ"]
-    tag_grid = [
-        {},
-        {"highway": "motorway"},
-        {"highway": "residential", "lit": "yes"},
-        {"highway": "trunk", "dual_carriageway": "yes", "lanes": "4"},
-        {"maxspeed": "50"},
-        {"maxspeed": "30 mph"},
-        {"maxspeed": "RO:urban"},
-        {"highway": "living_street"},
-        {"highway": "service", "service": "driveway"},
-        {"lanes": "2", "oneway": "yes"},
-    ]
-    rel_grid = [
-        [],
-        [{"type": "route", "route": "road", "network": "US:I"}],
-        [{"type": "route", "route": "road", "network": "US:US"}],
-    ]
-    cases = [
-        (cc, tags, rels, None)
-        for cc in countries
-        for tags in tag_grid
-        for rels in rel_grid
-    ]
-    rows = [
-        Row(road_id=f"r{i}", country_code=cc, tags=t, relations_tags=rel, overrides=o)
-        for i, (cc, t, rel, o) in enumerate(cases)
-    ]
-    df = spark.createDataFrame(rows, INPUT_SCHEMA).repartition(8)
-    out = infer_speed_limits(
-        df, ruleset, relations_col="relations_tags", overrides_col="overrides"
-    )
-    got = {r["road_id"]: r["speed_limit"] for r in out.collect()}
-    expected = _expected(engine, cases)
-    mismatches = []
-    for i, exp in enumerate(expected):
-        g = got[f"r{i}"]
-        gt = None if g is None else (g.road_type_name, g.tags, g.certitude)
-        if gt != exp:
-            mismatches.append((cases[i], exp, gt))
-    assert not mismatches, mismatches[:5]
 
 
 FILTER_EXPRS = [
@@ -427,9 +343,11 @@ def test_prune_and_relevant_key_col(spark):
 def test_infer_dedup_inputs_identical_results(spark):
     """The distinct -> infer -> join-back plan must produce exactly the
     per-row results of the direct plan (cascade purity), including null
-    results, relations, and overrides."""
+    results, relations, and overrides — and both must equal the
+    pure-Python reference engine."""
     road_types, rules = za_defs()
     ruleset = compile_ruleset(road_types, rules)
+    engine = LegalDefaultSpeedsEngine(ruleset=ruleset)
     rows = [
         Row(
             road_id=f"r{i}",
@@ -446,8 +364,8 @@ def test_infer_dedup_inputs_identical_results(spark):
     df = spark.createDataFrame(rows, INPUT_SCHEMA).repartition(4)
 
     kw = dict(relations_col="relations_tags", overrides_col="overrides")
-    direct = infer_speed_limits(df, ruleset, **kw)
-    dedup = infer_speed_limits(df, ruleset, dedup_inputs=True, **kw)
+    direct = infer_speed_limits_native(df, ruleset, **kw)
+    dedup = infer_speed_limits_native(df, ruleset, dedup_inputs=True, **kw)
 
     def norm(out):
         return sorted(
@@ -465,6 +383,14 @@ def test_infer_dedup_inputs_identical_results(spark):
         )
 
     assert norm(direct) == norm(dedup)
+
+    # every copy of case i carries road_id r{i}
+    expected = _expected(engine, ZA_CASES)
+    for road_id, got in norm(dedup):
+        exp = expected[int(road_id[1:])]
+        if exp is not None:
+            exp = (exp[0], tuple(sorted(exp[1].items())), exp[2])
+        assert got == exp, road_id
 
 
 def test_infer_dedup_inputs_full_dataset(spark):
@@ -499,8 +425,8 @@ def test_infer_dedup_inputs_full_dataset(spark):
             for r in out.collect()
         )
 
-    direct = infer_speed_limits(roads, ruleset)
-    dedup = infer_speed_limits(roads, ruleset, dedup_inputs=True)
+    direct = infer_speed_limits_native(roads, ruleset)
+    dedup = infer_speed_limits_native(roads, ruleset, dedup_inputs=True)
     assert norm(direct) == norm(dedup)
 
 
@@ -654,49 +580,12 @@ def test_equal_area_grid_matches_python_and_equalizes_bands(spark):
         assert y == min(max(int(s), 0), ny - 1)
 
 
-def test_ruleset_broadcast_reused_across_calls(spark):
-    """Repeated operator applications over the SAME live compiled
-    ruleset (streaming micro-batches, per-tile loops) must reuse one
-    Broadcast and one worker-cache token — re-broadcasting per call
-    leaks broadcast storage and re-keys the worker-global engine/memo
-    caches, turning every cross-call memo lookup into a miss."""
-    from osm_legal_default_speeds_spark.operators.inference import (
-        _ruleset_broadcast,
-    )
-
-    ruleset = compile_ruleset(*za_defs())
-    bc1, id1 = _ruleset_broadcast(spark, ruleset)
-    bc2, id2 = _ruleset_broadcast(spark, ruleset)
-    assert bc1 is bc2 and id1 == id2
-
-    # a DIFFERENT compiled ruleset (even of identical definitions) is a
-    # different cache entry: engines/memos must never collide
-    other = compile_ruleset(*za_defs())
-    bc3, id3 = _ruleset_broadcast(spark, other)
-    assert bc3 is not bc1 and id3 != id1
-
-    # and the two plans built from one ruleset share the broadcast in
-    # the operator itself (the end-to-end path, not just the helper)
-    df = spark.createDataFrame(
-        [("ZA", {"highway": "motorway"})],
-        "country_code string, tags map<string,string>",
-    )
-    a = infer_speed_limits(df, ruleset).collect()
-    b = infer_speed_limits(df, ruleset).collect()
-    assert a == b
-
-
 def test_null_relation_element_parity(spark):
     """A null ELEMENT inside the relations array (legal in
-    array<map<string,string>>) must be treated as non-matching by every
-    engine, not crash the Arrow kernel. The native cascade's exists()
-    evaluates the null element to null -> coalesced false; the Arrow
-    kernel filters the Nones before building the memo key; the pure
-    engine sees the filtered list."""
-    from osm_legal_default_speeds_spark.plans.native_cascade import (
-        infer_speed_limits_native,
-    )
-
+    array<map<string,string>>) must be treated as non-matching, on both
+    the per-row and the dedup plan. The cascade's exists() evaluates
+    the null element to null -> coalesced false; the pure engine sees
+    the filtered list."""
     road_types, rules = za_defs()
     ruleset = compile_ruleset(road_types, rules)
     engine = LegalDefaultSpeedsEngine(ruleset=ruleset)
@@ -716,16 +605,17 @@ def test_null_relation_element_parity(spark):
     df = spark.createDataFrame(rows, INPUT_SCHEMA)
     kw = dict(relations_col="relations_tags", overrides_col="overrides")
 
-    arrow = {r["road_id"]: r["speed_limit"]
-             for r in infer_speed_limits(df, ruleset, **kw).collect()}
-    native = {r["road_id"]: r["speed_limit"]
+    direct = {r["road_id"]: r["speed_limit"]
               for r in infer_speed_limits_native(df, ruleset, **kw).collect()}
+    dedup = {r["road_id"]: r["speed_limit"]
+             for r in infer_speed_limits_native(
+                 df, ruleset, dedup_inputs=True, **kw).collect()}
 
     for i, (cc, t, rels, o) in enumerate(cases):
         exp = engine.get_speed_limits(
             cc, t, [m for m in rels if m is not None], overrides=o
         )
-        for got, label in ((arrow[f"r{i}"], "arrow"), (native[f"r{i}"], "native")):
+        for got, label in ((direct[f"r{i}"], "direct"), (dedup[f"r{i}"], "dedup")):
             if exp is None:
                 assert got is None, f"case {i} {label}"
             else:
@@ -737,19 +627,23 @@ def test_null_relation_element_parity(spark):
 
 def test_infer_dedup_replaces_existing_result_col(spark):
     """dedup_inputs=True must replace a pre-existing result_col in
-    place (same contract as the non-dedup withColumn path and the
-    native cascade's keep-list) instead of joining back a second
-    identically-named column (AMBIGUOUS_REFERENCE downstream)."""
+    place (same contract as the per-row plan's keep-list) instead of
+    joining back a second identically-named column
+    (AMBIGUOUS_REFERENCE downstream)."""
     ruleset = compile_ruleset(*za_defs())
     df = spark.createDataFrame(
         [("ZA", {"highway": "motorway"}, "stale")],
         "country_code string, tags map<string,string>, speed_limit string",
     )
-    out = infer_speed_limits(
+    out = infer_speed_limits_native(
         df, ruleset, result_col="speed_limit", dedup_inputs=True
     )
     assert out.columns.count("speed_limit") == 1
     # the name must be selectable (this raises on ambiguity) and carry
     # the INFERRED struct, not the stale input value
     row = out.select("speed_limit").collect()[0]
-    assert row["speed_limit"].road_type_name == "motorway"
+    exp = LegalDefaultSpeedsEngine(ruleset=ruleset).get_speed_limits(
+        "ZA", {"highway": "motorway"}
+    )
+    assert row["speed_limit"].road_type_name == exp.road_type_name
+    assert row["speed_limit"].certitude == exp.certitude

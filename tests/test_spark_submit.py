@@ -43,6 +43,23 @@ def test_build_pyfiles_zip(tmp_path):
     assert all(n.endswith(".py") for n in names)
 
 
+def test_default_ruleset_fallback_warns(tmp_path, monkeypatch):
+    """A missing rule dataset must not silently shrink every job to the
+    mini rule set: the loader warns and names the path it looked at."""
+    sys.path.insert(0, REPO)
+    from osm_legal_default_speeds_spark.jobs.pipeline_job import (
+        load_default_ruleset,
+    )
+    from osm_legal_default_speeds_spark.sources import rules_json
+
+    missing = str(tmp_path / "absent.json")
+    monkeypatch.setattr(rules_json, "REFERENCE_DATASET_PATH", missing)
+    with pytest.warns(UserWarning, match="REFERENCE_DATASET_PATH") as rec:
+        ruleset = load_default_ruleset()
+    assert missing in str(rec[0].message)
+    assert sorted(ruleset.speed_limits_by_country) == ["ZA"]
+
+
 def test_spark_submit_pyfiles_end_to_end(tmp_path):
     sys.path.insert(0, REPO)
     from osm_legal_default_speeds_spark.jobs.pipeline_job import build_pyfiles_zip

@@ -113,14 +113,13 @@ def test_sessionize_matches_batch_oracle(spark, tmp_path, events_dir):
     assert len(got) > 0
 
 
-@pytest.mark.parametrize("engine", ["arrow", "native"])
-def test_streaming_inference_matches_batch(spark, tmp_path, engine):
-    from osm_legal_default_speeds_spark.operators.inference import (
-        infer_speed_limits,
-    )
+def test_streaming_inference_matches_batch(spark, tmp_path):
     from osm_legal_default_speeds_spark.plans.driver_queries import (
         _roads_df,
         mini_ruleset,
+    )
+    from osm_legal_default_speeds_spark.plans.native_cascade import (
+        infer_speed_limits_native,
     )
 
     ruleset = mini_ruleset()
@@ -135,9 +134,9 @@ def test_streaming_inference_matches_batch(spark, tmp_path, engine):
     )
     got = streaming_speed_inference(
         spark, stream, ruleset, str(tmp_path / "ickpt"),
-        sink_table=f"t_inf_{engine}", engine=engine,
+        sink_table="t_inf",
     )
-    batch = infer_speed_limits(roads, ruleset).select(
+    batch = infer_speed_limits_native(roads, ruleset).select(
         "road_id",
         F.col("speed_limit.road_type_name").alias("road_type_name"),
         F.col("speed_limit.certitude").alias("certitude"),
