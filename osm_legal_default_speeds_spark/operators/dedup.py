@@ -423,22 +423,29 @@ def connected_components(
     10^6 needs ~20 rounds, where per-round min-label propagation needs
     10^6. Each half-round is one groupBy + one join keyed on node id
     (scale-out shuffles, AQE splits skew); the edge set shrinks
-    monotonically toward a star forest, so later rounds get cheaper.
+    monotonically toward a star forest, so later rounds get cheaper,
+    and the run stops at the first round that reaches one — a
+    near-dup clique after a single round.
 
     ``algorithm="label"``: iterative min-label propagation (each node
     takes the min of its neighborhood per round). O(diameter) rounds —
     fine for dense near-dup clusters, kept as the independent
     differential twin for the star implementation.
 
-    Both: one convergence-check action per round (no data collect),
-    ``localCheckpoint`` per round to truncate lineage. Raises if the
-    loop exits without convergence — silent unconverged labels would
-    be wrong component ids.
+    Both: ``localCheckpoint`` per round to truncate lineage, then one
+    stopping-test action per round (no data collect) — star tests the
+    edges for a star forest, label probes for a changed label. Raises
+    if the loop exits without convergence — silent unconverged labels
+    would be wrong component ids. A self-pair ``(a, a)`` is no
+    duplicate relation and adds no edge: a node paired only with
+    itself gets no row, like any node outside the pair list. Ids of
+    any orderable type (long, string) keep their type in the output.
     """
     if algorithm == "star":
         return _cc_star(pairs, a_col, b_col, max_iterations)
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r}")
+    pairs = pairs.where(F.col(a_col) != F.col(b_col))
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionAll(
@@ -491,13 +498,25 @@ def _cc_star(
 ) -> DataFrame:
     """Alternating large-star/small-star rounds (see
     ``connected_components``). Edges are kept oriented large->small
-    (src > dst) between rounds; at convergence they form a star forest
-    (every node points at its component minimum).
+    (src > dst) between rounds.
 
     large-star(u): every strictly-larger neighbor of u is rewired to
     min(N(u) ∪ {u}). small-star(u): every smaller-or-equal neighbor —
     and u itself — is rewired to that minimum. Both halves are a
-    groupBy(node).min + an equi-join back, nothing else."""
+    groupBy(node).min + an equi-join back, nothing else.
+
+    Stopping rule: after each round the checkpointed edges are tested
+    for being a star forest — no node is both a src and a dst, and no
+    src has more than one out-edge. Both half-rounds preserve
+    connectivity (Kiveris et al.), so in a star forest each star is a
+    whole component, and since src > dst its centre is the component
+    minimum: every edge is already (node, component). A star forest is
+    also a fixed point of both half-rounds (each leaf's only neighbor
+    is its centre, and the centre's neighbors are all larger), so a
+    run that reaches one could only repeat it: the test stops on the
+    same edges a fixed-point probe would, one round and one probe
+    earlier. Near-duplicate clusters are cliques, which the first
+    round already turns into stars."""
     # orient once: (max, min) per pair, drop self-pairs
     edges = (
         pairs.select(
@@ -523,52 +542,62 @@ def _cc_star(
             "src", F.least(F.col("mn"), F.col("src")).alias("mn")
         )
         if large:
-            # rewire only strictly-larger neighbors: (v, m) for v > u
-            out = (
+            # rewire only strictly-larger neighbors: (v, m) for v > u;
+            # m <= u < v, so no self-edge, and the duplicates are left
+            # to small-star's min and closing distinct (one shuffle
+            # fewer per round)
+            return (
                 nb.join(mins, "src")
                 .where(F.col("dst") > F.col("src"))
                 .select(F.col("dst").alias("src"), F.col("mn").alias("dst"))
             )
-        else:
-            # rewire smaller neighbors AND u itself
-            out = nb.join(mins, "src").select(
-                F.col("dst").alias("src"), F.col("mn").alias("dst")
-            ).unionAll(mins.select("src", F.col("mn").alias("dst")))
+        # rewire smaller neighbors AND u itself
+        out = nb.join(mins, "src").select(
+            F.col("dst").alias("src"), F.col("mn").alias("dst")
+        ).unionAll(mins.select("src", F.col("mn").alias("dst")))
         return out.where(F.col("src") != F.col("dst")).distinct()
 
-    prev_cnt = -1
+    def _is_star_forest(edges: DataFrame) -> bool:
+        # one aggregation: per node, its out-degree (as src) and
+        # in-degree (as dst); a centre with a parent or a leaf with two
+        # parents breaks the forest
+        deg = (
+            edges.select(
+                F.inline(F.array(
+                    F.struct(
+                        F.col("src").alias("node"),
+                        F.lit(1).alias("n_out"),
+                        F.lit(0).alias("n_in"),
+                    ),
+                    F.struct(
+                        F.col("dst").alias("node"),
+                        F.lit(0).alias("n_out"),
+                        F.lit(1).alias("n_in"),
+                    ),
+                ))
+            )
+            .groupBy("node")
+            .agg(F.sum("n_out").alias("n_out"), F.sum("n_in").alias("n_in"))
+        )
+        bad = (F.col("n_out") > 1) | (
+            (F.col("n_out") > 0) & (F.col("n_in") > 0)
+        )
+        return deg.where(bad).limit(1).count() == 0
+
     for _ in range(max_iterations):
         edges = _half_round(edges, large=True)
         edges = _half_round(edges, large=False)
         edges = edges.localCheckpoint(eager=True)  # truncate lineage
-        # Convergence: the edge set is a fixed point. Both sets are
-        # distinct, so equal counts + empty (new \ old) ⇒ equal sets;
-        # cheap first check on the count alone skips the exceptAll
-        # join for every still-shrinking round.
-        cnt = edges.count()
-        if cnt == prev_cnt:
-            nxt = _half_round(_half_round(edges, large=True), large=False)
-            # both sets are distinct, so equal COUNTS (nxt vs edges —
-            # not the round-over-round count above, which only gates
-            # this probe) plus empty (nxt \ edges) <=> equal sets; the
-            # count check matters: nxt being a strict SUBSET of edges
-            # also empties the exceptAll but is not a fixed point
-            if (
-                nxt.count() == cnt
-                and nxt.exceptAll(edges).limit(1).count() == 0
-            ):
-                # star forest: every edge is (node, component_min);
-                # roots appear only as dst -> add their self-labels
-                roots = edges.select(F.col("dst").alias("node")).subtract(
-                    edges.select(F.col("src").alias("node"))
-                )
-                return edges.select(
-                    F.col("src").alias("node"),
-                    F.col("dst").alias("component"),
-                ).unionAll(
-                    roots.select("node", F.col("node").alias("component"))
-                )
-        prev_cnt = cnt
+        if _is_star_forest(edges):
+            # every edge is (node, component_min); every dst is a root,
+            # which appears only as dst -> add its self-label
+            roots = edges.select(F.col("dst").alias("node")).distinct()
+            return edges.select(
+                F.col("src").alias("node"),
+                F.col("dst").alias("component"),
+            ).unionAll(
+                roots.select("node", F.col("node").alias("component"))
+            )
     raise RuntimeError(
         f"connected_components(star) did not converge in "
         f"{max_iterations} rounds; raise max_iterations"

@@ -260,9 +260,9 @@ SQL_MINHASH_NEAR_DUP = _sql_minhash()
 
 
 # --------------------------------------------------------------------------
-# dup_components — near-dup pairs -> duplicate groups (connected
-# components via iterative min-label propagation; oracle = recursive
-# transitive closure over the same pair SQL)
+# dup_components — near-dup pairs -> duplicate groups (large-star /
+# small-star connected components; oracle = recursive transitive
+# closure over the same pair SQL)
 # --------------------------------------------------------------------------
 
 def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:

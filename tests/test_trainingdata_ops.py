@@ -259,7 +259,8 @@ def test_brute_force_topk_np_matches_fold_path(spark):
 
 
 def _uf_components(pairs):
-    """Union-find oracle for connected_components."""
+    """Union-find oracle for connected_components. A self-pair is no
+    duplicate relation: it adds neither an edge nor a node."""
     parent = {}
 
     def find(x):
@@ -270,6 +271,8 @@ def _uf_components(pairs):
         return x
 
     for a, b in pairs:
+        if a == b:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
@@ -717,6 +720,100 @@ def test_connected_components_star_randomized_differential(spark):
             for r in connected_components(df).collect()
         }
         assert got == _uf_components(pairs), f"seed {seed}"
+
+
+def _cc(df, algorithm):
+    return {
+        r["node"]: r["component"]
+        for r in connected_components(df, algorithm=algorithm).collect()
+    }
+
+
+def _hub_path_clique_pairs():
+    import random
+
+    hub, leaves = 1_000, range(10_000, 15_000)
+    path = list(range(100, 112))
+    clique = list(range(20, 40))
+    small = [50_000, 50_001, 50_002]
+    pairs = [(hub, v) for v in leaves]
+    pairs += list(zip(path, path[1:]))
+    pairs += [(a, b) for a in clique for b in clique if a < b]
+    pairs += [(a, b) for a in small for b in small if a < b]
+    pairs += [(hub, path[-1]), (path[0], clique[-1])]
+    random.Random(5).shuffle(pairs)
+    return pairs
+
+
+_CC_CASES = {
+    # the image pipeline's id type: the component is the lexicographic
+    # minimum (img-10 < img-9)
+    "string_ids": [
+        ("img-9", "img-10"), ("img-10", "img-11"), ("img-11", "img-100"),
+        ("img-7", "img-70"), ("img-70", "img-700"), ("img-7", "img-700"),
+        ("img-3", "img-2"),
+    ],
+    "self_pairs_only": [(5, 5), (7, 7), (5, 5)],
+    "duplicated_and_reversed": [
+        (1, 2), (2, 1), (1, 2), (3, 2), (2, 3),
+        (9, 8), (8, 9), (8, 9), (8, 8), (4, 4), (4, 6),
+    ],
+    # a 5,000-leaf hub (the skewed groupBy key) joined through a path to
+    # a clique that holds the minimum, plus a separate small clique
+    "planted_hub": _hub_path_clique_pairs(),
+    # round 1 leaves (5,1), (7,1), (5,2), (8,2): no node is both a src
+    # and a dst, yet 5 hangs off two centres, so the out-degree half of
+    # the star-forest test must send it to another round
+    "leaf_with_two_centres": [(1, 7), (7, 5), (5, 8), (8, 2)],
+}
+
+
+@pytest.mark.parametrize("algorithm", ["star", "label"])
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_connected_components_cases(spark, case, algorithm):
+    pairs = _CC_CASES[case]
+    id_type = "string" if isinstance(pairs[0][0], str) else "long"
+    df = spark.createDataFrame(pairs, f"id_a {id_type}, id_b {id_type}")
+    assert _cc(df, algorithm) == _uf_components(pairs)
+
+
+@pytest.mark.parametrize("algorithm", ["star", "label"])
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_connected_components_empty_pairs(spark, algorithm, id_type):
+    df = spark.createDataFrame([], f"id_a {id_type}, id_b {id_type}")
+    out = connected_components(df, algorithm=algorithm)
+    id_dtype = df.schema["id_a"].dataType
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        ("node", id_dtype), ("component", id_dtype),
+    ]
+    assert _cc(df, algorithm) == _uf_components([]) == {}
+
+
+def test_cc_star_clique_stops_after_one_round(spark, monkeypatch):
+    """A near-dup clique is a star forest after the first round, so the
+    run takes exactly one checkpointed round and one stopping-test
+    action: a confirming round would add a checkpoint, a fixed-point
+    probe would add count actions."""
+    nodes = range(100, 130)
+    pairs = [(a, b) for a in nodes for b in nodes if a < b]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    cls = type(df)
+    calls = {"localCheckpoint": 0, "count": 0}
+    for name in calls:
+        orig = getattr(cls, name)
+
+        def spy(self, *a, _name=name, _orig=orig, **kw):
+            calls[_name] += 1
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, spy)
+
+    out = connected_components(df, algorithm="star")
+    assert calls == {"localCheckpoint": 1, "count": 1}
+    monkeypatch.undo()
+    assert {r["node"]: r["component"] for r in out.collect()} == {
+        v: 100 for v in nodes
+    }
 
 
 def test_kmv_distinct_accuracy_and_exactness(spark):
@@ -1393,6 +1490,68 @@ def test_pq_rerank_improves_recall_with_exact_sims(vectors, spark):
         key = (r["query_id"], r["vec_id"])
         if key in ex_sims:
             assert r["sim"] == ex_sims[key]
+
+
+def test_pq_rerank_fetch_is_shortlist_broadcast(vectors, spark):
+    """Plan pin for the coarse-to-fine fetch: the full-precision rows
+    are selected by a broadcast semi-join that builds on the shortlist
+    ids, and the vector side streams into it straight from its scan —
+    no Exchange between the vector table and the join. Size-based
+    broadcasts are off, so the broadcast must be the operator's own
+    (at corpus scale the planner cannot see how small the shortlist
+    is)."""
+    from osm_legal_default_speeds_spark.operators.similarity import (
+        pq_adc_rerank_topk,
+        pq_encode,
+        train_pq,
+    )
+
+    queries = [
+        (int(r["vec_id"]), list(r["embedding"]))
+        for r in vectors.where(F.col("vec_id") < 3).collect()
+    ]
+    books = train_pq(vectors, m=16, ksub=16, n_iters=2)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        rr = pq_adc_rerank_topk(
+            vectors, pq_encode(vectors, books), queries, books, k=5,
+            shortlist=20,
+        )
+        rr.collect()  # AQE finalizes the plan during execution
+        plan = rr._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    semi = [
+        i for i, ln in enumerate(lines)
+        if "BroadcastHashJoin" in ln and "LeftSemi" in ln
+    ]
+    assert len(semi) == 1, plan[:3000]
+    i = semi[0]
+    assert "BuildRight" in lines[i], lines[i]
+    # the node text starts at `col` (after the tree marker); its
+    # children hang off ":- " (streamed, left) and "+- " (built, right)
+    # at that column
+    col = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    right = next(
+        j for j in range(i + 1, len(lines)) if lines[j][col:col + 3] == "+- "
+    )
+    streamed = "\n".join(lines[i + 1:right])
+    assert "embedding" in streamed and "Scan" in streamed, streamed
+    assert "Exchange" not in streamed and "ShuffleQueryStage" not in streamed, streamed
+    assert lines[right][col + 3:].startswith(
+        ("BroadcastQueryStage", "BroadcastExchange")
+    ), lines[right]
+    # the built side is the ADC shortlist: its rank <= shortlist filter
+    end = next(
+        (j for j in range(right + 1, len(lines))
+         if lines[j][:col + 3].strip(" :")),
+        len(lines),
+    )
+    built = "\n".join(lines[right:end])
+    assert "<= 20)" in built, built
 
 
 def test_cross_doc_spans_islands_and_merging(spark):
