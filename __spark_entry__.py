@@ -14,54 +14,24 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: orders-derived geo-tagged road rows -> grid encode ->
-    PIP jurisdiction (broadcast cell-index join) -> kNN fallback ->
-    speed-limit inference (all-native Column cascade over broadcast
-    compiled rules, plans.native_cascade) -> result struct. Returns the
-    enriched DataFrame."""
-    from pyspark.sql import functions as F
-
-    from osm_legal_default_speeds_spark.operators.spatial import (
-        assign_jurisdiction,
-        assign_tiles,
-        knn_region_column,
-    )
+    """Flagship at sf0.001: orders-derived geo-tagged road rows through
+    ``jobs.pipeline_job.flagship_pipeline`` — PIP jurisdiction with
+    nearest-boundary fallback (broadcast cell-index joins) -> tile
+    assignment -> native rule cascade (plans.native_cascade) — over
+    the default rule set. Returns road_id, region_code, tile_id,
+    road_type_name, certitude and result_tags."""
     from osm_legal_default_speeds_spark.jobs.pipeline_job import (
+        flagship_pipeline,
         load_default_ruleset,
     )
     from osm_legal_default_speeds_spark.plans.driver_queries import (
         _roads_df,
         synth_boundaries,
     )
-    from osm_legal_default_speeds_spark.plans.native_cascade import (
-        infer_speed_limits_native,
-    )
 
     sf_dir = "/root/testdata/sf0.001"
-    roads = _roads_df(spark, sf_dir)
-
-    boundaries = synth_boundaries()
-    located = assign_jurisdiction(roads, boundaries, index_res=6)
-    located = located.withColumn(
-        "region_code",
-        F.coalesce(
-            F.col("region_code"),
-            knn_region_column(boundaries, F.col("lon"), F.col("lat")),
-        ),
-    )
-    located = assign_tiles(located, tile_res=7)
-
-    out = infer_speed_limits_native(
-        located, load_default_ruleset(), country_col="region_code",
-        tags_col="tags",
-    )
-    return out.select(
-        "road_id",
-        "region_code",
-        "tile_id",
-        F.col("speed_limit.road_type_name").alias("road_type_name"),
-        F.col("speed_limit.certitude").alias("certitude"),
-        F.col("speed_limit.tags").alias("result_tags"),
+    return flagship_pipeline(
+        _roads_df(spark, sf_dir), load_default_ruleset(), synth_boundaries()
     )
 
 

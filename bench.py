@@ -92,13 +92,25 @@ def _run(df) -> int:
     return obs.get["n"]
 
 
+def _full_rules():
+    """The full reference rule set, loaded and compiled."""
+    from osm_legal_default_speeds_spark.plans.rules_compiler import compile_ruleset
+    from osm_legal_default_speeds_spark.sources.rules_json import (
+        REFERENCE_DATASET_PATH,
+        load_rules_json,
+    )
+
+    _, road_types, speed_limits, _ = load_rules_json(REFERENCE_DATASET_PATH)
+    return compile_ruleset(road_types, speed_limits)
+
+
 def bench_queries(
     spark: SparkSession, sf_dir: str
 ) -> tuple[dict, dict, dict, list]:
+    from osm_legal_default_speeds_spark.jobs.pipeline_job import flagship_pipeline
     from osm_legal_default_speeds_spark.operators.spatial import (
         assign_tiles,
-        knn_region_column,
-        pip_region_column,
+        resolve_jurisdiction,
         tile_rollup,
     )
     from osm_legal_default_speeds_spark.plans.driver_queries import (
@@ -108,14 +120,8 @@ def bench_queries(
     from osm_legal_default_speeds_spark.plans.native_cascade import (
         infer_speed_limits_native,
     )
-    from osm_legal_default_speeds_spark.plans.rules_compiler import compile_ruleset
-    from osm_legal_default_speeds_spark.sources.rules_json import (
-        REFERENCE_DATASET_PATH,
-        load_rules_json,
-    )
 
-    _, road_types, speed_limits, _ = load_rules_json(REFERENCE_DATASET_PATH)
-    full_rules = compile_ruleset(road_types, speed_limits)
+    full_rules = _full_rules()
     boundaries = synth_boundaries()
 
     def _par_roads(spark, sf_dir):
@@ -129,7 +135,7 @@ def bench_queries(
 
     def _real_cc_roads(spark, sf_dir):
         roads = _par_roads(spark, sf_dir)
-        ccs = sorted(speed_limits.keys())
+        ccs = sorted(full_rules.speed_limits_by_country)
         cc = F.element_at(
             F.array(*[F.lit(c) for c in ccs]),
             (F.col("road_id") % len(ccs) + 1).cast("int"),
@@ -159,12 +165,7 @@ def bench_queries(
     def q_spatial_pipeline(spark, sf_dir):
         """Grid encode -> PIP -> kNN fallback -> tile assignment."""
         roads = _par_roads(spark, sf_dir).select("road_id", "lon", "lat")
-        lon, lat = F.col("lon"), F.col("lat")
-        region = F.coalesce(
-            pip_region_column(boundaries, lon, lat),
-            knn_region_column(boundaries, lon, lat),
-        )
-        return assign_tiles(roads.withColumn("region_code", region), tile_res=7)
+        return assign_tiles(resolve_jurisdiction(roads, boundaries), tile_res=7)
 
     def q_tile_rollup(spark, sf_dir):
         """NARROW scan: the map prefix (tile encode) is cheap and the
@@ -177,25 +178,7 @@ def bench_queries(
     def q_flagship(spark, sf_dir):
         """End-to-end: spatial jurisdiction + inference + tiling, on
         the native Column cascade (no Python workers)."""
-        roads = _par_roads(spark, sf_dir)
-        lon, lat = F.col("lon"), F.col("lat")
-        region = F.coalesce(
-            pip_region_column(boundaries, lon, lat),
-            knn_region_column(boundaries, lon, lat),
-        )
-        roads = assign_tiles(roads.withColumn("region_code", region), tile_res=7)
-        out = infer_speed_limits_native(
-            roads, full_rules, country_col="region_code"
-        )
-        return out.select(
-            "road_id",
-            "region_code",
-            "tile_id",
-            F.col("speed_limit.certitude").alias("certitude"),
-            # keep result-tag assembly in the measured plan (a
-            # certitude-only projection would let Catalyst prune R1-R4)
-            F.col("speed_limit.tags").alias("result_tags"),
-        )
+        return flagship_pipeline(_par_roads(spark, sf_dir), full_rules, boundaries)
 
     queries = {
         "inference_dedup_plan": q_inference_dedup,
@@ -296,27 +279,11 @@ def scaling_df(spark: SparkSession, sf_dir: str, replicate: int):
     including it per-run turns a 4x-cores comparison into a
     serial-bottleneck measurement (Amdahl) and reports meaningless
     efficiency."""
-    from osm_legal_default_speeds_spark.operators.spatial import (
-        assign_tiles,
-        knn_region_column,
-        pip_region_column,
-    )
+    from osm_legal_default_speeds_spark.jobs.pipeline_job import flagship_pipeline
     from osm_legal_default_speeds_spark.plans.driver_queries import (
         _roads_df,
         synth_boundaries,
     )
-    from osm_legal_default_speeds_spark.plans.native_cascade import (
-        infer_speed_limits_native,
-    )
-    from osm_legal_default_speeds_spark.plans.rules_compiler import compile_ruleset
-    from osm_legal_default_speeds_spark.sources.rules_json import (
-        REFERENCE_DATASET_PATH,
-        load_rules_json,
-    )
-
-    _, road_types, speed_limits, _ = load_rules_json(REFERENCE_DATASET_PATH)
-    full_rules = compile_ruleset(road_types, speed_limits)
-    boundaries = synth_boundaries()
 
     ncores = spark.sparkContext.defaultParallelism
     # Spread the SMALL base across cores BEFORE replicating: the driver
@@ -335,20 +302,9 @@ def scaling_df(spark: SparkSession, sf_dir: str, replicate: int):
             "lon", ((F.col("lon") + F.col("road_id") % 360) + 180.0) % 360.0 - 180.0
         )
     )
-    lon, lat = F.col("lon"), F.col("lat")
-    region = F.coalesce(
-        pip_region_column(boundaries, lon, lat),
-        knn_region_column(boundaries, lon, lat),
-    )
-    roads = assign_tiles(roads.withColumn("region_code", region), tile_res=7)
     # all-Catalyst cascade: no Python workers in the measured job, so
     # scaling is not dragged by worker fork/IPC
-    out = infer_speed_limits_native(roads, full_rules, country_col="region_code")
-    return out.select(
-        "road_id", "region_code", "tile_id",
-        F.col("speed_limit.certitude").alias("certitude"),
-        F.col("speed_limit.tags").alias("result_tags"),
-    )
+    return flagship_pipeline(roads, _full_rules(), synth_boundaries())
 
 
 def scaling_job(spark: SparkSession, sf_dir: str, replicate: int) -> int:

@@ -47,7 +47,7 @@ def __getattr__(name):
 
         return getattr(native_cascade, name)
     if name in ("assign_jurisdiction", "assign_tiles", "tile_rollup",
-                "knn_assign_via_index", "resolve_jurisdiction_column",
+                "knn_assign_via_index", "resolve_jurisdiction",
                 "assign_jurisdiction_polygons", "point_in_polygon_col",
                 "PolygonBoundary", "RectBoundary"):
         from osm_legal_default_speeds_spark.operators import spatial

@@ -8,12 +8,15 @@ Cluster submission (north rule BASELINE.json:14):
         --sf-dir /data/roads --output /data/out \
         --num-buckets 4096 --batch-size 64
 
-The job: load road rows -> grid encode -> PIP jurisdiction (broadcast
-cell index) -> kNN border fallback -> tile assignment -> speed-limit
-inference over the broadcast-compiled full rule dataset -> resumable
-bucketed write with per-partition lineage manifests
-(plans.checkpointed_job). Re-running after a kill resumes from the
-committed buckets; output is identical to an uninterrupted run.
+The job runs ``flagship_pipeline`` — road rows -> PIP jurisdiction
+with nearest-boundary fallback (``resolve_jurisdiction``, two
+broadcast cell-index joins) -> tile assignment -> speed-limit
+inference over the broadcast-compiled rule set — and writes its six
+columns (road_id, region_code, tile_id, road_type_name, certitude,
+result_tags) through a resumable bucketed write with per-partition
+lineage manifests (plans.checkpointed_job). Re-running after a kill
+resumes from the committed buckets; output is identical to an
+uninterrupted run.
 
 The master is supplied by spark-submit; this script only `getOrCreate`s
 the session and sets sizing-independent SQL confs (AQE on). Build the
@@ -87,6 +90,38 @@ def load_default_ruleset():
     return mini_ruleset()
 
 
+def flagship_pipeline(roads, ruleset, boundaries, tile_res: int = 7):
+    """The flagship lookup on ``roads`` (road_id, tags, lon, lat): the
+    road's jurisdiction (PIP, else nearest boundary), its tile, then the
+    native rule cascade for that jurisdiction. Returns road_id,
+    region_code, tile_id and the result's road_type_name, certitude and
+    result_tags. The one definition ``__spark_entry__.entry``, this job
+    and ``bench.py`` share."""
+    from pyspark.sql import functions as F
+
+    from osm_legal_default_speeds_spark.operators.spatial import (
+        assign_tiles,
+        resolve_jurisdiction,
+    )
+    from osm_legal_default_speeds_spark.plans.native_cascade import (
+        infer_speed_limits_native,
+    )
+
+    located = assign_tiles(
+        resolve_jurisdiction(roads, boundaries), tile_res=tile_res
+    )
+    out = infer_speed_limits_native(located, ruleset, country_col="region_code")
+    result = F.col("speed_limit")
+    return out.select(
+        "road_id",
+        "region_code",
+        "tile_id",
+        result.getField("road_type_name").alias("road_type_name"),
+        result.getField("certitude").alias("certitude"),
+        result.getField("tags").alias("result_tags"),
+    )
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", required=True)
@@ -116,16 +151,6 @@ def main(argv: list[str] | None = None) -> None:
     # codegen pipelines at ~32 concurrent tasks — see BENCH/BASELINE.md.
 
     # imports resolved from the --py-files zip on executors and driver
-    from pyspark.sql import functions as F
-
-    from osm_legal_default_speeds_spark.plans.native_cascade import (
-        infer_speed_limits_native,
-    )
-    from osm_legal_default_speeds_spark.operators.spatial import (
-        assign_tiles,
-        knn_region_column,
-        pip_region_column,
-    )
     from osm_legal_default_speeds_spark.plans.checkpointed_job import (
         run_checkpointed,
     )
@@ -138,24 +163,9 @@ def main(argv: list[str] | None = None) -> None:
     boundaries = synth_boundaries()
 
     def pipeline(spark):
-        roads = _roads_df(spark, args.sf_dir)
-        lon, lat = F.col("lon"), F.col("lat")
-        region = F.coalesce(
-            pip_region_column(boundaries, lon, lat),
-            knn_region_column(boundaries, lon, lat),
-        )
-        roads = assign_tiles(
-            roads.withColumn("region_code", region), tile_res=args.tile_res
-        )
-        out = infer_speed_limits_native(
-            roads, ruleset, country_col="region_code"
-        )
-        return out.select(
-            "road_id",
-            "region_code",
-            "tile_id",
-            F.col("speed_limit.road_type_name").alias("road_type_name"),
-            F.col("speed_limit.certitude").alias("certitude"),
+        return flagship_pipeline(
+            _roads_df(spark, args.sf_dir), ruleset, boundaries,
+            tile_res=args.tile_res,
         )
 
     summary = run_checkpointed(

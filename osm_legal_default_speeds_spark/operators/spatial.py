@@ -404,7 +404,8 @@ def assign_jurisdiction(
     """Broadcast PIP join: coarse-cell equi-join against the
     cell -> candidate-array index, exact containment filter inside the
     array, min(priority) winner via array_min. Points matching no
-    polygon keep out_col null (resolve with knn_region_column).
+    polygon keep out_col null (``resolve_jurisdiction`` fills them
+    from the nearest boundary).
 
     Scale shape: fact side is map-only — one broadcast hash join adding
     one array column, zero row multiplication, zero shuffle, winner
@@ -438,32 +439,6 @@ def assign_jurisdiction(
     )
 
 
-def pip_region_column(
-    boundaries: list[RectBoundary], lon: Column, lat: Column
-) -> Column:
-    """Shuffle-free alternative for small boundary sets: one CASE
-    expression choosing the min-priority containing rectangle. Fully
-    codegen'd; used for the oracle-checked queries and benchmarks."""
-    best: Column = F.lit(None).cast("string")
-    # sort by the FULL candidate-struct tuple, mirroring the field
-    # order array_min compares in assign_jurisdiction — with priority
-    # alone, equal-priority overlapping rectangles would resolve
-    # last-listed-wins here but smallest-region_code there, and the
-    # two documented-interchangeable paths would diverge
-    order = lambda b: (  # noqa: E731
-        b.priority, b.region_code, b.lon_min, b.lat_min, b.lon_max, b.lat_max
-    )
-    for b in sorted(boundaries, key=order, reverse=True):
-        inside = (
-            (lon >= F.lit(b.lon_min))
-            & (lon < F.lit(b.lon_max))
-            & (lat >= F.lit(b.lat_min))
-            & (lat < F.lit(b.lat_max))
-        )
-        best = F.when(inside, F.lit(b.region_code)).otherwise(best)
-    return best
-
-
 def _rect_dist(b: RectBoundary, lon: Column, lat: Column) -> Column:
     dx = F.greatest(F.lit(b.lon_min) - lon, lon - F.lit(b.lon_max), F.lit(0.0))
     dy = F.greatest(F.lit(b.lat_min) - lat, lat - F.lit(b.lat_max), F.lit(0.0))
@@ -473,10 +448,13 @@ def _rect_dist(b: RectBoundary, lon: Column, lat: Column) -> Column:
 def knn_region_column(
     boundaries: list[RectBoundary], lon: Column, lat: Column
 ) -> Column:
-    """Nearest boundary by clamped point-to-rectangle distance
-    (exact argmin over the broadcast dim — map-side, no shuffle).
-    Distance ties break by region_code ascending for determinism:
-    ``array_min`` over (distance, code) structs IS min-by-(d, code).
+    """Nearest boundary by clamped point-to-rectangle distance: the
+    flat reference that ``knn_assign_via_index`` is checked against
+    (exact argmin over every boundary — map-side, no shuffle, but the
+    expression grows with the boundary count, so pipelines use the
+    index). Distance ties break by region_code ascending for
+    determinism: ``array_min`` over (distance, code) structs IS
+    min-by-(d, code).
 
     Expression size is LINEAR in the boundary count. The previous
     when-fold formulation compared every distance against a duplicated
@@ -497,16 +475,6 @@ def knn_region_column(
         )
     )
     return best.getField("r")
-
-
-def resolve_jurisdiction_column(
-    boundaries: list[RectBoundary], lon: Column, lat: Column
-) -> Column:
-    """PIP winner, else kNN nearest — the full jurisdiction rule."""
-    return F.coalesce(
-        pip_region_column(boundaries, lon, lat),
-        knn_region_column(boundaries, lon, lat),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -784,6 +752,23 @@ def knn_assign_via_index(
     return joined.withColumn(out_col, best.getField("r")).drop(
         "__knn_icell", "__knn_cands", "__knn_cell"
     )
+
+
+def resolve_jurisdiction(
+    points: DataFrame, boundaries: list[RectBoundary]
+) -> DataFrame:
+    """The full jurisdiction rule on ``lon``/``lat`` -> ``region_code``:
+    the PIP winner, else the nearest boundary. Both halves are
+    broadcast cell-index joins, so the plan's size does not grow with
+    the boundary count."""
+    located = knn_assign_via_index(
+        assign_jurisdiction(points, boundaries),
+        boundaries,
+        out_col="__nearest_region",
+    )
+    return located.withColumn(
+        "region_code", F.coalesce("region_code", "__nearest_region")
+    ).drop("__nearest_region")
 
 
 # --------------------------------------------------------------------------

@@ -57,6 +57,7 @@ from osm_legal_default_speeds_spark.operators.spatial import (
     grid_cell,
     grid_parent,
     knn_region_column,
+    resolve_jurisdiction,
     tile_rollup,
 )
 from osm_legal_default_speeds_spark.plans.native_cascade import (
@@ -1892,10 +1893,6 @@ def q_image_geo_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     total pixels, count of png-coded rows, lexicographic-min image_id.
     Pins that real payload rows (not just id projections) survive the
     whole spatial pipeline with their metadata intact."""
-    from osm_legal_default_speeds_spark.operators.spatial import (
-        grid_cell,
-        resolve_jurisdiction_column,
-    )
     from osm_legal_default_speeds_spark.payload.images import images_from_ids
 
     o = _read(spark, sf_dir, "orders")
@@ -1914,14 +1911,12 @@ def q_image_geo_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         lon.alias("lon"),
         lat.alias("lat"),
     )
-    placed = tagged.select(
+    placed = resolve_jurisdiction(tagged, synth_boundaries()).select(
         "image_id",
         "w",
         "h",
         "fmt",
-        resolve_jurisdiction_column(
-            synth_boundaries(), F.col("lon"), F.col("lat")
-        ).alias("region_code"),
+        "region_code",
         grid_cell(F.col("lon"), F.col("lat"), _IMG_GEO_RES).alias("tile_id"),
     )
     return placed.groupBy("region_code", "tile_id").agg(

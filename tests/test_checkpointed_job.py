@@ -292,7 +292,7 @@ def test_checkpointed_image_job_payload_integrity(spark, tmp_path):
     equality) after its round-trip through the partitioned sink."""
     from osm_legal_default_speeds_spark.operators.spatial import (
         grid_cell,
-        resolve_jurisdiction_column,
+        resolve_jurisdiction,
     )
     from osm_legal_default_speeds_spark.payload.images import (
         decode_and_verify,
@@ -311,12 +311,8 @@ def test_checkpointed_image_job_payload_integrity(spark, tmp_path):
             ((idc * 7919 % 360000) / 1000.0 - 180.0).alias("lon"),
             ((idc * 104729 % 170000) / 1000.0 - 85.0).alias("lat"),
         )
-        return tagged.select(
-            "*",
-            resolve_jurisdiction_column(
-                synth_boundaries(), F.col("lon"), F.col("lat")
-            ).alias("region_code"),
-            grid_cell(F.col("lon"), F.col("lat"), 4).alias("tile_id"),
+        return resolve_jurisdiction(tagged, synth_boundaries()).withColumn(
+            "tile_id", grid_cell(F.col("lon"), F.col("lat"), 4)
         )
 
     out1 = str(tmp_path / "once")

@@ -2,13 +2,21 @@
 sf0.01 must match its oracle_sql() twin in DuckDB — row count, schema
 column names, and order-insensitive values."""
 
+import dataclasses
 import math
 import os
+import sys
 
 import duckdb
+import numpy as np
 import pytest
 
 import __spark_entry__ as entry_mod
+
+sys.path.append(
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+)
+import oracle as perfbench_oracle  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -195,16 +203,47 @@ def test_window_ledger_matches_correctness_files():
 
 
 def test_entry_smoke(spark):
+    """Every sf0.001 row of ``entry`` equals the benchmark's oracle row:
+    the region from a NumPy PIP-else-nearest pass over the same
+    boundaries (covers the US-ND subdivision's priority and the gaps
+    between rectangles), the grid tile, and the reference engine's
+    answer on the default rule set."""
+    from osm_legal_default_speeds_spark.jobs.pipeline_job import (
+        load_default_ruleset,
+    )
+    from osm_legal_default_speeds_spark.plans.driver_queries import (
+        _roads_df,
+        synth_boundaries,
+    )
+    from osm_legal_default_speeds_spark.plans.reference_engine import (
+        LegalDefaultSpeedsEngine,
+    )
+
     df = entry_mod.entry(spark)
-    rows = df.collect()
-    assert len(rows) >= 0
-    assert set(df.columns) == {
+    assert df.columns == [
         "road_id",
         "region_code",
         "tile_id",
         "road_type_name",
         "certitude",
         "result_tags",
-    }
-    # every row got a jurisdiction (PIP or kNN fallback)
-    assert all(r["region_code"] is not None for r in rows)
+    ]
+    got = {r["road_id"]: r.asDict() for r in df.collect()}
+    entry_sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    roads = _roads_df(spark, entry_sf_dir).orderBy("road_id").collect()
+    assert len(roads) == len(got) == 1500
+
+    bounds = [dataclasses.astuple(b) for b in synth_boundaries()]
+    lon = np.array([r["lon"] for r in roads])
+    lat = np.array([r["lat"] for r in roads])
+    regions, needs_knn = perfbench_oracle.regions(bounds, lon, lat)
+    assert needs_knn.any() and "US-ND" in regions
+    engine = LegalDefaultSpeedsEngine(ruleset=load_default_ruleset())
+    for road, region in zip(roads, regions):
+        want = perfbench_oracle.flagship_row(
+            engine, region, dict(road["tags"]), road["lon"], road["lat"], 7
+        )
+        row = got[road["road_id"]]
+        if row["result_tags"] is not None:
+            row["result_tags"] = dict(row["result_tags"])
+        assert {k: row[k] for k in want} == want, road["road_id"]

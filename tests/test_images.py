@@ -354,7 +354,7 @@ def test_image_flagship_pipeline_preserves_payload(spark, images):
     from osm_legal_default_speeds_spark.operators.spatial import (
         assign_tiles,
         grid_cell_py,
-        resolve_jurisdiction_column,
+        resolve_jurisdiction,
     )
     from osm_legal_default_speeds_spark.plans.driver_queries import (
         mini_ruleset,
@@ -379,10 +379,7 @@ def test_image_flagship_pipeline_preserves_payload(spark, images):
     )
     boundaries = synth_boundaries()
     geo = images.withColumn("lon", lon).withColumn("lat", lat).withColumn("tags", tags)
-    located = geo.withColumn(
-        "region_code",
-        resolve_jurisdiction_column(boundaries, F.col("lon"), F.col("lat")),
-    )
+    located = resolve_jurisdiction(geo, boundaries)
     # mini ruleset is ZA-only; map every region onto it so each image
     # row flows through the full cascade
     located = located.withColumn("region_code", F.lit("ZA"))

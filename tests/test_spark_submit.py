@@ -60,7 +60,7 @@ def test_default_ruleset_fallback_warns(tmp_path, monkeypatch):
     assert sorted(ruleset.speed_limits_by_country) == ["ZA"]
 
 
-def test_spark_submit_pyfiles_end_to_end(tmp_path):
+def test_spark_submit_pyfiles_end_to_end(tmp_path, spark):
     sys.path.insert(0, REPO)
     from osm_legal_default_speeds_spark.jobs.pipeline_job import build_pyfiles_zip
 
@@ -111,3 +111,27 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     summary2 = json.loads(line2)
     assert summary2["completed"] == []
     assert sorted(summary2["skipped"]) == [0, 1, 2, 3]
+
+    # the written table is flagship_pipeline's output, result tags
+    # included, row for row
+    from osm_legal_default_speeds_spark.jobs.pipeline_job import (
+        flagship_pipeline,
+        load_default_ruleset,
+    )
+    from osm_legal_default_speeds_spark.plans.checkpointed_job import PID_COL
+    from osm_legal_default_speeds_spark.plans.driver_queries import (
+        _roads_df,
+        synth_boundaries,
+    )
+
+    written = spark.read.parquet(out_dir).drop(PID_COL)
+    assert written.columns == [
+        "road_id", "region_code", "tile_id",
+        "road_type_name", "certitude", "result_tags",
+    ]
+    expected = flagship_pipeline(
+        _roads_df(spark, SF_DIR), load_default_ruleset(), synth_boundaries()
+    )
+    got = sorted(written.collect(), key=lambda r: r["road_id"])
+    assert len(got) == summary["rows"] == 1500
+    assert got == sorted(expected.collect(), key=lambda r: r["road_id"])

@@ -1598,14 +1598,14 @@ def test_assign_jurisdiction_preserves_user_cell_columns(spark):
 
 
 def test_pip_paths_agree_on_equal_priority_overlap(spark):
-    """pip_region_column (when-fold) and assign_jurisdiction
-    (array_min over the candidate struct) are documented as
-    interchangeable; equal-priority overlapping rectangles must
-    resolve identically — smallest (priority, region_code, ...)."""
+    """assign_jurisdiction (array_min over the candidate struct) and
+    resolve_jurisdiction (the same PIP join plus the nearest-boundary
+    fallback) must resolve equal-priority overlapping rectangles
+    identically — smallest (priority, region_code, ...)."""
     from osm_legal_default_speeds_spark.operators.spatial import (
         RectBoundary,
         assign_jurisdiction,
-        pip_region_column,
+        resolve_jurisdiction,
     )
 
     bounds = [
@@ -1616,18 +1616,9 @@ def test_pip_paths_agree_on_equal_priority_overlap(spark):
         [(1, 7.0, 7.0), (2, 2.0, 2.0), (3, 12.0, 12.0)],
         "pid long, lon double, lat double",
     )
-    via_index = {
-        r["pid"]: r["region_code"]
-        for r in assign_jurisdiction(pts, bounds).collect()
-    }
-    via_case = {
-        r["pid"]: r["rc"]
-        for r in pts.select(
-            "pid",
-            pip_region_column(bounds, F.col("lon"), F.col("lat")).alias("rc"),
-        ).collect()
-    }
-    assert via_index == via_case == {1: "AA", 2: "BB", 3: "AA"}
+    for op in (assign_jurisdiction, resolve_jurisdiction):
+        got = {r["pid"]: r["region_code"] for r in op(pts, bounds).collect()}
+        assert got == {1: "AA", 2: "BB", 3: "AA"}, op.__name__
 
 
 def test_quantize_node_rejects_overflowing_quantum(spark):
