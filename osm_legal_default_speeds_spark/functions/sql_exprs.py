@@ -132,8 +132,8 @@ def filter_to_column(
 ) -> Column:
     """Compile a tag-filter AST (or DSL string) to a boolean Column over
     a map<string,string> column. Placeholders require a resolver (the
-    rule compiler inlines the referenced road type's expression here —
-    B5/B6 compile-time DAG substitution, sound because cycles are
+    native cascade resolves each to the referenced road type's staged
+    boolean column — B5/B6 DAG substitution, sound because cycles are
     rejected).
 
     ``numeric_operand``: optional key -> Column hook for the comparison
@@ -233,41 +233,6 @@ def _atom_to_column(
     raise TypeError(f"Unknown atom {type(atom)}")
 
 
-def road_type_match_column(
-    ruleset,
-    name: str,
-    tags: Column | str,
-    relations: Column | str | None = None,
-    fuzzy: bool = False,
-    overrides: Column | str | None = None,
-    _depth: int = 0,
-) -> Column:
-    """Native-Column equivalent of the reference's filtersMatch for one
-    road type (LegalDefaultSpeeds.kt:213-223):
-
-        anyRelationMatches(relationFilter) OR filter OR
-        (fuzzy AND fuzzyFilter)
-
-    with placeholders inlined recursively (DAG — cycles were rejected at
-    compile time) and optional per-row overrides spliced around every
-    named evaluation (C7): ``coalesce(overrides[name], <expr>)``.
-    """
-    t = F.col(tags) if isinstance(tags, str) else tags
-    rels = F.col(relations) if isinstance(relations, str) else relations
-    ovr = F.col(overrides) if isinstance(overrides, str) else overrides
-    if _depth > 64:
-        raise ValueError("placeholder nesting too deep")
-
-    cf = ruleset.road_type_filters.get(name)
-
-    def resolver(ref_name: str) -> Column:
-        return road_type_match_column(
-            ruleset, ref_name, t, rels, fuzzy, ovr, _depth + 1
-        )
-
-    return assemble_match_expr(cf, t, rels, ovr, name, fuzzy, resolver)
-
-
 def assemble_match_expr(
     cf,
     tags: Column,
@@ -278,10 +243,9 @@ def assemble_match_expr(
     resolve,
     numeric_operand=None,
 ) -> Column:
-    """The single source of the filtersMatch assembly shape
-    (LegalDefaultSpeeds.kt:207-223), shared by the recursive-inline
-    path above and the hoisted-column native cascade
-    (plans.native_cascade._match_expr):
+    """filtersMatch for one road type (LegalDefaultSpeeds.kt:207-223),
+    as the hoisted-column native cascade (plans.native_cascade) builds
+    it for every reachable name:
 
         coalesce(overrides[name],
                  coalesce(anyRelationMatches(relationFilter) OR filter

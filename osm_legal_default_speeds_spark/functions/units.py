@@ -14,17 +14,13 @@ Used in three places:
 - result assembly speed capping / implicit-maxspeed detection
   (``LegalDefaultSpeeds.kt:253-304``).
 
-Also exports ``parse_number_with_unit_series`` (pandas-vectorized, for
-pandas batches) and the unit-factor table consumed
-by the native Spark Column compiler in ``functions.sql_exprs``.
+Also exports the unit-factor table consumed by the native Spark Column
+compiler in ``functions.sql_exprs``.
 """
 
 from __future__ import annotations
 
 import re
-
-import numpy as np
-import pandas as pd
 
 # Factors to the canonical unit per dimension: km/h, meters, tonnes.
 # Mirrors NumberWithUnitParser.kt:30-50 bit-for-bit (the doubles must
@@ -71,22 +67,14 @@ _WITH_UNIT_RE = re.compile(rf"([0-9]+|[0-9]*\.[0-9]+){_JVM_WS}*([a-z/'\"]+)")
 # hex, no underscores in practice for OSM values; leading/trailing
 # whitespace is trimmed by parseDouble). fullmatch-anchored.
 # KNOWN (intentional) narrowings vs the full parseDouble grammar, kept
-# so the Python scalar, the vectorized path, and the native Column twin
-# (sql_exprs, Spark cast) all agree with EACH OTHER: hex-float literals
+# so the Python scalar and the native Column twin (sql_exprs, Spark
+# cast) agree with EACH OTHER: hex-float literals
 # ("0x1p3" -> 8.0 in Kotlin, None here — Spark's cast can't parse them
 # either) and [\x00-\x20] control-char padding ("30\x1f" -> 30.0 in
 # Kotlin via trim, None here — _JVM_WS covers only the 6 \s chars).
 # Both shapes are absent from real OSM maxspeed values.
 _PLAIN_NUMBER_RE = re.compile(
     rf"{_JVM_WS}*([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?{_JVM_WS}*"
-)
-# The vectorized fast path's re-check. NO leading-whitespace allowance:
-# the scalar's first-char-is-digit-or-dot guard rejects " 30" before
-# parseDouble ever trims it (NumberWithUnitParser.kt:5-6), so the bulk
-# pd.to_numeric conversion — which happily coerces " 30" — must be
-# re-screened against the guard, not just the parseDouble grammar.
-_PLAIN_NUMBER_STRICT_RE = re.compile(
-    rf"([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?{_JVM_WS}*"
 )
 
 
@@ -124,33 +112,3 @@ def parse_number_with_unit(value: str | None) -> float | None:
 
     return None
 
-
-def parse_number_with_unit_series(values: pd.Series) -> pd.Series:
-    """Vectorized ``parse_number_with_unit`` over a pandas Series of
-    strings (nullable). Fast path: values that are plain numbers are
-    bulk-converted with ``pd.to_numeric``; only the residue (values with
-    unit suffixes, a tiny fraction of OSM maxspeed values) falls back to
-    the scalar parser per element.
-    """
-    s = values.astype("object")
-    out = pd.to_numeric(s, errors="coerce")
-    # pd.to_numeric is more lenient than Java parseDouble (signs,
-    # whitespace-only, UNICODE whitespace like U+00A0); re-check every
-    # converted value against the full parseDouble-shaped grammar —
-    # rejects fall into the residue, where the scalar parser (the
-    # single source of truth) re-decides them.
-    converted = out.notna()
-    if converted.any():
-        bad = ~s[converted].str.fullmatch(
-            _PLAIN_NUMBER_STRICT_RE.pattern
-        ).astype(bool)
-        if bad.any():
-            out[bad[bad].index] = np.nan
-    residue = out.isna() & s.notna()
-    if residue.any():
-        # astype: map yields None for rejects; assigning object-dtype
-        # Nones into the float64 result is deprecated in pandas
-        out[residue] = (
-            s[residue].map(parse_number_with_unit).astype("float64")
-        )
-    return out.astype("float64")

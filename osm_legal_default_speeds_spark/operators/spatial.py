@@ -353,16 +353,6 @@ class RectBoundary:
         return [x * ny + y for x in range(x0, x1 + 1) for y in range(y0, y1 + 1)]
 
 
-def boundaries_to_df(spark, boundaries: list[RectBoundary]) -> DataFrame:
-    return spark.createDataFrame(
-        [
-            (b.region_code, b.lon_min, b.lat_min, b.lon_max, b.lat_max, b.priority)
-            for b in boundaries
-        ],
-        "region_code string, lon_min double, lat_min double, lon_max double, lat_max double, priority int",
-    )
-
-
 def boundary_cell_index_df(spark, boundaries: list[RectBoundary], res: int) -> DataFrame:
     """Driver-side cell -> candidate-polygon-array coverage index (the
     broadcast side of the PIP join). One row per covered cell, with all

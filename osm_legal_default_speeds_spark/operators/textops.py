@@ -168,16 +168,8 @@ def distinct_ratio(text: Column) -> Column:
     return distinct_ratio_from_tokens(tokens(text))
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
-    return stopword_hits_from_tokens(tokens(text), lang)
-
-
 def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return stopword_ratio_from_tokens(tokens(text), lang)
-
-
-def mean_word_len(text: Column) -> Column:
-    return mean_word_len_from_tokens(tokens(text))
 
 
 def quality_score(text: Column, lang: str = "en") -> Column:
@@ -198,10 +190,6 @@ def rolling_hash(text: Column, base: int = 31, mod: int = 1_000_000_007) -> Colu
 
 def simhash(text: Column, bits: int = 16) -> Column:
     return simhash_from_hashes(word_hashes(tokens(text), 15), bits)
-
-
-def hamming_distance(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def with_text_features_python(

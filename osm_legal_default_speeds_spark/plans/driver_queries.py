@@ -17,7 +17,6 @@ Query -> SURVEY §2 coverage (full inventory-to-query map: COVERAGE.md):
   cascade_infer_native     C1-C5 match cascade + A1 first-match
   relation_semijoin_native C6 EXISTS over the relations array
   override_column_native   C7 replacer hook as per-row overrides map
-                           (through the dedup_inputs plan)
   result_assembly_native   R1-R4 result map algebra incl. conditional
                            capping
   grid_encode        graft: hierarchical grid encode + parent rollup
@@ -545,9 +544,7 @@ def q_override_column_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     true entry forces the named road type's predicate regardless of
     tags (e.g. an is-urban signal from the spatial layer). The override
     coalesce is spliced around every hoisted/inlined named predicate,
-    incl. placeholder sites; runs through the dedup_inputs composition
-    so the distinct -> infer -> broadcast-join-back plan is
-    oracle-checked too."""
+    incl. placeholder sites."""
     o = _read(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     overrides = F.when(
@@ -563,8 +560,7 @@ def q_override_column_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         overrides.cast("map<string,boolean>").alias("overrides"),
     )
     out = infer_speed_limits_native(
-        roads, relations_ruleset(), overrides_col="overrides",
-        dedup_inputs=True,
+        roads, relations_ruleset(), overrides_col="overrides"
     )
     r = F.col("speed_limit")
     return out.select(

@@ -37,9 +37,7 @@ The plan shape:
 
 Scale: map-only — the fact table never shuffles and never crosses into
 Python. Per-row cost is dominated by evaluating the hoisted predicate
-columns (~2x191 small codegen'd map probes for the full dataset); the
-``dedup_inputs`` plan composes with this path too, bounding even that
-by distinct-combination cardinality.
+columns (~2x191 small codegen'd map probes for the full dataset).
 
 Speed-cap recursion (R3) is unrolled to the rule set's own deepest
 ``maxspeed:*`` nesting (``_rule_cap_depth``; the shipped dataset's
@@ -80,8 +78,6 @@ from osm_legal_default_speeds_spark.plans.rules_compiler import (
 )
 
 _EMPTY_TAGS = "map<string,string>"
-_RELATIONS_TYPE = "array<map<string,string>>"
-_OVERRIDES_TYPE = "map<string,boolean>"
 
 
 # --------------------------------------------------------------------------
@@ -483,29 +479,6 @@ def _numeric_compare_keys(ruleset: CompiledRuleSet, names: list[str]) -> list[st
     return sorted(keys)
 
 
-def _match_expr(
-    ruleset: CompiledRuleSet,
-    name: str,
-    tags: Column,
-    rels: Column | None,
-    ovr: Column | None,
-    fuzzy: bool,
-    resolve,
-    numeric_operand=None,
-) -> Column:
-    """filtersMatch for one name with HOISTED placeholder columns: the
-    assembly shape itself (relation-EXISTS OR filter [OR fuzzy],
-    coalesce(False), override splice) lives in ONE place —
-    ``sql_exprs.assemble_match_expr`` — shared with the
-    recursive-inline ``road_type_match_column``, so the two native
-    paths cannot drift (see that helper for the kt:207-223 citations
-    and the relation/numeric-operand scoping rules)."""
-    cf = ruleset.road_type_filters.get(name)
-    return assemble_match_expr(
-        cf, tags, rels, ovr, name, fuzzy, resolve, numeric_operand
-    )
-
-
 # --------------------------------------------------------------------------
 # broadcast country dim
 # --------------------------------------------------------------------------
@@ -626,7 +599,6 @@ def infer_speed_limits_native(
     relations_col: str | None = None,
     overrides_col: str | None = None,
     result_col: str = "speed_limit",
-    dedup_inputs: bool = False,
 ) -> DataFrame:
     """The reference's ``getSpeedLimits`` as a whole-DataFrame
     transformation on the all-native plan described in the module
@@ -639,23 +611,9 @@ def infer_speed_limits_native(
     tags of relations the road belongs to (C6).
     ``overrides_col``: optional map<string,boolean> column forcing named
     road-type predicates per row (the columnar replacerFn, C7) — e.g. an
-    ``is_urban`` signal from a spatial layer.
-    ``dedup_inputs``: evaluate the (pure) cascade once per distinct
-    (country, canonical tags [, relations, overrides]) combination and
-    broadcast-join the results back (``_infer_dedup``): for highly
-    repetitive inputs the per-row cost collapses to distinct-combination
-    cardinality."""
-    if dedup_inputs:
-        return _infer_dedup(
-            df, ruleset, country_col, tags_col, relations_col,
-            overrides_col, result_col,
-        )
-
+    ``is_urban`` signal from a spatial layer."""
     spark = df.sparkSession
-    bundle = _get_bundle(
-        ruleset, country_col, relations_col, overrides_col,
-        _rule_cap_depth(ruleset),
-    )
+    bundle = _get_bundle(ruleset, country_col, relations_col, overrides_col)
 
     in_tags = "__nc_tags"
     orig_cols = list(df.columns)
@@ -741,87 +699,6 @@ def infer_speed_limits_native(
     return out.select(*keep)
 
 
-def _canonical_map_key(col: Column) -> Column:
-    """Deterministic digest of a map column: sorted entry array ->
-    JSON -> md5. Equal dicts (any storage order) get equal keys."""
-    entries = F.array_sort(
-        F.map_entries(F.coalesce(col, F.create_map().cast(_EMPTY_TAGS)))
-    )
-    return F.md5(F.to_json(entries))
-
-
-def _infer_dedup(
-    df: DataFrame,
-    ruleset: CompiledRuleSet,
-    country_col: str,
-    tags_col: str,
-    relations_col: str | None,
-    overrides_col: str | None,
-    result_col: str,
-) -> DataFrame:
-    """distinct -> infer -> broadcast join-back plan (see
-    ``infer_speed_limits_native``'s ``dedup_inputs``).
-
-    The (distinct-combination -> result) side is broadcast: distinct
-    tag-combination cardinality is orders of magnitude below row count,
-    and the join-back side has no size statistics, so without the hint
-    Spark sorts the full fact side for a sort-merge join, which spills
-    and anti-scales.
-
-    Rejected alternative (measured): shuffle-hash join-back hoping
-    ReuseExchange would dedup the canonicalization between the
-    distinct branch and the fact side. It cannot fire —
-    ``dropDuplicates`` puts a map-side partial aggregate BELOW its
-    exchange, so the two exchanges' children differ — and the forced
-    shuffle of the fact side measured ~20% slower than the broadcast
-    join-back at sf0.1. The canonicalization is therefore computed on
-    both branches by design; it is pure map-side codegen and cheaper
-    than shuffling the corpus."""
-    key_col = "__infer_key"
-    key = _canonical_map_key(F.col(tags_col))
-    if relations_col is not None:
-        rel_canon = F.transform(
-            F.coalesce(
-                F.col(relations_col), F.array().cast(_RELATIONS_TYPE)
-            ),
-            lambda m: F.array_sort(F.map_entries(m)),
-        )
-        key = F.md5(F.concat(key, F.to_json(rel_canon)))
-    if overrides_col is not None:
-        ovr_canon = F.array_sort(
-            F.map_entries(
-                F.coalesce(F.col(overrides_col), F.create_map().cast(_OVERRIDES_TYPE))
-            )
-        )
-        key = F.md5(F.concat(key, F.to_json(ovr_canon)))
-    keyed = df.withColumn(key_col, key)
-
-    sel = [country_col, key_col, tags_col]
-    if relations_col is not None:
-        sel.append(relations_col)
-    if overrides_col is not None:
-        sel.append(overrides_col)
-    distinct = keyed.select(*sel).dropDuplicates([country_col, key_col])
-    inferred = infer_speed_limits_native(
-        distinct,
-        ruleset,
-        country_col=country_col,
-        tags_col=tags_col,
-        relations_col=relations_col,
-        overrides_col=overrides_col,
-        result_col=result_col,
-    ).select(country_col, key_col, result_col)
-
-    # replace a pre-existing result_col in place (same contract as the
-    # per-row plan's explicit keep-list) — joining it back alongside the
-    # original would select the same name twice (AMBIGUOUS_REFERENCE
-    # downstream)
-    if result_col in keyed.columns:
-        keyed = keyed.drop(result_col)
-    out = keyed.join(F.broadcast(inferred), [country_col, key_col], "left")
-    return out.drop(key_col)
-
-
 class _DimToken:
     """Weakref-able identity token tying a bundle's cached per-session
     dim DataFrames to the bundle's lifetime (bare ``object()`` does not
@@ -838,14 +715,13 @@ def _get_bundle(
     country_col: str,
     relations_col: str | None,
     overrides_col: str | None,
-    cap_depth: int,
 ):
     """Compile-once bundle of every df-independent Column for this
     (ruleset, options) pair. Building ~300 predicate expressions plus
     the assembly HOFs costs seconds of py4j round-trips; Column objects
     are immutable and bind by name, so they are safely reusable across
     DataFrames and queries."""
-    key = (id(ruleset), country_col, relations_col, overrides_col, cap_depth)
+    key = (id(ruleset), country_col, relations_col, overrides_col)
     hit = _BUNDLE_CACHE.get(key)
     if hit is not None and hit[0] is ruleset:
         # LRU touch: re-insert at the end so eviction targets the
@@ -912,14 +788,14 @@ def _get_bundle(
         return f"__nc_f{name_idx[n]}" if n in fuzzy_names else ecol(n)
 
     def e_expr(n: str) -> Column:
-        return _match_expr(
-            ruleset, n, t, rels, ovr, False,
+        return assemble_match_expr(
+            ruleset.road_type_filters.get(n), t, rels, ovr, n, False,
             lambda ref: F.col(ecol(ref)), numeric_operand,
         )
 
     def f_expr(n: str) -> Column:
-        return _match_expr(
-            ruleset, n, t, rels, ovr, True,
+        return assemble_match_expr(
+            ruleset.road_type_filters.get(n), t, rels, ovr, n, True,
             lambda ref: F.col(fcol(ref)), numeric_operand,
         )
 
@@ -1045,7 +921,7 @@ def _get_bundle(
     assembly = [
         (name, F.when(~fast, col))
         for name, col in _assembly_columns(
-            "__nc_tags", "__nc_wtags", "__nc_rtags", cap_depth
+            "__nc_tags", "__nc_wtags", "__nc_rtags", _rule_cap_depth(ruleset)
         )
     ]
     result_struct = F.when(

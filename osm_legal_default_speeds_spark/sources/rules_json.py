@@ -9,10 +9,9 @@ reference ``README.md:55-79`` / ``demo/src/main/kotlin/SpeedLimitsJson.kt:5-21``
 
 The rule tables are tiny dim data (~10k lines of JSON for 172 road
 types / 242 countries), so they are parsed on the driver with the json
-stdlib and either compiled+broadcast (the hot path) or turned into small
-Spark DataFrames for SQL-visible joins. The rule *order* within each
-country list is semantic (match priority) and is materialized as an
-explicit ``rule_idx`` column — Spark has no implicit row order.
+stdlib and compiled into the broadcast cascade. The rule *order* within
+each country list is semantic (match priority) and is kept as list
+order.
 """
 
 from __future__ import annotations
@@ -48,21 +47,3 @@ def load_rules_json(path: str | Path):
         for cc, rules in raw.get("speedLimitsByCountryCode", {}).items()
     }
     return raw.get("meta", {}), road_types, speed_limits, raw.get("warnings", [])
-
-
-def rules_to_spark_rows(speed_limits_by_country_code) -> list:
-    """Flatten ordered rule lists into rows for a Spark DataFrame:
-    (country_code, rule_idx, road_type_name, tags)."""
-    rows = []
-    for cc, rules in speed_limits_by_country_code.items():
-        for idx, rule in enumerate(rules):
-            rows.append((cc, idx, rule.name, dict(rule.tags)))
-    return rows
-
-
-def road_types_to_spark_rows(road_types_by_name) -> list:
-    """(road_type_name, filter, fuzzy_filter, relation_filter) rows."""
-    return [
-        (name, d.filter, d.fuzzy_filter, d.relation_filter)
-        for name, d in road_types_by_name.items()
-    ]

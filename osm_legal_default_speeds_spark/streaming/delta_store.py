@@ -345,17 +345,6 @@ def read_state_at(
     return cur
 
 
-def read_current_state(
-    spark: SparkSession, store_dir: str, key: str
-) -> DataFrame | None:
-    """The committed table, or None before the first commit (callers
-    with a known schema may substitute their own typed empty)."""
-    v = current_version(store_dir)
-    if v is None:
-        return None
-    return read_state_at(spark, store_dir, v, key)
-
-
 def compact_store(
     spark: SparkSession, store_dir: str, key: str
 ) -> int | None:

@@ -211,15 +211,13 @@ def test_dim_cache_is_per_session_and_unpinned(spark):
 
     from osm_legal_default_speeds_spark.plans.native_cascade import (
         _get_bundle,
-        _rule_cap_depth,
     )
 
     ruleset = compile_ruleset(*za_defs())
     # the SAME bundle cache entry the inference calls below use: keyed
-    # on (ruleset, country/relations/overrides cols, cap depth)
+    # on (ruleset, country/relations/overrides cols)
     bundle = _get_bundle(
-        ruleset, "country_code", "relations_tags", "overrides",
-        _rule_cap_depth(ruleset),
+        ruleset, "country_code", "relations_tags", "overrides"
     )
     token = bundle["dim_token"]
 
@@ -284,23 +282,16 @@ def test_dim_cache_is_per_session_and_unpinned(spark):
     assert spark.__dict__["_nc_dim_cache"][token] is dim_a
 
 
-def test_max_cap_depth_survives_dedup_inputs(spark, monkeypatch):
-    """The cap-unroll depth derived from the rule set
-    (``_rule_cap_depth``) must reach the compiled bundle unchanged when
-    dedup_inputs wraps the kernel in the distinct->infer->join-back
-    plan, so the same arguments cap identically with and without the
-    dedup flag."""
+def test_max_cap_depth_reaches_slow_assembly(spark):
+    """The cap-unroll depth the kernel derives from the rule set
+    (``_rule_cap_depth``) must be deep enough for the rule set's
+    nested ``maxspeed:hgv:conditional`` (level 2). Rows with a parsable
+    input maxspeed take the staged R1-R4 assembly, where the level-2
+    cap prunes "80 @ (wet)" against maxspeed 60 but keeps it under 100;
+    a depth-1 unroll would keep it in both."""
     import osm_legal_default_speeds_spark.plans.native_cascade as nc
     from osm_legal_default_speeds_spark.plans.rules_model import RoadTypeDef
 
-    seen = []
-    real = nc._get_bundle
-
-    def spy(ruleset, country_col, relations_col, overrides_col, cap):
-        seen.append(cap)
-        return real(ruleset, country_col, relations_col, overrides_col, cap)
-
-    monkeypatch.setattr(nc, "_get_bundle", spy)
     road_types, rules = za_defs()
     # one nested conditional subtag: the rule set's cap depth is 2
     rules["ZA"] = [
@@ -313,33 +304,16 @@ def test_max_cap_depth_survives_dedup_inputs(spark, monkeypatch):
     ]
     ruleset = compile_ruleset(road_types, rules)
     assert nc._rule_cap_depth(ruleset) == 2
-    df = spark.createDataFrame(
-        [
-            Row(
-                road_id="r0",
-                country_code="ZA",
-                tags={"highway": "motorway"},
-                relations_tags=None,
-                overrides=None,
-            )
-        ],
-        INPUT_SCHEMA,
-    )
-    out = infer_speed_limits_native(
-        df,
-        ruleset,
-        relations_col="relations_tags",
-        overrides_col="overrides",
-        dedup_inputs=True,
-    )
-    assert seen == [2], f"kernel saw cap depths {seen}, wanted [2]"
-    got = out.collect()[0]["speed_limit"]
-    exp = LegalDefaultSpeedsEngine(ruleset=ruleset).get_speed_limits(
-        "ZA", {"highway": "motorway"}
-    )
-    assert (got.road_type_name, got.tags, got.certitude) == (
-        exp.road_type_name, exp.tags, exp.certitude
-    )
+    cases = [
+        ("ZA", {"highway": "motorway", "maxspeed": "60"}, None, None),
+        ("ZA", {"highway": "motorway", "maxspeed": "100"}, None, None),
+        ("ZA", {"highway": "motorway"}, None, None),
+    ]
+    engine = LegalDefaultSpeedsEngine(ruleset=ruleset)
+    expected = _expected(engine, cases)
+    assert "maxspeed:hgv:conditional" not in expected[0][1]
+    assert "maxspeed:hgv:conditional" in expected[1][1]
+    _check(_run_native(spark, ruleset, cases), expected)
 
 
 def test_native_replaces_existing_result_col(spark):

@@ -1,10 +1,8 @@
-"""Spark operator tests: the inference operator's dedup plan and
-null-relation handling must agree with the pure-Python reference engine
-row-for-row (differential oracle), and the native Column compiler must
-agree with the AST evaluator. The operator's main differentials live in
-test_native_cascade.py."""
-
-import os
+"""Spark operator tests: the inference operator's per-name predicates
+and null-relation handling must agree with the pure-Python reference
+engine row-for-row (differential oracle), and the native Column compiler
+must agree with the AST evaluator. The operator's main differentials
+live in test_native_cascade.py."""
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -26,7 +24,6 @@ from osm_legal_default_speeds_spark import (
 from osm_legal_default_speeds_spark.functions.sql_exprs import (
     filter_to_column,
     number_with_unit_to_double,
-    road_type_match_column,
 )
 from osm_legal_default_speeds_spark.functions.tagfilter_parser import parse_tag_filter
 from osm_legal_default_speeds_spark.functions.units import parse_number_with_unit
@@ -34,10 +31,6 @@ from osm_legal_default_speeds_spark.plans.native_cascade import (
     infer_speed_limits_native,
     is_relevant_tag_key_col,
     prune_relevant_tags,
-)
-from osm_legal_default_speeds_spark.sources.rules_json import (
-    REFERENCE_DATASET_PATH,
-    load_rules_json,
 )
 
 INPUT_SCHEMA = StructType(
@@ -254,33 +247,42 @@ def test_native_unit_parse_matches_python(spark):
             assert r["d"] == pytest.approx(expected, abs=1e-12), f"{r['v']!r}"
 
 
-def test_native_road_type_match_column(spark):
-    """road_type_match_column (inlined placeholders, relation exists,
-    overrides) == engine filtersMatch for the ZA fixture."""
-    road_types, rules = za_defs()
-    ruleset = compile_ruleset(road_types, rules)
+def test_native_road_type_predicates_match_engine(spark):
+    """The hoisted kernel's per-name predicates (hoisted placeholder
+    columns, relation exists, overrides) == engine filtersMatch for the
+    ZA fixture. One country per road-type name, whose only rule is that
+    name with empty tags: the name matches exactly iff certitude is
+    Exact, and fuzzily iff it is Exact or Fuzzy."""
+    road_types, _ = za_defs()
+    names = list(road_types)
+    ruleset = compile_ruleset(
+        road_types,
+        {f"X{k}": [RoadTypeDef(name, {})] for k, name in enumerate(names)},
+    )
     engine = LegalDefaultSpeedsEngine(ruleset=ruleset)
 
     rows = [
         Row(
-            road_id=f"r{i}",
-            country_code=cc,
+            road_id=f"r{i}_{k}",
+            country_code=f"X{k}",
             tags=t,
             relations_tags=rel,
             overrides=ovr,
         )
-        for i, (cc, t, rel, ovr) in enumerate(ZA_CASES)
+        for i, (_, t, rel, ovr) in enumerate(ZA_CASES)
+        for k in range(len(names))
     ]
     df = spark.createDataFrame(rows, INPUT_SCHEMA)
-    names = list(road_types)
-    sel = [
-        road_type_match_column(
-            ruleset, name, "tags", "relations_tags", fuzzy, "overrides"
-        ).alias(f"m{k}_{int(fuzzy)}")
-        for k, name in enumerate(names)
-        for fuzzy in (False, True)
-    ]
-    got = {r["road_id"]: r for r in df.select("road_id", *sel).collect()}
+    out = infer_speed_limits_native(
+        df, ruleset, relations_col="relations_tags", overrides_col="overrides"
+    )
+    got = {
+        r["road_id"]: r["cert"]
+        for r in out.select(
+            "road_id", F.col("speed_limit.certitude").alias("cert")
+        ).collect()
+    }
+    matched = {False: {"Exact"}, True: {"Exact", "Fuzzy"}}
 
     for i, (cc, tags, rels, ovr) in enumerate(ZA_CASES):
         for k, name in enumerate(names):
@@ -295,7 +297,7 @@ def test_native_road_type_match_column(spark):
                     (lambda n, ev, _ovr=ovr or {}: _ovr.get(n) if _ovr.get(n) is not None else ev()),
                 )
                 expected = found is not None
-                actual = got[f"r{i}"][f"m{k}_{int(fuzzy)}"]
+                actual = got[f"r{i}_{k}"] in matched[fuzzy]
                 assert actual == expected, (cc, tags, rels, ovr, name, fuzzy)
 
 
@@ -338,96 +340,6 @@ def test_prune_and_relevant_key_col(spark):
         "imagination:1": True,
         "{urban}": False,
     }
-
-
-def test_infer_dedup_inputs_identical_results(spark):
-    """The distinct -> infer -> join-back plan must produce exactly the
-    per-row results of the direct plan (cascade purity), including null
-    results, relations, and overrides — and both must equal the
-    pure-Python reference engine."""
-    road_types, rules = za_defs()
-    ruleset = compile_ruleset(road_types, rules)
-    engine = LegalDefaultSpeedsEngine(ruleset=ruleset)
-    rows = [
-        Row(
-            road_id=f"r{i}",
-            country_code=cc,
-            tags=tags,
-            relations_tags=rels,
-            overrides=ovr,
-        )
-        for i, (cc, tags, rels, ovr) in enumerate(ZA_CASES)
-    ]
-    # duplicate every case several times so dedup actually collapses
-    rows = rows + [r.asDict() for r in rows for _ in range(3)]
-    rows = [Row(**r) if isinstance(r, dict) else r for r in rows]
-    df = spark.createDataFrame(rows, INPUT_SCHEMA).repartition(4)
-
-    kw = dict(relations_col="relations_tags", overrides_col="overrides")
-    direct = infer_speed_limits_native(df, ruleset, **kw)
-    dedup = infer_speed_limits_native(df, ruleset, dedup_inputs=True, **kw)
-
-    def norm(out):
-        return sorted(
-            (
-                r["road_id"],
-                None
-                if r["speed_limit"] is None
-                else (
-                    r["speed_limit"].road_type_name,
-                    tuple(sorted((r["speed_limit"].tags or {}).items())),
-                    r["speed_limit"].certitude,
-                ),
-            )
-            for r in out.collect()
-        )
-
-    assert norm(direct) == norm(dedup)
-
-    # every copy of case i carries road_id r{i}
-    expected = _expected(engine, ZA_CASES)
-    for road_id, got in norm(dedup):
-        exp = expected[int(road_id[1:])]
-        if exp is not None:
-            exp = (exp[0], tuple(sorted(exp[1].items())), exp[2])
-        assert got == exp, road_id
-
-
-def test_infer_dedup_inputs_full_dataset(spark):
-    """Dedup plan == direct plan over the full 1206-rule dataset on
-    driver-derived roads (no relations/overrides columns)."""
-    if not os.path.exists(REFERENCE_DATASET_PATH):
-        pytest.skip("reference dataset missing")
-    from osm_legal_default_speeds_spark.plans.driver_queries import _roads_df
-
-    _, road_types, speed_limits, _ = load_rules_json(REFERENCE_DATASET_PATH)
-    ruleset = compile_ruleset(road_types, speed_limits)
-    roads = _roads_df(spark, "/root/testdata/sf0.001")
-    ccs = sorted(speed_limits.keys())
-    cc = F.element_at(
-        F.array(*[F.lit(c) for c in ccs]),
-        (F.col("road_id") % len(ccs) + 1).cast("int"),
-    )
-    roads = roads.withColumn("country_code", cc)
-
-    def norm(out):
-        return sorted(
-            (
-                r["road_id"],
-                None
-                if r["speed_limit"] is None
-                else (
-                    r["speed_limit"].road_type_name,
-                    tuple(sorted((r["speed_limit"].tags or {}).items())),
-                    r["speed_limit"].certitude,
-                ),
-            )
-            for r in out.collect()
-        )
-
-    direct = infer_speed_limits_native(roads, ruleset)
-    dedup = infer_speed_limits_native(roads, ruleset, dedup_inputs=True)
-    assert norm(direct) == norm(dedup)
 
 
 def test_knn_indexed_matches_flat_scan(spark):
@@ -582,10 +494,9 @@ def test_equal_area_grid_matches_python_and_equalizes_bands(spark):
 
 def test_null_relation_element_parity(spark):
     """A null ELEMENT inside the relations array (legal in
-    array<map<string,string>>) must be treated as non-matching, on both
-    the per-row and the dedup plan. The cascade's exists() evaluates
-    the null element to null -> coalesced false; the pure engine sees
-    the filtered list."""
+    array<map<string,string>>) must be treated as non-matching. The
+    cascade's exists() evaluates the null element to null -> coalesced
+    false; the pure engine sees the filtered list."""
     road_types, rules = za_defs()
     ruleset = compile_ruleset(road_types, rules)
     engine = LegalDefaultSpeedsEngine(ruleset=ruleset)
@@ -603,47 +514,20 @@ def test_null_relation_element_parity(spark):
         for i, (cc, t, rels, o) in enumerate(cases)
     ]
     df = spark.createDataFrame(rows, INPUT_SCHEMA)
-    kw = dict(relations_col="relations_tags", overrides_col="overrides")
-
-    direct = {r["road_id"]: r["speed_limit"]
-              for r in infer_speed_limits_native(df, ruleset, **kw).collect()}
-    dedup = {r["road_id"]: r["speed_limit"]
-             for r in infer_speed_limits_native(
-                 df, ruleset, dedup_inputs=True, **kw).collect()}
+    out = infer_speed_limits_native(
+        df, ruleset, relations_col="relations_tags", overrides_col="overrides"
+    )
+    direct = {r["road_id"]: r["speed_limit"] for r in out.collect()}
 
     for i, (cc, t, rels, o) in enumerate(cases):
         exp = engine.get_speed_limits(
             cc, t, [m for m in rels if m is not None], overrides=o
         )
-        for got, label in ((direct[f"r{i}"], "direct"), (dedup[f"r{i}"], "dedup")):
-            if exp is None:
-                assert got is None, f"case {i} {label}"
-            else:
-                assert got is not None, f"case {i} {label}"
-                assert got.road_type_name == exp.road_type_name, f"case {i} {label}"
-                assert (got.tags or {}) == exp.tags, f"case {i} {label}"
-                assert got.certitude == exp.certitude, f"case {i} {label}"
-
-
-def test_infer_dedup_replaces_existing_result_col(spark):
-    """dedup_inputs=True must replace a pre-existing result_col in
-    place (same contract as the per-row plan's keep-list) instead of
-    joining back a second identically-named column
-    (AMBIGUOUS_REFERENCE downstream)."""
-    ruleset = compile_ruleset(*za_defs())
-    df = spark.createDataFrame(
-        [("ZA", {"highway": "motorway"}, "stale")],
-        "country_code string, tags map<string,string>, speed_limit string",
-    )
-    out = infer_speed_limits_native(
-        df, ruleset, result_col="speed_limit", dedup_inputs=True
-    )
-    assert out.columns.count("speed_limit") == 1
-    # the name must be selectable (this raises on ambiguity) and carry
-    # the INFERRED struct, not the stale input value
-    row = out.select("speed_limit").collect()[0]
-    exp = LegalDefaultSpeedsEngine(ruleset=ruleset).get_speed_limits(
-        "ZA", {"highway": "motorway"}
-    )
-    assert row["speed_limit"].road_type_name == exp.road_type_name
-    assert row["speed_limit"].certitude == exp.certitude
+        got = direct[f"r{i}"]
+        if exp is None:
+            assert got is None, f"case {i}"
+        else:
+            assert got is not None, f"case {i}"
+            assert got.road_type_name == exp.road_type_name, f"case {i}"
+            assert (got.tags or {}) == exp.tags, f"case {i}"
+            assert got.certitude == exp.certitude, f"case {i}"

@@ -1,13 +1,9 @@
 """Ported from the reference NumberWithUnitParserKtTest.kt:1-78."""
 
-import math
-
-import pandas as pd
 import pytest
 
 from osm_legal_default_speeds_spark.functions.units import (
     parse_number_with_unit,
-    parse_number_with_unit_series,
 )
 
 FT = 0.3048
@@ -94,32 +90,12 @@ def test_no_sign_or_inf():
     assert parse_number_with_unit("nan") is None
 
 
-@pytest.mark.parametrize(
-    "values",
-    [
-        ["30 mph", "60", "", "RO:urban", None, ".5", "5'8\"", "1 bananas", "3.5st", "1 km"],
-        # whitespace forms: the bulk pd.to_numeric path must re-apply
-        # the scalar's first-char guard (" 30" -> None) while keeping
-        # parseDouble's trailing-trim ("30 ", "30\n" -> 30.0)
-        [" 30", "\t30", "30 ", "30\n", "5'8\"\n", "30 mph\n"],
-    ],
-)
-def test_series_matches_scalar(values):
-    got = parse_number_with_unit_series(pd.Series(values, dtype="object"))
-    for v, g in zip(values, got):
-        expected = parse_number_with_unit(v)
-        if expected is None:
-            assert math.isnan(g)
-        else:
-            assert g == expected
-
-
 def test_unicode_whitespace_rejected_like_jvm():
     """The reference's regexes and toDoubleOrNull run on the JVM: \\s
     is ASCII [ \\t\\n\\x0b\\f\\r] and parseDouble rejects U+00A0 — and
     the native Column twin (Spark rlike = JVM regex) already behaves
-    that way, so the Python paths must too or the three engines
-    disagree on wiki-scraped values carrying non-breaking spaces."""
+    that way, so the Python parser must too or the engines disagree on
+    wiki-scraped values carrying non-breaking spaces."""
     assert parse_number_with_unit("30 mph") == pytest.approx(48.28032)
     assert parse_number_with_unit("30\u00a0mph") is None
     assert parse_number_with_unit("30\u00a0") is None
@@ -127,10 +103,3 @@ def test_unicode_whitespace_rejected_like_jvm():
     # the reference's first-char digit/dot guard before any trim
     assert parse_number_with_unit("30 ") == 30.0
     assert parse_number_with_unit(" 30 ") is None
-    got = parse_number_with_unit_series(
-        pd.Series(
-            ["30\u00a0mph", "30\u00a0", "30 mph", "30 "], dtype="object"
-        )
-    )
-    assert math.isnan(got[0]) and math.isnan(got[1])
-    assert got[2] == pytest.approx(48.28032) and got[3] == 30.0
