@@ -26,7 +26,10 @@ The plan shape:
    column per scan slot (≤13 per the shipped dataset). ``min(priority)
    among matches`` then unrolls into a short-circuiting CASE over the
    slots — whole-stage-codegen friendly, no interpreted higher-order
-   function in the match path.
+   function in the match path. The dim is an Arrow-built local
+   relation (``sources.local_table.local_table_df``), so the plan holds
+   its rows and each query's broadcast reads them from a
+   ``LocalTableScan`` instead of unpickling them again.
 4. **Cascade + native result assembly.** Certitude = first non-null of
    Exact / FromMaxSpeed / Fuzzy / Fallback positions
    (``LegalDefaultSpeeds.kt:161-183``); R1-R4 result map algebra
@@ -76,6 +79,7 @@ from osm_legal_default_speeds_spark.plans.rules_compiler import (
     CompiledRuleSet,
     all_placeholder_names,
 )
+from osm_legal_default_speeds_spark.sources.local_table import local_table_df
 
 _EMPTY_TAGS = "map<string,string>"
 
@@ -518,11 +522,11 @@ def _dim_data(
     name_idx: dict[str, int],
     fuzzy_idx: dict[str, int],
 ):
-    """Rows + schema for the broadcast country dim (createDataFrame is
-    done lazily per session by the caller). ``name_idx`` addresses a
-    rule name's exact-stage boolean in the combined match array;
-    ``fuzzy_idx`` its fuzzy-stage boolean (equal to ``name_idx`` for
-    names whose match cannot differ under fuzzy). Each rule also
+    """Rows + schema for the broadcast country dim (the caller builds
+    its Arrow local relation lazily, once per session). ``name_idx``
+    addresses a rule name's exact-stage boolean in the combined match
+    array; ``fuzzy_idx`` its fuzzy-stage boolean (equal to ``name_idx``
+    for names whose match cannot differ under fuzzy). Each rule also
     carries ``ctags`` — its result tags PRE-CAPPED against an empty
     input (the pure-Python kernel runs once per rule on the driver) —
     the runtime fast path for rows whose input cannot alter capping."""
@@ -653,7 +657,7 @@ def infer_speed_limits_native(
     token = bundle["dim_token"]
     dim = dims.get(token)
     if dim is None:
-        dim = spark.createDataFrame(bundle["dim_rows"], bundle["dim_schema"])
+        dim = local_table_df(spark, bundle["dim_rows"], bundle["dim_schema"])
         dims[token] = dim
     out = out.join(
         F.broadcast(dim),

@@ -12,6 +12,11 @@ from osm_legal_default_speeds_spark import (
     LegalDefaultSpeedsEngine,
     compile_ruleset,
 )
+from osm_legal_default_speeds_spark.operators.spatial import (
+    assign_tiles,
+    resolve_jurisdiction,
+)
+from osm_legal_default_speeds_spark.plans.driver_queries import synth_boundaries
 from osm_legal_default_speeds_spark.plans.native_cascade import (
     create_result_tags_native,
     infer_speed_limits_native,
@@ -24,6 +29,7 @@ from osm_legal_default_speeds_spark.sources.rules_json import (
     REFERENCE_DATASET_PATH,
     load_rules_json,
 )
+from tests.test_jurisdiction_scale import assert_broadcasts_are_local
 from tests.test_spark_inference import (
     INPUT_SCHEMA,
     ZA_CASES,
@@ -179,7 +185,9 @@ def test_create_result_tags_native_single_column(spark):
 
 def test_native_cascade_plan_is_map_only(spark):
     """Scale pin: the native plan must contain no Python eval node and
-    no hash-partitioning shuffle — broadcast join + projections only."""
+    no hash-partitioning shuffle — broadcast join + projections only —
+    and every broadcast side, alone and behind the jurisdiction joins,
+    is a local relation held in the plan, never pickled Python rows."""
     road_types, rules = za_defs()
     ruleset = compile_ruleset(road_types, rules)
     rows = [
@@ -194,6 +202,19 @@ def test_native_cascade_plan_is_map_only(spark):
     assert "EvalPython" not in plan  # no Arrow/Batch Python nodes
     assert "Exchange hashpartitioning" not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    assert_broadcasts_are_local(out, 1)
+
+    # behind resolve -> tiles, as the flagship runs it: the PIP index,
+    # the kNN index and the dim are all broadcast from local relations
+    points = spark.createDataFrame(
+        [(1, {"highway": "motorway"}, 10.0, 10.0)],
+        "road_id long, tags map<string,string>, lon double, lat double",
+    )
+    located = assign_tiles(
+        resolve_jurisdiction(points, synth_boundaries()), tile_res=7
+    )
+    flagship = infer_speed_limits_native(located, ruleset, country_col="region_code")
+    assert_broadcasts_are_local(flagship, 3)
 
 
 def test_dim_cache_is_per_session_and_unpinned(spark):
