@@ -408,106 +408,29 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 50,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Duplicate groups from a pair list: ``(node, component)`` where
     ``component`` is the minimum node id reachable through the pair
     graph — the canonical representative real dedup pipelines keep.
 
-    ``algorithm="star"`` (default): alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm). Each round rewires strictly-larger
-    neighbors (large-star) then smaller-or-equal neighbors
-    (small-star) to the minimum of the local neighborhood; converges
-    in O(log n) ROUNDS regardless of graph shape — a path of length
-    10^6 needs ~20 rounds, where per-round min-label propagation needs
-    10^6. Each half-round is one groupBy + one join keyed on node id
-    (scale-out shuffles, AQE splits skew); the edge set shrinks
-    monotonically toward a star forest, so later rounds get cheaper,
-    and the run stops at the first round that reaches one — a
-    near-dup clique after a single round.
-
-    ``algorithm="label"``: iterative min-label propagation (each node
-    takes the min of its neighborhood per round). O(diameter) rounds —
-    fine for dense near-dup clusters, kept as the independent
-    differential twin for the star implementation.
-
-    Both: ``localCheckpoint`` per round to truncate lineage, then one
-    stopping-test action per round (no data collect) — star tests the
-    edges for a star forest, label probes for a changed label. Raises
-    if the loop exits without convergence — silent unconverged labels
-    would be wrong component ids. A self-pair ``(a, a)`` is no
-    duplicate relation and adds no edge: a node paired only with
-    itself gets no row, like any node outside the pair list. Ids of
-    any orderable type (long, string) keep their type in the output.
-    """
-    if algorithm == "star":
-        return _cc_star(pairs, a_col, b_col, max_iterations)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    pairs = pairs.where(F.col(a_col) != F.col(b_col))
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionAll(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .distinct()
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-
-    for it in range(max_iterations):
-        neighbor_min = (
-            edges.join(
-                labels.withColumnRenamed("node", "dst2"),
-                edges["dst"] == F.col("dst2"),
-            )
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        updated = (
-            labels.join(
-                neighbor_min, labels["node"] == neighbor_min["src"], "left"
-            )
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-                (F.coalesce(F.col("nbr_min"), F.col("component"))
-                 < F.col("component")).alias("_changed"),
-            )
-        )
-        updated = updated.localCheckpoint(eager=True)  # truncate lineage
-        changed = updated.where(F.col("_changed")).limit(1).count()
-        labels = updated.drop("_changed")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} "
-        "iterations (pair graph has a longer path than expected); "
-        "raise max_iterations"
-    )
-
-
-def _cc_star(
-    pairs: DataFrame, a_col: str, b_col: str, max_iterations: int
-) -> DataFrame:
-    """Alternating large-star/small-star rounds (see
-    ``connected_components``). Edges are kept oriented large->small
-    (src > dst) between rounds.
+    Alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 — public
+    algorithm); converges in O(log n) ROUNDS regardless of graph shape
+    — a path of length 10^6 needs ~20 rounds, where per-round
+    min-label propagation needs 10^6. Edges are kept oriented
+    large->small (src > dst) between rounds.
 
     large-star(u): every strictly-larger neighbor of u is rewired to
     min(N(u) ∪ {u}). small-star(u): every smaller-or-equal neighbor —
     and u itself — is rewired to that minimum. Both halves are a
-    groupBy(node).min + an equi-join back, nothing else.
+    groupBy(node).min + an equi-join back keyed on node id (scale-out
+    shuffles, AQE splits skew), nothing else; the edge set shrinks
+    monotonically toward a star forest, so later rounds get cheaper.
 
-    Stopping rule: after each round the checkpointed edges are tested
-    for being a star forest — no node is both a src and a dst, and no
-    src has more than one out-edge. Both half-rounds preserve
+    Stopping rule: after each round the edges are ``localCheckpoint``ed
+    (truncating lineage) and tested for being a star forest, in one
+    action that collects no data — no node is both a src and a dst,
+    and no src has more than one out-edge. Both half-rounds preserve
     connectivity (Kiveris et al.), so in a star forest each star is a
     whole component, and since src > dst its centre is the component
     minimum: every edge is already (node, component). A star forest is
@@ -516,7 +439,15 @@ def _cc_star(
     run that reaches one could only repeat it: the test stops on the
     same edges a fixed-point probe would, one round and one probe
     earlier. Near-duplicate clusters are cliques, which the first
-    round already turns into stars."""
+    round already turns into stars.
+
+    Raises ``RuntimeError`` if ``max_iterations`` rounds end without a
+    star forest — silent unconverged labels would be wrong component
+    ids. A self-pair ``(a, a)`` is no duplicate relation and adds no
+    edge: a node paired only with itself gets no row, like any node
+    outside the pair list. Ids of any orderable type (long, string)
+    keep their type in the output.
+    """
     # orient once: (max, min) per pair, drop self-pairs
     edges = (
         pairs.select(
@@ -599,7 +530,7 @@ def _cc_star(
                 roots.select("node", F.col("node").alias("component"))
             )
     raise RuntimeError(
-        f"connected_components(star) did not converge in "
+        "connected_components did not converge in "
         f"{max_iterations} rounds; raise max_iterations"
     )
 

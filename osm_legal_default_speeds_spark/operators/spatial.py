@@ -369,26 +369,77 @@ def boundary_cell_index_df(spark, boundaries: list[RectBoundary], res: int) -> D
     local relation (``local_table_df``): the plan holds the rows, so a
     query that broadcasts the index does not unpickle it again (about
     0.2-0.3 s per query for 6,919 rows at res 6 over 250 boundaries)."""
+    return _cell_index_df(
+        spark, boundaries, res,
+        lambda b: {
+            "priority": b.priority,
+            "region_code": b.region_code,
+            "lon_min": b.lon_min,
+            "lat_min": b.lat_min,
+            "lon_max": b.lon_max,
+            "lat_max": b.lat_max,
+        },
+        _RECT_INDEX_DDL,
+    )
+
+
+def _cell_index_df(spark, boundaries, res: int, candidate, ddl: str) -> DataFrame:
+    """The ``by_cell`` grouping both PIP indexes share: one row per
+    covered cell holding ``candidate(b)`` for every boundary ``b`` that
+    covers it, as an Arrow local relation of schema ``ddl``."""
     by_cell: dict[int, list] = {}
     for b in boundaries:
+        cand = candidate(b)
         for cell in b.covering_cells(res):
-            by_cell.setdefault(cell, []).append(
-                {
-                    "priority": b.priority,
-                    "region_code": b.region_code,
-                    "lon_min": b.lon_min,
-                    "lat_min": b.lat_min,
-                    "lon_max": b.lon_max,
-                    "lat_max": b.lat_max,
-                }
-            )
-    rows = [(cell, cands) for cell, cands in by_cell.items()]
-    return local_table_df(spark, rows, _RECT_INDEX_DDL)
+            by_cell.setdefault(cell, []).append(cand)
+    return local_table_df(spark, list(by_cell.items()), ddl)
 
 
 # --------------------------------------------------------------------------
 # PIP jurisdiction assignment
 # --------------------------------------------------------------------------
+
+def _pip_join(
+    points: DataFrame,
+    boundaries: list,
+    build_index,
+    contains,
+    lon_col: str,
+    lat_col: str,
+    out_col: str,
+    index_res: int,
+    arg: str,
+) -> DataFrame:
+    """The broadcast PIP join both boundary kinds share: cell-index
+    equi-join, ``contains(lon, lat, candidate)`` filter inside the
+    candidate array, (priority, region_code) winner via array_min. An
+    empty ``boundaries`` raises ``ValueError`` naming ``arg`` on the
+    driver: it would give every point a NULL region."""
+    if not boundaries:
+        raise ValueError(
+            f"{arg} is empty; with no boundaries every point's region "
+            "would be NULL"
+        )
+    # the index columns are RENAMED to reserved names before the join:
+    # drop("cell") would otherwise remove a caller's own cell/candidates
+    # column (DataFrame.drop drops every column of that name)
+    idx = F.broadcast(
+        build_index(points.sparkSession, boundaries, index_res)
+        .withColumnRenamed("cell", "__pip_icell")
+        .withColumnRenamed("candidates", "__pip_cands")
+    )
+    lon, lat = F.col(lon_col), F.col(lat_col)
+    pts = points.withColumn("__pip_cell", grid_cell(lon, lat, index_res))
+    joined = pts.join(
+        idx, F.col("__pip_cell") == F.col("__pip_icell"), "left"
+    )
+    winner = F.array_min(
+        F.filter(F.col("__pip_cands"), lambda c: contains(lon, lat, c))
+    )
+    return joined.withColumn(out_col, winner.getField("region_code")).drop(
+        "__pip_icell", "__pip_cands", "__pip_cell"
+    )
+
 
 def assign_jurisdiction(
     points: DataFrame,
@@ -406,33 +457,18 @@ def assign_jurisdiction(
 
     Scale shape: fact side is map-only — one broadcast hash join adding
     one array column, zero row multiplication, zero shuffle, winner
-    selection fully inside codegen'd array expressions.
+    selection fully inside codegen'd array expressions. An empty
+    ``boundaries`` raises ``ValueError`` on the driver.
     """
-    spark = points.sparkSession
-    # the index columns are RENAMED to reserved names before the join:
-    # drop("cell") would otherwise remove a caller's own cell/candidates
-    # column (DataFrame.drop drops every column of that name)
-    idx = F.broadcast(
-        boundary_cell_index_df(spark, boundaries, index_res)
-        .withColumnRenamed("cell", "__pip_icell")
-        .withColumnRenamed("candidates", "__pip_cands")
-    )
-
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    pts = points.withColumn("__pip_cell", grid_cell(lon, lat, index_res))
-
-    joined = pts.join(
-        idx, F.col("__pip_cell") == F.col("__pip_icell"), "left"
-    )
-    contained = lambda c: (  # noqa: E731
-        (lon >= c.getField("lon_min"))
-        & (lon < c.getField("lon_max"))
-        & (lat >= c.getField("lat_min"))
-        & (lat < c.getField("lat_max"))
-    )
-    winner = F.array_min(F.filter(F.col("__pip_cands"), contained))
-    return joined.withColumn(out_col, winner.getField("region_code")).drop(
-        "__pip_icell", "__pip_cands", "__pip_cell"
+    return _pip_join(
+        points, boundaries, boundary_cell_index_df,
+        lambda lon, lat, c: (
+            (lon >= c.getField("lon_min"))
+            & (lon < c.getField("lon_max"))
+            & (lat >= c.getField("lat_min"))
+            & (lat < c.getField("lat_max"))
+        ),
+        lon_col, lat_col, out_col, index_res, "assign_jurisdiction: boundaries",
     )
 
 
@@ -577,9 +613,9 @@ def polygon_cell_index_df(
     """cell -> candidate-polygon array with PACKED VERTEX ARRAYS (the
     broadcast side of the general-PIP join). Same one-array-column,
     zero-row-multiplication shape as the rectangle index."""
-    by_cell: dict[int, list] = {}
-    for p in polygons:
-        cand = {
+    return _cell_index_df(
+        spark, polygons, res,
+        lambda p: {
             "priority": p.priority,
             "region_code": p.region_code,
             "rings": [
@@ -589,11 +625,9 @@ def polygon_cell_index_df(
                 }
                 for ring in p.rings
             ],
-        }
-        for cell in p.covering_cells(res):
-            by_cell.setdefault(cell, []).append(cand)
-    rows = [(cell, cands) for cell, cands in by_cell.items()]
-    return local_table_df(spark, rows, _POLY_INDEX_DDL)
+        },
+        _POLY_INDEX_DDL,
+    )
 
 
 def assign_jurisdiction_polygons(
@@ -609,28 +643,13 @@ def assign_jurisdiction_polygons(
     candidate array, (priority, region_code) winner via array_min.
     Fact side stays map-only — one broadcast hash join, no shuffle, no
     row multiplication; rectangles remain available as the cheaper
-    ``assign_jurisdiction`` fast path."""
-    spark = points.sparkSession
-    # reserved index-column names: see assign_jurisdiction (drop("cell")
-    # would remove a caller's own cell/candidates column)
-    idx = F.broadcast(
-        polygon_cell_index_df(spark, polygons, index_res)
-        .withColumnRenamed("cell", "__pip_icell")
-        .withColumnRenamed("candidates", "__pip_cands")
-    )
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    pts = points.withColumn("__pip_cell", grid_cell(lon, lat, index_res))
-    joined = pts.join(
-        idx, F.col("__pip_cell") == F.col("__pip_icell"), "left"
-    )
-    winner = F.array_min(
-        F.filter(
-            F.col("__pip_cands"),
-            lambda c: point_in_polygon_col(lon, lat, c.getField("rings")),
-        )
-    )
-    return joined.withColumn(out_col, winner.getField("region_code")).drop(
-        "__pip_icell", "__pip_cands", "__pip_cell"
+    ``assign_jurisdiction`` fast path. An empty ``polygons`` raises
+    ``ValueError`` on the driver."""
+    return _pip_join(
+        points, polygons, polygon_cell_index_df,
+        lambda lon, lat, c: point_in_polygon_col(lon, lat, c.getField("rings")),
+        lon_col, lat_col, out_col, index_res,
+        "assign_jurisdiction_polygons: polygons",
     )
 
 
@@ -701,8 +720,8 @@ def knn_cell_index(
     return index
 
 
-# reserved index-column names: see assign_jurisdiction (drop("cell")
-# would remove a caller's own cell/cands column)
+# reserved index-column names: see _pip_join (drop("cell") would
+# remove a caller's own cell/cands column)
 _KNN_INDEX_DDL = (
     "__knn_icell long, __knn_cands array<struct<r:string, "
     "lon_min:double, lat_min:double, lon_max:double, lat_max:double>>"
@@ -1318,7 +1337,6 @@ def within_distance_join(
     right_id: str = "id_b",
     lon: str = "lon",
     lat: str = "lat",
-    res: int | None = None,
     self_pairs: bool = False,
 ) -> DataFrame:
     """All (left row, right row) pairs within planar degree distance
@@ -1343,10 +1361,10 @@ def within_distance_join(
     ids only.
 
     ``self_pairs=True`` treats left/right as the SAME logical table and
-    keeps each unordered pair once (``id_a < id_b``).
+    keeps each unordered pair once (``id_a < id_b``). A radius above
+    180 degrees raises ``ValueError``: no cell is wide enough for it.
     """
-    if res is None:
-        res = within_distance_res(radius)
+    res = within_distance_res(radius)
     if 180.0 / (1 << res) < radius:
         raise ValueError(
             f"cell side at res {res} is smaller than radius {radius}; "
@@ -1389,7 +1407,6 @@ def within_distance_pairs(
     id_col: str = "id",
     lon: str = "lon",
     lat: str = "lat",
-    res: int | None = None,
 ) -> DataFrame:
     """Self-join form of :func:`within_distance_join`: each unordered
     pair of distinct rows within ``radius`` exactly once, as
@@ -1397,7 +1414,7 @@ def within_distance_pairs(
     a = df.select(F.col(id_col).alias("id_a"), lon, lat)
     b = df.select(F.col(id_col).alias("id_b"), lon, lat)
     return within_distance_join(
-        a, b, radius, "id_a", "id_b", lon, lat, res, self_pairs=True
+        a, b, radius, "id_a", "id_b", lon, lat, self_pairs=True
     )
 
 
@@ -1453,7 +1470,6 @@ def snap_to_segments(
     lat0: str = "lat0",
     lon1: str = "lon1",
     lat1: str = "lat1",
-    res: int | None = None,
     fine_res: int | str | None = "auto",
 ) -> DataFrame:
     """Snap each point to the nearest segment STRICTLY within planar
@@ -1524,8 +1540,7 @@ def snap_to_segments(
     fallback's anti-join consume it — recomputing it would double the
     expensive join, and column pruning makes the two subtrees
     non-identical so ReuseExchange cannot be relied on."""
-    if res is None:
-        res = within_distance_res(radius)
+    res = within_distance_res(radius)
     if 180.0 / (1 << res) < radius:
         raise ValueError(
             f"cell side at res {res} is smaller than radius {radius}; "
@@ -1998,110 +2013,6 @@ def haversine_m(
     return 2.0 * EARTH_RADIUS_M * F.asin(F.least(F.sqrt(a), F.lit(1.0)))
 
 
-def within_distance_join_meters(
-    left: DataFrame,
-    right: DataFrame,
-    radius_m: float,
-    left_id: str = "id_a",
-    right_id: str = "id_b",
-    lon: str = "lon",
-    lat: str = "lat",
-    lat_cap: float = 84.0,
-    self_pairs: bool = False,
-    with_dist: bool = True,
-) -> DataFrame:
-    """All (left, right) pairs within ``radius_m`` METERS of great-
-    circle distance: (left_id, right_id[, dist_m]). The Earth-metric
-    twin of :func:`within_distance_join`.
-
-    Candidate generation reuses the degree-cell 1-ring machinery at a
-    res chosen CONSERVATIVELY for the worst case the data allows: the
-    longitude extent of ``radius_m`` grows as 1/cos(lat), so the cell
-    side must cover radius_deg_lat / cos(lat_cap). Rows with |lat| >
-    lat_cap are OUT OF CONTRACT and silently EXCLUDED (a
-    null-propagating guard column nulls their latitude so no pair
-    involving them can pass the distance filter — a row-level raise
-    would force an extra action, and a poleward row must never produce
-    a possibly-incomplete pair list). Pre-assert
-    ``df.where(F.abs(F.col(lat)) > lat_cap).isEmpty()`` upstream if
-    exclusion must be an error. Cap 84 deg covers every inhabited
-    place; the conservative factor is ~10x more candidate cells, all
-    killed by the exact haversine filter. For polar data, run a second
-    pass with a higher cap / coarser res and union.
-
-    The exact predicate is the haversine distance (built-in trig,
-    codegen'd); the candidate stage is the same skinny 9x explode +
-    shuffle-hash equi-join — no cross product, AQE-splittable skew.
-
-    ``with_dist=False`` omits the dist_m column: cross-engine oracles
-    should compare the PAIR SET (a libm 1-ulp difference can flip a
-    printed digit of dist_m, but flips set membership only for pairs
-    within ~1e-9 relative of the radius — measure-zero in practice,
-    impossible in the synthetic fixtures)."""
-    import math
-
-    if not (0.0 < lat_cap < 90.0):
-        raise ValueError("lat_cap must be in (0, 90)")
-    # Exact degree extents of a radius_m great-circle ball for |lat| <=
-    # lat_cap (from a = sin^2(dphi/2) + cos(phi1)cos(phi2)sin^2(dlam/2)
-    # <= sin^2(r/2R)): dphi <= r/R, and sin(dlam/2) <= sin(r/2R)/cos(cap).
-    # The naive r/(R cos cap) underestimates dlam for large r (sin
-    # concavity), so solve the asin exactly.
-    half = math.sin(radius_m / (2.0 * EARTH_RADIUS_M)) / math.cos(
-        math.radians(lat_cap)
-    )
-    if half >= 1.0:
-        raise ValueError(
-            f"radius_m={radius_m} is unbounded in longitude at "
-            f"lat_cap={lat_cap}; raise the cap or split by latitude band"
-        )
-    radius_deg = max(
-        math.degrees(radius_m / EARTH_RADIUS_M),
-        math.degrees(2.0 * math.asin(half)),
-    )
-    res = within_distance_res(radius_deg)
-    cell = grid_cell(F.col(lon), F.col(lat), res)
-
-    def guard(c: Column) -> Column:
-        # null (-> dropped with a clear semantic: out-of-contract row)
-        # if |lat| exceeds the cap the res choice was derived from
-        return F.when(F.abs(c) <= F.lit(lat_cap), c)
-
-    # out-of-contract rows (|lat| > cap) are dropped MAP-SIDE: the
-    # probe's explode yields zero rows for a null ring array and the
-    # build side filters before the exchange — without this they would
-    # still ship 9 probe cells + 1 build row through the shuffle only
-    # to be killed by haversine(NULL) after the join
-    probe = left.select(
-        F.col(left_id).alias("__ida"),
-        F.col(lon).alias("__lona"),
-        guard(F.col(lat)).alias("__lata"),
-        F.explode(
-            F.when(
-                F.abs(F.col(lat)) <= F.lit(lat_cap),
-                neighbor_cells(cell, res, 1),
-            )
-        ).alias("__cell"),
-    )
-    build = right.select(
-        F.col(right_id).alias("__idb"),
-        F.col(lon).alias("__lonb"),
-        guard(F.col(lat)).alias("__latb"),
-        cell.alias("__cell"),
-    ).where(F.col("__latb").isNotNull())
-    pair = probe.hint("shuffle_hash").join(build.hint("shuffle_hash"), "__cell")
-    if self_pairs:
-        pair = pair.where(F.col("__ida") < F.col("__idb"))
-    d = haversine_m(
-        F.col("__lona"), F.col("__lata"), F.col("__lonb"), F.col("__latb")
-    )
-    out = pair.where(d <= F.lit(float(radius_m)))
-    cols = [F.col("__ida").alias(left_id), F.col("__idb").alias(right_id)]
-    if with_dist:
-        cols.append(d.alias("dist_m"))
-    return out.select(*cols)
-
-
 def _grid_cell_rescol(lon: Column, lat: Column, res: Column) -> Column:
     """:func:`grid_cell` with a DATA-DRIVEN res Column. ``pow(2, res)``
     is exact in IEEE double for res <= 20 (the grid cap), so the integer
@@ -2142,7 +2053,7 @@ def _neighbor_cells_rescol(lon: Column, lat: Column, res: Column) -> Column:
     return F.array_distinct(F.filter(F.array(*exprs), lambda c: c.isNotNull()))
 
 
-def within_distance_join_meters_banded(
+def within_distance_join_meters(
     left: DataFrame,
     right: DataFrame,
     radius_m: float,
@@ -2154,18 +2065,26 @@ def within_distance_join_meters_banded(
     self_pairs: bool = False,
     with_dist: bool = True,
 ) -> DataFrame:
-    """Latitude-banded twin of :func:`within_distance_join_meters` —
-    same contract, same pair set, dramatically fewer candidates.
+    """All (left, right) pairs within ``radius_m`` METERS of great-
+    circle distance: (left_id, right_id[, dist_m]). The Earth-metric
+    twin of :func:`within_distance_join`.
 
-    Why: the flat version must size its ONE grid res for the worst
-    latitude the cap allows (the longitude extent of a meter radius
-    grows as 1/cos(lat)), so at lat_cap 84 a 150 km radius forces
-    ~13-degree cells EVERYWHERE and equatorial points drown in
-    candidates the exact filter then kills (measured ~98M candidate
-    pairs for 37.5k points -> 128k true pairs). Banding fixes the
-    mismatch: uniform latitude bands, each bucketed at the finest res
-    that is safe for THAT band's worst latitude (+ the radius), so
-    low-latitude bands run 4 res levels finer.
+    Rows with |lat| > ``lat_cap`` are OUT OF CONTRACT and silently
+    EXCLUDED, map-side before the shuffle (a row-level raise would
+    force an extra action, and a poleward row must never produce a
+    possibly-incomplete pair list); pre-assert
+    ``df.where(F.abs(F.col(lat)) > lat_cap).isEmpty()`` upstream if
+    exclusion must be an error. Cap 84 deg covers every inhabited
+    place; for polar data, run a second pass and union. A radius
+    unbounded in longitude at the cap raises ``ValueError``.
+
+    Candidates: the longitude extent of a meter radius grows as
+    1/cos(lat), so one res sized for the cap would force ~13-degree
+    cells everywhere at 150 km (~98M candidate pairs for 37.5k points
+    -> 128k true pairs). Instead uniform latitude bands are each
+    bucketed at the finest res safe for THAT band's worst latitude
+    (+ the radius), with the exact spherical extent (asin form; the
+    naive r/(R cos lat) under-covers large radii): ~600k candidates.
 
     Correct-capture proof: a pair (a, b) within ``radius_m`` has
     |dphi| <= radius/R =: r_deg degrees, and band_of(lat) =
@@ -2177,18 +2096,19 @@ def within_distance_join_meters_banded(
     band_edge + r_deg, the latitude the band's res was solved for ->
     the 1-ring guarantee holds.
 
-    Plan shape (the part that matters for compile time AND scale): the
-    per-band res is a DATA-DRIVEN lookup — ``element_at(<literal res
-    array>, band + 1)`` feeding :func:`_grid_cell_rescol` — not an
-    unrolled per-band CaseWhen. The first cut unrolled 28 bands x
-    9-cell rings into one expression tree; Catalyst took ~11 s to
-    optimize it and codegen never finished on 2 rows. The lookup
-    version is band-count-independent: a 2 m radius (84 bands) costs
-    the same expression size as 150 km.
+    Plan shape: the per-band res is a DATA-DRIVEN lookup —
+    ``element_at(<literal res array>, band + 1)`` feeding
+    :func:`_grid_cell_rescol` — not an unrolled per-band CaseWhen (28
+    bands x 9-cell rings took Catalyst ~11 s and codegen never
+    finished), so a 2 m radius (84 bands) costs the same expression
+    size as 150 km. The probe explodes <= 2 bands x 9 cells into a
+    (band, cell) shuffle-hash equi-join, AQE-splittable.
 
-    Scale shape: probe explodes <= 2 bands x 9 cells; the join is a
-    (band, cell) equi-join, shuffle-hash hinted, AQE-splittable. Same
-    out-of-contract |lat| > lat_cap exclusion as the flat version."""
+    ``with_dist=False`` omits the dist_m column: cross-engine oracles
+    should compare the PAIR SET (a libm 1-ulp difference can flip a
+    printed digit of dist_m, but flips set membership only for pairs
+    within ~1e-9 relative of the radius — measure-zero in practice,
+    impossible in the synthetic fixtures)."""
     import math
 
     if not (0.0 < lat_cap < 90.0):
@@ -2201,8 +2121,7 @@ def within_distance_join_meters_banded(
         lo = -lat_cap + i * band_w
         hi = min(lo + band_w, lat_cap)
         # every hashed lat (probe or build) is guarded to |lat| <=
-        # lat_cap, so the band's worst-case latitude clamps there —
-        # same radius acceptance envelope as the flat version
+        # lat_cap, so the band's worst-case latitude clamps there
         worst = min(max(abs(lo), abs(hi)) + r_deg_lat, lat_cap)
         half = math.sin(radius_m / (2.0 * EARTH_RADIUS_M)) / math.cos(
             math.radians(worst)
@@ -2840,7 +2759,6 @@ def rebuild_changed_tiles(
     lon1: str = "lon1",
     lat1: str = "lat1",
     clip: bool = False,
-    materialize: bool = True,
     broadcast_dirty: bool = True,
 ) -> DataFrame:
     """Apply a segment changeset to an :func:`encode_vector_tiles`
@@ -2867,15 +2785,14 @@ def rebuild_changed_tiles(
     O(|changeset| + features in dirty tiles); a daily planet diff
     touches a vanishing fraction of 10^12 tiles.
 
-    ``materialize`` (default True): eagerly ``localCheckpoint`` the
-    three changeset-proportional intermediates (per-tile removal sets,
-    per-tile added features, dirty tile ids). The plan references each
-    of them 2-3 times and Spark's exchange reuse is unreliable over
-    RDD-backed sources (see CLAUDE.md), so lazily they re-run their
-    whole supercover/clip explode per reference — measured 4.0 s ->
-    1.0 s on a sf0.1 half-corpus changeset, bit-identical output.
-    Memory is bounded by the changeset by contract. Pass False for a
-    fully-lazy plan (e.g. to compose into a larger optimized query).
+    The three changeset-proportional intermediates (per-tile removal
+    sets, per-tile added features, dirty tile ids) are eagerly
+    ``localCheckpoint``ed. The plan references each of them 2-3 times
+    and Spark's exchange reuse is unreliable over RDD-backed sources
+    (see CLAUDE.md), so lazily they re-run their whole supercover/clip
+    explode per reference — measured 4.0 s -> 1.0 s on a sf0.1
+    half-corpus changeset, bit-identical output. Memory is bounded by
+    the changeset by contract.
 
     ``broadcast_dirty`` (default True): broadcast the dirty tile-id set
     into the two old_tiles joins — right for the contract's small-diff
@@ -2885,7 +2802,7 @@ def rebuild_changed_tiles(
     the broadcast limit."""
     carried, rebuilt, _ = _rebuild_changed_tiles_parts(
         old_tiles, removed_segs, upserted_segs, res, seg_id,
-        lon0, lat0, lon1, lat1, clip, materialize, broadcast_dirty,
+        lon0, lat0, lon1, lat1, clip, broadcast_dirty,
     )
     return carried.unionByName(rebuilt)
 
@@ -2901,7 +2818,6 @@ def rebuild_changed_tiles_delta(
     lon1: str = "lon1",
     lat1: str = "lat1",
     clip: bool = False,
-    materialize: bool = True,
     broadcast_dirty: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """The DELTA form of :func:`rebuild_changed_tiles`: returns
@@ -2923,7 +2839,7 @@ def rebuild_changed_tiles_delta(
     full-table form bit-for-bit."""
     _, rebuilt, dirty = _rebuild_changed_tiles_parts(
         old_tiles, removed_segs, upserted_segs, res, seg_id,
-        lon0, lat0, lon1, lat1, clip, materialize, broadcast_dirty,
+        lon0, lat0, lon1, lat1, clip, broadcast_dirty,
     )
     return rebuilt, dirty
 
@@ -2939,11 +2855,11 @@ def _rebuild_changed_tiles_parts(
     lon1: str,
     lat1: str,
     clip: bool,
-    materialize: bool,
     broadcast_dirty: bool,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared machinery: (carried, rebuilt, dirty) — all lazy, so a
-    caller that ignores ``carried`` never pays its anti-join."""
+    """Shared machinery: (carried, rebuilt, dirty) — lazy past the three
+    checkpointed intermediates, so a caller that ignores ``carried``
+    never pays its anti-join."""
     import pandas as pd
     import struct as _struct
 
@@ -3002,18 +2918,16 @@ def _rebuild_changed_tiles_parts(
     add_per_tile = up_flat.groupBy("tile_id").agg(
         F.collect_list("__f").alias("__add_feats")
     )
-    if materialize:
-        rm_per_tile = rm_per_tile.localCheckpoint()
-        add_per_tile = add_per_tile.localCheckpoint()
+    rm_per_tile = rm_per_tile.localCheckpoint()
+    add_per_tile = add_per_tile.localCheckpoint()
     # dirty derives from the (materialized) aggregates, so the flats
     # are evaluated exactly once each
     dirty = (
         rm_per_tile.select("tile_id")
         .union(add_per_tile.select("tile_id"))
         .distinct()
+        .localCheckpoint()
     )
-    if materialize:
-        dirty = dirty.localCheckpoint()
     # corpus-sized side: scanned, never shuffled (broadcast build side)
     dirty_b = F.broadcast(dirty) if broadcast_dirty else dirty
     dirty_old = old_tiles.select("tile_id", "tile_blob").join(

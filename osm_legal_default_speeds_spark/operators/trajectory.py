@@ -15,16 +15,17 @@ Scale shape (the 100 TB contract):
   test is the map-side rect-index join from ``operators.spatial`` —
   nothing corpus-sized crosses a second exchange.
 
-Determinism discipline (driver-oracle rules, as in
-``within_distance_join_meters``): raw haversine doubles never leave
-the engine. Every cross-engine surface is integer — per-leg
+Determinism discipline (driver-oracle rules, as in the
+``within_pairs_m`` driver query over ``within_distance_join_meters``
+with ``with_dist=False``): raw haversine doubles never leave the
+engine. Every cross-engine surface is integer — per-leg
 ``FLOOR(dist_m)`` BEFORE the sum (an integer sum is exactly
 associative, so the rollup is bit-stable under ANY partitioning or
 aggregation order; flooring after a float sum would not be),
 microsecond ``dt``, floored km/h. A floored value flips only if the
 true value sits within ~1 ulp of an integer boundary, which the
 deterministic fixtures cannot produce (same margin argument as the
-150 km band join's 0.2 mm).
+150 km meter join's 0.2 mm).
 """
 
 from __future__ import annotations

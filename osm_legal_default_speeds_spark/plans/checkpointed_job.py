@@ -88,7 +88,6 @@ def run_checkpointed(
     lineage_id_col: str | None = None,
     fail_after_batches: int | None = None,
     make_batch_df: Callable[[SparkSession, list[int]], DataFrame] | None = None,
-    persist_input: bool = True,
 ) -> dict:
     """Run ``make_df(spark)`` partitioned into ``num_buckets`` buckets
     of ``bucket_expr`` (a SQL expression over the output columns),
@@ -102,13 +101,13 @@ def run_checkpointed(
     ``df.where(pid IN batch)`` per batch recomputes the whole upstream
     pipeline buckets/batch_size times (the scan multiplier flagged at
     4096 buckets / batches of 64 = 64 redundant input scans). Two
-    mechanisms, in preference order:
+    mechanisms:
 
     - ``make_batch_df(spark, buckets)``: caller-provided source-level
       pushdown — when the input layout can prune to the requested
       buckets (e.g. it is already partitioned by a compatible key),
       each batch reads only its own slice and nothing is recomputed.
-    - ``persist_input`` (default): the bucketed DataFrame is persisted
+    - otherwise the bucketed ``make_df`` DataFrame is persisted
       (memory, spilling to disk) on first materialization; later
       batches read the cache. Unpersisted at the end of the run.
 
@@ -122,11 +121,11 @@ def run_checkpointed(
     ).cast("int")
     df = None
     if make_batch_df is None:
-        df = make_df(spark).withColumn(PID_COL, pid_of())
-        if persist_input:
-            from pyspark import StorageLevel
+        from pyspark import StorageLevel
 
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        df = make_df(spark).withColumn(PID_COL, pid_of()).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
 
     done = completed_buckets(output_dir)
     todo = [b for b in range(num_buckets) if b not in done]
@@ -221,7 +220,7 @@ def run_checkpointed(
                 completed.append(b)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        if df is not None and persist_input:
+        if df is not None:
             df.unpersist()
 
     return {"completed": completed, "skipped": skipped, "rows": total_rows}

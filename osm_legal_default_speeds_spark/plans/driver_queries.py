@@ -1719,14 +1719,14 @@ def q_within_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     scattered fixture cannot produce. Oracle: brute-force inequality
     join with the identical haversine expression.
 
-    Runs the latitude-BANDED candidate generator (pair-set-identical to
-    the flat one — pinned by test_banded_matches_flat_on_scatter): per
-    band res cuts the 150 km fixture's candidates ~160x (98M -> ~600k)
-    and the measured sf0.1 time 2.2 -> 1.3 s. wide=True: the probe
-    explode + ring math is an expensive map before the first shuffle."""
+    The operator's latitude-banded candidates (a res per band) cut the
+    150 km fixture's candidates ~160x against one worst-latitude res
+    (98M -> ~600k) and the measured sf0.1 time 2.2 -> 1.3 s. wide=True:
+    the probe explode + ring math is an expensive map before the first
+    shuffle."""
     from osm_legal_default_speeds_spark.operators.sketches import unit_hash
     from osm_legal_default_speeds_spark.operators.spatial import (
-        within_distance_join_meters_banded,
+        within_distance_join_meters,
     )
 
     k = F.col("road_id")
@@ -1741,7 +1741,7 @@ def q_within_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = pts.select(F.col("road_id").alias("id_a"), "lon", "lat")
     b = pts.select(F.col("road_id").alias("id_b"), "lon", "lat")
-    return within_distance_join_meters_banded(
+    return within_distance_join_meters(
         a,
         b,
         HAVERSINE_RADIUS_M,

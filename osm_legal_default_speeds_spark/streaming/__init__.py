@@ -10,7 +10,6 @@ from osm_legal_default_speeds_spark.streaming.delta_store import (  # noqa: F401
 from osm_legal_default_speeds_spark.streaming.inference_maintenance import (  # noqa: F401
     commit_road_batch,
     compact_results_store,
-    expire_result_versions,
     read_current_results,
     read_results_at,
     streaming_inference_maintenance,
@@ -18,7 +17,6 @@ from osm_legal_default_speeds_spark.streaming.inference_maintenance import (  # 
 from osm_legal_default_speeds_spark.streaming.tile_maintenance import (  # noqa: F401
     commit_changeset,
     compact_tile_store,
-    expire_tile_versions,
     read_current_tiles,
     read_tiles_at,
     streaming_tile_maintenance,

@@ -200,9 +200,15 @@ def streaming_rollup_to_parquet(
     sink (no in-place update) can support for aggregations. Windows
     still open when the input drains stay unemitted until later input
     advances the watermark: correct, and pinned by the kill/resume test
-    (``tests/test_streaming.py``), which asserts a killed-and-resumed
-    run commits byte-identical output to an uninterrupted control run
-    with zero reprocessed input rows.
+    (``tests/test_streaming.py``), which asserts a run killed inside a
+    batch and resumed commits byte-identical output to an uninterrupted
+    control run with zero reprocessed input rows.
+
+    Late rows depend on how files group into batches: a crash while
+    the file source plans a batch (its ``sources/0`` log appended, the
+    offset log not yet) makes the resumed query read that file and the
+    next as ONE batch, which meets an older watermark and can keep rows
+    the uninterrupted run drops as late (no row is read twice).
 
     Returns the started StreamingQuery (caller awaits/stops — the
     kill test needs the handle)."""

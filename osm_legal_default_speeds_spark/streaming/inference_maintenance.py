@@ -36,7 +36,6 @@ from osm_legal_default_speeds_spark.streaming.delta_store import (
     commit_delta,
     compact_store,
     current_version,
-    expire_versions,
     guard_stream_binding,
     read_state_at,
 )
@@ -103,12 +102,6 @@ def compact_results_store(
     """Materialize the current delta chain into a new base snapshot
     (delta_store.compact_store)."""
     return compact_store(spark, store_dir, _KEY)
-
-
-def expire_result_versions(store_dir: str) -> list[str]:
-    """Reclaim directories the latest base supersedes
-    (delta_store.expire_versions)."""
-    return expire_versions(store_dir)
 
 
 def commit_road_batch(

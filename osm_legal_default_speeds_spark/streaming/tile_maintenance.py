@@ -22,7 +22,7 @@ the single-writer contract):
   corpus each batch, which at 10^12 tiles makes the write, not the
   compute, the bottleneck;
 - ``compact_tile_store`` bounds the reconstruction chain and
-  ``expire_tile_versions`` reclaims superseded directories (measured
+  ``delta_store.expire_versions`` reclaims superseded directories (measured
   chain-length costs behind the compact_every=16 default: PLANS.md).
 
 At 10^12-tile scale each micro-batch costs O(|changeset| + features in
@@ -48,7 +48,6 @@ from osm_legal_default_speeds_spark.streaming.delta_store import (  # noqa: F401
     commit_delta,
     compact_store,
     current_version,
-    expire_versions,
     guard_stream_binding,
     read_state_at,
     validate_batch_id,
@@ -101,12 +100,6 @@ def compact_tile_store(spark: SparkSession, store_dir: str) -> int | None:
     """Materialize the current delta chain into a new base snapshot and
     advance the BASE pointer (delta_store.compact_store)."""
     return compact_store(spark, store_dir, _KEY)
-
-
-def expire_tile_versions(store_dir: str) -> list[str]:
-    """Reclaim directories the latest base supersedes
-    (delta_store.expire_versions)."""
-    return expire_versions(store_dir)
 
 
 def _apply_changeset_delta(
@@ -187,7 +180,7 @@ def streaming_tile_maintenance(
     chain grows one broadcast-anti-join fold per commit forever
     (cumulative O(N^2) re-reads and an ever-deepening plan), so pass
     None only for short bounded runs that compact manually. Expiry
-    stays manual (:func:`expire_tile_versions`) so lineage retention
+    stays manual (``delta_store.expire_versions``) so lineage retention
     is an operator policy, not a side effect of ingestion.
 
     ``broadcast_dirty``: forwarded to

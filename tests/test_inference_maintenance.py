@@ -24,7 +24,6 @@ from osm_legal_default_speeds_spark.streaming.inference_maintenance import (
     ROAD_CHANGESET_SCHEMA_SEQ,
     commit_road_batch,
     compact_results_store,
-    expire_result_versions,
     read_current_results,
     read_results_at,
     streaming_inference_maintenance,
@@ -32,6 +31,7 @@ from osm_legal_default_speeds_spark.streaming.inference_maintenance import (
 from osm_legal_default_speeds_spark.streaming.delta_store import (
     base_version,
     current_version,
+    expire_versions,
 )
 
 ROAD_SCHEMA = "road_id long, country_code string, tags map<string,string>"
@@ -177,7 +177,7 @@ def test_batch_commit_replay_guard_compact_expire(spark, tmp_path):
     # manual compaction then expiry: the current state survives, the
     # pre-base lineage is reclaimed, expired versions refuse loudly
     assert compact_results_store(spark, store) == 2
-    removed = expire_result_versions(store)
+    removed = expire_versions(store)
     assert removed == ["v0", "v1", "v2"]
     assert _res_map(read_current_results(spark, store)) == _full(spark, 3)
     with pytest.raises(ValueError, match="expired"):
@@ -462,7 +462,7 @@ def test_diff_versions_empty_range_survives_expiry(spark, tmp_path):
         spark, store, batch, 0, _ruleset(), project=_flat,
     )
     assert compact_results_store(spark, store) == 0
-    assert expire_result_versions(store)  # v0 reclaimed
+    assert expire_versions(store)  # v0 reclaimed
     assert not os.path.isdir(os.path.join(store, "v0"))
     d = diff_versions(spark, store, 0, 0, "road_id")
     assert d.columns == ["road_id", "change"]

@@ -288,8 +288,9 @@ def test_within_join_rejects_res_breaking_ring_guarantee(spark):
     )
 
     df = _wd_points(spark)
-    with pytest.raises(ValueError):
-        within_distance_pairs(df, 3.0, res=10)  # cell side 0.176 < 3.0
+    # the derived res 0 has a 180-degree cell side: no ring covers more
+    with pytest.raises(ValueError, match="smaller than radius"):
+        within_distance_pairs(df, 200.0)
     assert within_distance_res(1.0) == 7
     assert within_distance_res(180.0) == 0
     with pytest.raises(ValueError):

@@ -206,13 +206,21 @@ def test_knn_cell_index_ties():
 
 def test_empty_boundaries_fail_on_the_driver(spark):
     """No boundary at all is a caller error named on the driver, not a
-    bare ``min()`` failure from inside the index build."""
+    bare ``min()`` failure from inside the index build nor a NULL
+    region on every row."""
     from osm_legal_default_speeds_spark.operators.spatial import (
+        assign_jurisdiction,
+        assign_jurisdiction_polygons,
         knn_assign_via_index,
         resolve_jurisdiction,
     )
 
     points = spark.createDataFrame([(1, 0.0, 0.0)], "road_id long, lon double, lat double")
-    for fn in (knn_assign_via_index, resolve_jurisdiction):
+    for fn in (
+        assign_jurisdiction,
+        assign_jurisdiction_polygons,
+        knn_assign_via_index,
+        resolve_jurisdiction,
+    ):
         with pytest.raises(ValueError, match="boundaries"):
             fn(points, [])

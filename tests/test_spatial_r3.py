@@ -638,28 +638,29 @@ def test_haversine_join_matches_brute_force(spark):
         within_distance_join_meters,
     )
 
-    pts = _scatter(250, seed=9, lo_lat=-85.0, hi_lat=85.0)
-    df = spark.createDataFrame(pts, "id long, lon double, lat double")
-    a = df.select(F.col("id").alias("id_a"), "lon", "lat")
-    b = df.select(F.col("id").alias("id_b"), "lon", "lat")
-    radius = 400_000.0
-    got = {
-        (r["id_a"], r["id_b"]): r["dist_m"]
-        for r in within_distance_join_meters(
-            a, b, radius, lat_cap=84.0, self_pairs=True
-        ).collect()
-    }
-    want = {}
-    capped = [p for p in pts if abs(p[2]) <= 84.0]
-    for i, (ia, lon1, lat1) in enumerate(capped):
-        for ib, lon2, lat2 in capped[i + 1 :]:
-            d = _hav_py(lon1, lat1, lon2, lat2)
-            if d <= radius:
-                key = (min(ia, ib), max(ia, ib))
-                want[key] = d
-    assert set(got) == set(want) and len(want) > 5
-    for k, d in want.items():
-        assert got[k] == pytest.approx(d, rel=1e-12)
+    # 800 km: several latitude bands probed per point
+    for seed, radius in ((9, 400_000.0), (11, 800_000.0)):
+        pts = _scatter(250, seed=seed, lo_lat=-85.0, hi_lat=85.0)
+        df = spark.createDataFrame(pts, "id long, lon double, lat double")
+        a = df.select(F.col("id").alias("id_a"), "lon", "lat")
+        b = df.select(F.col("id").alias("id_b"), "lon", "lat")
+        got = {
+            (r["id_a"], r["id_b"]): r["dist_m"]
+            for r in within_distance_join_meters(
+                a, b, radius, lat_cap=84.0, self_pairs=True
+            ).collect()
+        }
+        want = {}
+        capped = [p for p in pts if abs(p[2]) <= 84.0]
+        for i, (ia, lon1, lat1) in enumerate(capped):
+            for ib, lon2, lat2 in capped[i + 1 :]:
+                d = _hav_py(lon1, lat1, lon2, lat2)
+                if d <= radius:
+                    key = (min(ia, ib), max(ia, ib))
+                    want[key] = d
+        assert set(got) == set(want) and len(want) > 5, (seed, radius)
+        for k, d in want.items():
+            assert got[k] == pytest.approx(d, rel=1e-12)
 
 
 def test_haversine_known_city_pair(spark):
@@ -710,46 +711,12 @@ def test_haversine_join_high_latitude_and_cap(spark):
     )
 
 
-def test_banded_matches_flat_on_scatter(spark):
-    """The latitude-banded candidate generator must produce the exact
-    pair set (and distances) of the flat one — same contract, fewer
-    candidates. 400 km radius -> multiple bands probed per point."""
-    from osm_legal_default_speeds_spark.operators.spatial import (
-        within_distance_join_meters,
-        within_distance_join_meters_banded,
-    )
-
-    pts = _scatter(250, seed=11, lo_lat=-85.0, hi_lat=85.0)
-    df = spark.createDataFrame(pts, "id long, lon double, lat double")
-    a = df.select(F.col("id").alias("id_a"), "lon", "lat")
-    b = df.select(F.col("id").alias("id_b"), "lon", "lat")
-    total = 0
-    for radius in (400_000.0, 800_000.0):
-        flat = {
-            (r["id_a"], r["id_b"]): r["dist_m"]
-            for r in within_distance_join_meters(
-                a, b, radius, lat_cap=84.0, self_pairs=True
-            ).collect()
-        }
-        band = {
-            (r["id_a"], r["id_b"]): r["dist_m"]
-            for r in within_distance_join_meters_banded(
-                a, b, radius, lat_cap=84.0, self_pairs=True
-            ).collect()
-        }
-        assert set(band) == set(flat)
-        for k, d in flat.items():
-            assert band[k] == d  # identical exact-filter expression
-        total += len(flat)
-    assert total > 5
-
-
 def test_banded_join_high_latitude_band_edges(spark):
     """Pairs straddling a band boundary (lat 6k +- eps at cap 84,
     band_w 6) and high-latitude wide-lon pairs are both captured; the
     out-of-cap point is dropped per contract."""
     from osm_legal_default_speeds_spark.operators.spatial import (
-        within_distance_join_meters_banded,
+        within_distance_join_meters,
     )
 
     df = spark.createDataFrame(
@@ -764,7 +731,7 @@ def test_banded_join_high_latitude_band_edges(spark):
     )
     a = df.select(F.col("id").alias("id_a"), "lon", "lat")
     b = df.select(F.col("id").alias("id_b"), "lon", "lat")
-    rows = within_distance_join_meters_banded(
+    rows = within_distance_join_meters(
         a, b, 200_000.0, lat_cap=84.0, self_pairs=True
     ).collect()
     got = sorted((r["id_a"], r["id_b"]) for r in rows)
@@ -781,7 +748,7 @@ def test_banded_join_property_vs_brute_force(spark):
 
     from osm_legal_default_speeds_spark.operators.spatial import (
         EARTH_RADIUS_M,
-        within_distance_join_meters_banded,
+        within_distance_join_meters,
     )
 
     combos = [
@@ -793,7 +760,7 @@ def test_banded_join_property_vs_brute_force(spark):
         (2_000_000.0, 66.0),
     ]
     for ci, (radius, cap) in enumerate(combos):
-        # same acceptance envelope as the flat join
+        # inside the operator's acceptance envelope
         assert math.sin(radius / (2 * EARTH_RADIUS_M)) / math.cos(
             math.radians(cap)
         ) < 1.0
@@ -819,7 +786,7 @@ def test_banded_join_property_vs_brute_force(spark):
         b = df.select(F.col("id").alias("id_b"), "lon", "lat")
         got = {
             (r["id_a"], r["id_b"])
-            for r in within_distance_join_meters_banded(
+            for r in within_distance_join_meters(
                 a, b, radius, lat_cap=cap, self_pairs=True, with_dist=False
             ).collect()
         }
@@ -833,24 +800,6 @@ def test_banded_join_property_vs_brute_force(spark):
         assert got == want, (radius, cap, len(got), len(want))
 
 
-def test_banded_join_plan_shuffle_hash(spark):
-    from osm_legal_default_speeds_spark.operators.spatial import (
-        within_distance_join_meters_banded,
-    )
-
-    df = spark.createDataFrame(
-        _scatter(50, seed=6), "id long, lon double, lat double"
-    )
-    a = df.select(F.col("id").alias("id_a"), "lon", "lat")
-    b = df.select(F.col("id").alias("id_b"), "lon", "lat")
-    plan = _plan(
-        within_distance_join_meters_banded(a, b, 100_000.0, self_pairs=True)
-    )
-    assert "ShuffledHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_haversine_join_rejects_unbounded_radius(spark):
     from osm_legal_default_speeds_spark.operators.spatial import (
         within_distance_join_meters,
@@ -859,12 +808,6 @@ def test_haversine_join_rejects_unbounded_radius(spark):
     df = spark.createDataFrame([(1, 0.0, 0.0)], "id long, lon double, lat double")
     with pytest.raises(ValueError):
         within_distance_join_meters(df, df, 5_000_000.0, lat_cap=89.9)
-    from osm_legal_default_speeds_spark.operators.spatial import (
-        within_distance_join_meters_banded,
-    )
-
-    with pytest.raises(ValueError):
-        within_distance_join_meters_banded(df, df, 5_000_000.0, lat_cap=89.9)
 
 
 # --------------------------------------------------------------------------

@@ -16,12 +16,14 @@ from pyspark.sql import functions as F
 from osm_legal_default_speeds_spark.operators.spatial import (
     encode_vector_tiles,
 )
+from osm_legal_default_speeds_spark.streaming.delta_store import (
+    expire_versions,
+)
 from osm_legal_default_speeds_spark.streaming.tile_maintenance import (
     base_version,
     commit_changeset,
     compact_tile_store,
     current_version,
-    expire_tile_versions,
     read_current_tiles,
     read_tiles_at,
     streaming_tile_maintenance,
@@ -130,7 +132,7 @@ def test_streaming_maintenance_matches_full_rebuild_per_version(
 def test_compaction_and_expiry(spark, tmp_path):
     """compact_tile_store materializes the chain into a base snapshot
     (state bit-identical before/after), new commits fold from the base,
-    and expire_tile_versions reclaims exactly the superseded dirs while
+    and expire_versions reclaims exactly the superseded dirs while
     the current state keeps serving."""
     src = _stage_changesets(spark, tmp_path, range(1, 3))
     store = str(tmp_path / "store")
@@ -168,7 +170,7 @@ def test_compaction_and_expiry(spark, tmp_path):
         spark, 3
     )
 
-    removed = expire_tile_versions(store)
+    removed = expire_versions(store)
     assert sorted(removed) == ["v0", "v1"]  # superseded by base-1
     assert not os.path.exists(f"{store}/v0")
     assert os.path.isdir(f"{store}/base-1") and os.path.isdir(f"{store}/v2")

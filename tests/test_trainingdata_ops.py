@@ -615,9 +615,9 @@ def test_train_codebook_init_filter_matches_sort(vectors):
 def test_connected_components_star_long_chain(spark):
     """The O(log n)-round star algorithm must converge on a path graph
     far longer than the round cap that would defeat per-round label
-    propagation (judge r02 item 4); labels must match union-find.
-    The label-prop variant on the same graph must raise rather than
-    return wrong labels."""
+    propagation (judge r02 item 4); labels must match union-find. Too
+    few rounds for the same graph must raise rather than return wrong
+    labels."""
     from osm_legal_default_speeds_spark.operators.dedup import (
         connected_components,
     )
@@ -635,32 +635,7 @@ def test_connected_components_star_long_chain(spark):
     assert got == {i: 0 for i in range(n + 1)}
 
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, algorithm="label", max_iterations=20)
-
-
-def test_connected_components_star_matches_label_prop(spark):
-    """Differential: star and label-prop must agree exactly on a mixed
-    multi-component graph (both against union-find)."""
-    from osm_legal_default_speeds_spark.operators.dedup import (
-        connected_components,
-    )
-
-    pairs = [
-        (5, 9), (9, 2), (2, 7),          # chain with shuffled ids
-        (100, 101), (101, 102), (100, 102), (102, 103),
-        (50, 51),
-        (60, 61), (60, 62), (60, 63), (63, 64),
-    ]
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    star = {
-        r["node"]: r["component"]
-        for r in connected_components(df, algorithm="star").collect()
-    }
-    label = {
-        r["node"]: r["component"]
-        for r in connected_components(df, algorithm="label").collect()
-    }
-    assert star == label == _uf_components(pairs)
+        connected_components(df, max_iterations=1)
 
 
 def test_near_dup_self_joins_reuse_exchange_no_broadcast(spark, tmp_path):
@@ -722,10 +697,10 @@ def test_connected_components_star_randomized_differential(spark):
         assert got == _uf_components(pairs), f"seed {seed}"
 
 
-def _cc(df, algorithm):
+def _cc(df):
     return {
         r["node"]: r["component"]
-        for r in connected_components(df, algorithm=algorithm).collect()
+        for r in connected_components(df).collect()
     }
 
 
@@ -765,28 +740,39 @@ _CC_CASES = {
     # and a dst, yet 5 hangs off two centres, so the out-degree half of
     # the star-forest test must send it to another round
     "leaf_with_two_centres": [(1, 7), (7, 5), (5, 8), (8, 2)],
+    # a shuffled-id chain, a triangle with a tail, a pair and a star
+    # with a tail
+    "mixed_shapes": [
+        (5, 9), (9, 2), (2, 7),
+        (100, 101), (101, 102), (100, 102), (102, 103),
+        (50, 51),
+        (60, 61), (60, 62), (60, 63), (63, 64),
+    ],
 }
 
 
-@pytest.mark.parametrize("algorithm", ["star", "label"])
-@pytest.mark.parametrize("case", sorted(_CC_CASES))
-def test_connected_components_cases(spark, case, algorithm):
+# the "-star" id suffix names the (large-star/small-star) algorithm
+@pytest.mark.parametrize(
+    "case", sorted(_CC_CASES), ids=lambda c: f"{c}-star"
+)
+def test_connected_components_cases(spark, case):
     pairs = _CC_CASES[case]
     id_type = "string" if isinstance(pairs[0][0], str) else "long"
     df = spark.createDataFrame(pairs, f"id_a {id_type}, id_b {id_type}")
-    assert _cc(df, algorithm) == _uf_components(pairs)
+    assert _cc(df) == _uf_components(pairs)
 
 
-@pytest.mark.parametrize("algorithm", ["star", "label"])
-@pytest.mark.parametrize("id_type", ["long", "string"])
-def test_connected_components_empty_pairs(spark, algorithm, id_type):
+@pytest.mark.parametrize(
+    "id_type", ["long", "string"], ids=lambda t: f"{t}-star"
+)
+def test_connected_components_empty_pairs(spark, id_type):
     df = spark.createDataFrame([], f"id_a {id_type}, id_b {id_type}")
-    out = connected_components(df, algorithm=algorithm)
+    out = connected_components(df)
     id_dtype = df.schema["id_a"].dataType
     assert [(f.name, f.dataType) for f in out.schema] == [
         ("node", id_dtype), ("component", id_dtype),
     ]
-    assert _cc(df, algorithm) == _uf_components([]) == {}
+    assert _cc(df) == _uf_components([]) == {}
 
 
 def test_cc_star_clique_stops_after_one_round(spark, monkeypatch):
@@ -808,7 +794,7 @@ def test_cc_star_clique_stops_after_one_round(spark, monkeypatch):
 
         monkeypatch.setattr(cls, name, spy)
 
-    out = connected_components(df, algorithm="star")
+    out = connected_components(df)
     assert calls == {"localCheckpoint": 1, "count": 1}
     monkeypatch.undo()
     assert {r["node"]: r["component"] for r in out.collect()} == {
