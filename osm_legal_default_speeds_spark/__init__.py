@@ -40,8 +40,7 @@ from osm_legal_default_speeds_spark.plans.reference_engine import (  # noqa: F40
 def __getattr__(name):
     # Lazy re-exports of the Spark-dependent surface so importing the
     # package for the pure-Python engine never touches pyspark.
-    if name in ("infer_speed_limits_native", "create_result_tags_native",
-                "stage_result_tags", "prune_relevant_tags",
+    if name in ("infer_speed_limits_native", "prune_relevant_tags",
                 "is_relevant_tag_key_col"):
         from osm_legal_default_speeds_spark.plans import native_cascade
 

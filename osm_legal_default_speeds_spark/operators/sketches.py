@@ -38,6 +38,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 _UNIT_DENOM = float(1 << 60)  # md5 15-hex-digit prefix spans [0, 16^15)
 
@@ -105,14 +106,9 @@ def kmv_distinct(
     available, = min(k, distinct), letting a reader judge the error
     bar). ``partial``: 'arrow' (map-side truncation, production) or
     'column' (all-native twin) — identical results, see module
-    docstring.
-
-    Caveat for FLOAT/DOUBLE group columns: the arrow path's pandas
-    conversion represents both SQL NULL and NaN group keys as float
-    NaN, so if a float group column can contain BOTH, the arrow
-    partials merge them into one group while Spark/DuckDB keep two —
-    use ``partial='column'`` for such keys. (NaN alone is fine: Spark
-    groupBy normalizes NaN to a single value too.)
+    docstring. A FLOAT/DOUBLE group column always takes the column
+    stage 1: pandas holds both SQL NULL and NaN keys as float NaN, so
+    the arrow partials would merge two groups Spark keeps apart.
     """
     if k < 2:
         # the estimator divides (k-1) by the kth smallest hash: k=0
@@ -128,6 +124,11 @@ def kmv_distinct(
     # row in every path, instead of diverging between them
     hashed = df.where(F.col(col).isNotNull()).select(*groups, u, part)
 
+    if partial == "arrow" and any(
+        isinstance(f.dataType, (FloatType, DoubleType))
+        for f in hashed.schema.fields[: len(groups)]
+    ):
+        partial = "column"
     if partial == "arrow":
         stage1 = _kmv_partials_arrow(hashed, groups, k).select(
             *groups, F.col("__u")

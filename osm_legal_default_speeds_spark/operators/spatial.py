@@ -20,10 +20,10 @@ Design notes (scale-first):
   equal-area — cell area shrinks by cos(lat) toward the poles, so
   uniform-on-sphere data loads equatorial tiles ~2x harder at 60 deg
   latitude. Where tile-load uniformity matters, use the exact
-  equal-area variant ``grid_cell_ea`` / ``assign_tiles(...,
-  equal_area=True)`` (Lambert cylindrical bands: uniform in lon x
-  sin(lat)); the salted two-phase rollup absorbs residual skew either
-  way.
+  equal-area cell ``grid_cell_ea`` (Lambert cylindrical bands: uniform
+  in lon x sin(lat)) or ``hex_cell`` in place of ``assign_tiles``'
+  ``grid_cell``; the salted two-phase rollup absorbs residual skew
+  either way.
 - **PIP join.** Boundaries are a small dim table (10^2..10^5 rows):
   precompute each polygon's covering cells at a coarse resolution on
   the driver, explode to a cell->polygon index, **broadcast** it, and
@@ -1086,20 +1086,14 @@ def assign_tiles(
     lat_col: str = "lat",
     tile_res: int = 7,
     tile_col: str = "tile_id",
-    equal_area: bool = False,
-    scheme: str | None = None,
 ) -> DataFrame:
-    """``equal_area=True`` switches to the Lambert equal-area bands
-    (``grid_cell_ea``): recommended for uniform tile load at high
-    latitudes; the default equirectangular grid keeps ids identical to
-    the SQL-portable oracle algebra (parents, k-rings).
-    ``scheme``: explicit selector — 'rect' | 'ea' | 'hex' (the
-    hexagonal equal-area index: exact equal-area AND uniform
-    6-neighborhoods; its own id space). Overrides ``equal_area``."""
-    if scheme is None:
-        scheme = "ea" if equal_area else "rect"
-    cell = {"rect": grid_cell, "ea": grid_cell_ea, "hex": hex_cell}[scheme]
-    return df.withColumn(tile_col, cell(F.col(lon_col), F.col(lat_col), tile_res))
+    """Tile id = the equirectangular ``grid_cell`` at ``tile_res``: ids
+    identical to the SQL-portable oracle algebra (parents, k-rings).
+    Callers wanting equal-area tiles apply ``grid_cell_ea`` or
+    ``hex_cell`` themselves."""
+    return df.withColumn(
+        tile_col, grid_cell(F.col(lon_col), F.col(lat_col), tile_res)
+    )
 
 
 def tile_rollup(

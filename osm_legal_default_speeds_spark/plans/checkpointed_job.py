@@ -33,18 +33,17 @@ buckets is bounded because the bucket key hashes the tile id (hot tiles
 spread across buckets, and within a batch AQE splits oversized
 partitions).
 
-Iceberg mapping (BASELINE.json input_hint names Iceberg; this sandbox
-has parquet only): on a catalog with Iceberg, each batch becomes
-``df.writeTo(table).overwritePartitions()`` and the hand-rolled
-manifest-as-commit-marker protocol is subsumed by Iceberg's atomic
-snapshot commit — ``completed_buckets`` then reads committed partition
-summaries from the table's snapshot metadata instead of the
-``_manifests/`` directory, and the lineage/metrics payload rides the
-snapshot's summary properties. Everything else (bucket derivation,
-batching, resume semantics, source pushdown via ``make_batch_df``)
-is unchanged; this module is the dependency-free equivalent with the
-same crash-consistency contract (a kill between data and marker
-re-processes the bucket, never corrupts it).
+Iceberg mapping (BASELINE.json input_hint names Iceberg):
+``run_checkpointed_iceberg`` runs the SAME bucket loop (bucket
+derivation, the input persisted once per run, batching, the todo and
+skipped sets, resume semantics) and differs only in the per-batch
+commit: ``df.writeTo(table).overwritePartitions()``, whose atomic
+snapshot commit subsumes the manifest-as-commit-marker protocol. The
+committed-bucket set is read from the table's snapshot summaries
+instead of the ``_manifests/`` directory, and the lineage payload
+rides those summaries. Both jobs share one crash-consistency contract:
+a kill between data and commit marker re-processes the bucket, never
+corrupts it.
 """
 
 from __future__ import annotations
@@ -54,7 +53,8 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 MANIFEST_DIR = "_manifests"
 PID_COL = "pid"
@@ -76,6 +76,56 @@ def completed_buckets(output_dir: str) -> set[int]:
     return out
 
 
+def _run_buckets(
+    spark: SparkSession,
+    make_df: Callable[[SparkSession], DataFrame],
+    bucket_expr: str,
+    num_buckets: int,
+    batch_size: int,
+    done: set[int],
+    commit: Callable[[DataFrame, list[int]], int],
+    fail_after_batches: int | None,
+) -> dict:
+    """The bucket loop both jobs share: derive each row's bucket,
+    persist the input, and hand every batch of not-yet-``done`` buckets
+    to ``commit(part, batch)``, which writes the slice, records its
+    commit marker and returns the batch's row count.
+
+    The input is computed ONCE per run, not once per batch: a naive
+    ``df.where(pid IN batch)`` per batch recomputes the whole upstream
+    pipeline buckets/batch_size times (the scan multiplier at 4096
+    buckets / batches of 64 = 64 redundant input scans). So the
+    bucketed ``make_df`` DataFrame is persisted (memory, spilling to
+    disk) on first materialization; later batches read the cache.
+    Unpersisted at the end of the run.
+
+    ``fail_after_batches`` injects a crash after N batches (test hook
+    for the kill/rerun-identical-output invariant)."""
+    df = (
+        make_df(spark)
+        .withColumn(
+            PID_COL,
+            F.pmod(F.hash(F.expr(bucket_expr)), F.lit(num_buckets)).cast("int"),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    todo = [b for b in range(num_buckets) if b not in done]
+    completed: list[int] = []
+    total_rows = 0
+    try:
+        for batch_no, i in enumerate(range(0, len(todo), batch_size)):
+            if fail_after_batches is not None and batch_no >= fail_after_batches:
+                raise RuntimeError(
+                    f"injected failure before batch {batch_no} (test hook)"
+                )
+            batch = todo[i : i + batch_size]
+            total_rows += commit(df.where(F.col(PID_COL).isin(batch)), batch)
+            completed.extend(batch)
+    finally:
+        df.unpersist()
+    return {"completed": completed, "skipped": sorted(done), "rows": total_rows}
+
+
 def run_checkpointed(
     spark: SparkSession,
     make_df: Callable[[SparkSession], DataFrame],
@@ -87,7 +137,6 @@ def run_checkpointed(
     transform_label: str = "pipeline",
     lineage_id_col: str | None = None,
     fail_after_batches: int | None = None,
-    make_batch_df: Callable[[SparkSession, list[int]], DataFrame] | None = None,
 ) -> dict:
     """Run ``make_df(spark)`` partitioned into ``num_buckets`` buckets
     of ``bucket_expr`` (a SQL expression over the output columns),
@@ -95,135 +144,86 @@ def run_checkpointed(
 
     Already-committed buckets (manifest present) are skipped, so a
     killed run resumes where it stopped and the final output is
-    identical to a single uninterrupted run.
-
-    The input is computed ONCE per run, not once per batch: a naive
-    ``df.where(pid IN batch)`` per batch recomputes the whole upstream
-    pipeline buckets/batch_size times (the scan multiplier flagged at
-    4096 buckets / batches of 64 = 64 redundant input scans). Two
-    mechanisms:
-
-    - ``make_batch_df(spark, buckets)``: caller-provided source-level
-      pushdown — when the input layout can prune to the requested
-      buckets (e.g. it is already partitioned by a compatible key),
-      each batch reads only its own slice and nothing is recomputed.
-    - otherwise the bucketed ``make_df`` DataFrame is persisted
-      (memory, spilling to disk) on first materialization; later
-      batches read the cache. Unpersisted at the end of the run.
-
-    ``fail_after_batches`` injects a crash after N batches (test hook
-    for the kill/rerun-identical-output invariant).
+    identical to a single uninterrupted run. The input is computed
+    once per run (``_run_buckets``).
 
     Returns ``{"completed": [...], "skipped": [...], "rows": int}``.
     """
-    pid_of = lambda: F.pmod(  # noqa: E731
-        F.hash(F.expr(bucket_expr)), F.lit(num_buckets)
-    ).cast("int")
-    df = None
-    if make_batch_df is None:
-        from pyspark import StorageLevel
 
-        df = make_df(spark).withColumn(PID_COL, pid_of()).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    def commit(part: DataFrame, batch: list[int]) -> int:
+        t0 = time.monotonic()
+        # lineage fingerprint rides the write as an observation —
+        # one pass, no separate aggregation job
+        obs = None
+        if lineage_id_col is not None:
+            obs = Observation()
+            part = part.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.expr(f"bit_xor(xxhash64({lineage_id_col}))").alias("fp"),
+            )
 
-    done = completed_buckets(output_dir)
-    todo = [b for b in range(num_buckets) if b not in done]
-    skipped = sorted(done)
-    completed: list[int] = []
-    total_rows = 0
+        part.write.mode("overwrite").partitionBy(PID_COL).parquet(output_dir)
+        wall_s = time.monotonic() - t0
+        fingerprint = None
+        if obs is not None:
+            got = obs.get
+            fingerprint = {
+                "input_rows": got["n"],
+                "id_hash_xor": str(got["fp"]),
+            }
+
+        # per-bucket row counts: metadata-only scan of what we
+        # wrote. The explicit schema matters on a FRESH output dir
+        # whose first batch wrote zero rows (only _SUCCESS, no
+        # footers, no partition dirs): schema inference would raise
+        # 'Unable to infer schema for Parquet' and wedge the job on
+        # that batch forever; with the known schema the scan is
+        # simply empty and every bucket records 0 rows.
+        counts = {
+            r[PID_COL]: r["cnt"]
+            for r in spark.read.schema(part.schema)
+            .parquet(output_dir)
+            .where(F.col(PID_COL).isin(batch))
+            .groupBy(PID_COL)
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
+
+        os.makedirs(os.path.join(output_dir, MANIFEST_DIR), exist_ok=True)
+        rows_total = 0
+        for b in batch:
+            rows = int(counts.get(b, 0))
+            rows_total += rows
+            manifest = {
+                "pid": b,
+                "rows": rows,
+                "batch_wall_s": round(wall_s, 4),
+                "batch_buckets": batch,
+                "lineage": {
+                    "transform": transform_label,
+                    "inputs": input_paths or [],
+                    "bucket_expr": bucket_expr,
+                    "num_buckets": num_buckets,
+                    "batch_fingerprint": fingerprint,
+                },
+                "app_id": spark.sparkContext.applicationId,
+            }
+            tmp = _manifest_path(output_dir, b) + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(manifest, f, indent=1)
+            os.replace(tmp, _manifest_path(output_dir, b))
+        return rows_total
 
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        batches = [
-            todo[i : i + batch_size] for i in range(0, len(todo), batch_size)
-        ]
-        for batch_no, batch in enumerate(batches):
-            if fail_after_batches is not None and batch_no >= fail_after_batches:
-                raise RuntimeError(
-                    f"injected failure before batch {batch_no} (test hook)"
-                )
-            t0 = time.monotonic()
-            if make_batch_df is not None:
-                part = make_batch_df(spark, batch).withColumn(PID_COL, pid_of())
-                part = part.where(F.col(PID_COL).isin(batch))
-            else:
-                part = df.where(F.col(PID_COL).isin(batch))
-
-            # lineage fingerprint rides the write as an observation —
-            # one pass, no separate aggregation job
-            obs = None
-            if lineage_id_col is not None:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                part = part.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.expr(f"bit_xor(xxhash64({lineage_id_col}))").alias("fp"),
-                )
-
-            (
-                part.write.mode("overwrite")
-                .partitionBy(PID_COL)
-                .parquet(output_dir)
-            )
-            wall_s = time.monotonic() - t0
-            fingerprint = None
-            if obs is not None:
-                got = obs.get
-                fingerprint = {
-                    "input_rows": got["n"],
-                    "id_hash_xor": str(got["fp"]),
-                }
-
-            # per-bucket row counts: metadata-only scan of what we
-            # wrote. The explicit schema matters on a FRESH output dir
-            # whose first batch wrote zero rows (only _SUCCESS, no
-            # footers, no partition dirs): schema inference would raise
-            # 'Unable to infer schema for Parquet' and wedge the job on
-            # that batch forever; with the known schema the scan is
-            # simply empty and every bucket records 0 rows.
-            counts = {
-                r[PID_COL]: r["cnt"]
-                for r in spark.read.schema(part.schema)
-                .parquet(output_dir)
-                .where(F.col(PID_COL).isin(batch))
-                .groupBy(PID_COL)
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
-
-            os.makedirs(os.path.join(output_dir, MANIFEST_DIR), exist_ok=True)
-            for b in batch:
-                rows = int(counts.get(b, 0))
-                total_rows += rows
-                manifest = {
-                    "pid": b,
-                    "rows": rows,
-                    "batch_wall_s": round(wall_s, 4),
-                    "batch_buckets": batch,
-                    "lineage": {
-                        "transform": transform_label,
-                        "inputs": input_paths or [],
-                        "bucket_expr": bucket_expr,
-                        "num_buckets": num_buckets,
-                        "batch_fingerprint": fingerprint,
-                    },
-                    "app_id": spark.sparkContext.applicationId,
-                }
-                tmp = _manifest_path(output_dir, b) + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(manifest, f, indent=1)
-                os.replace(tmp, _manifest_path(output_dir, b))
-                completed.append(b)
+        return _run_buckets(
+            spark, make_df, bucket_expr, num_buckets, batch_size,
+            completed_buckets(output_dir), commit, fail_after_batches,
+        )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        if df is not None:
-            df.unpersist()
-
-    return {"completed": completed, "skipped": skipped, "rows": total_rows}
 
 
 def read_manifests(output_dir: str) -> list[dict]:
@@ -264,53 +264,38 @@ def run_checkpointed_iceberg(
     transform_label: str = "pipeline",
     fail_after_batches: int | None = None,
 ) -> dict:
-    """The module-docstring Iceberg mapping, executable: same bucket
-    derivation/batching/resume semantics as ``run_checkpointed``, but
-    each batch commits via ``writeTo(table).overwritePartitions()`` —
-    Iceberg's atomic snapshot commit replaces the manifest-as-marker
-    protocol (a kill mid-batch leaves the previous snapshot current;
-    nothing to clean up). The committed-bucket set is recovered from
-    each snapshot's summary properties (the lineage/metrics payload
-    rides there too, via the public ``snapshot-property.*`` write
-    options), read back through the ``<table>.snapshots`` metadata
-    table.
+    """The module-docstring Iceberg mapping, executable: the bucket
+    loop of ``run_checkpointed`` (``_run_buckets``), but each batch
+    commits via ``writeTo(table).overwritePartitions()`` — Iceberg's
+    atomic snapshot commit replaces the manifest-as-marker protocol (a
+    kill mid-batch leaves the previous snapshot current; nothing to
+    clean up). The committed-bucket set is recovered from each
+    snapshot's summary properties (the lineage payload rides there
+    too, via the public ``snapshot-property.*`` write options), read
+    back through the ``<table>.snapshots`` metadata table.
 
     ``table`` must be an Iceberg identifier (``catalog.db.name``);
     created partitioned-by-pid on first run. Guard calls with
     ``iceberg_catalog_available``."""
-    pid_of = lambda: F.pmod(  # noqa: E731
-        F.hash(F.expr(bucket_expr)), F.lit(num_buckets)
-    ).cast("int")
-    df = make_df(spark).withColumn(PID_COL, pid_of())
-
-    done = completed_buckets_iceberg(spark, table)
-    todo = [b for b in range(num_buckets) if b not in done]
-    skipped = sorted(done)
-    completed: list[int] = []
+    lineage = {
+        "transform": transform_label,
+        "inputs": input_paths or [],
+        "bucket_expr": bucket_expr,
+        "num_buckets": num_buckets,
+    }
+    # per-batch latency lives here (snapshot summaries are immutable
+    # post-commit, so wall-clock-to-commit cannot ride the snapshot
+    # itself); lineage/buckets/app_id DO ride the snapshot summary and
+    # are recoverable via completed_buckets_iceberg / the .snapshots
+    # metadata table
     batch_stats: list[dict] = []
-    total_rows = 0
 
-    batches = [todo[i : i + batch_size] for i in range(0, len(todo), batch_size)]
-    for batch_no, batch in enumerate(batches):
-        if fail_after_batches is not None and batch_no >= fail_after_batches:
-            raise RuntimeError(
-                f"injected failure before batch {batch_no} (test hook)"
-            )
+    def commit(part: DataFrame, batch: list[int]) -> int:
         t0 = time.monotonic()
-        from pyspark.sql import Observation
-
         obs = Observation()
-        part = df.where(F.col(PID_COL).isin(batch)).observe(
-            obs, F.count(F.lit(1)).alias("n")
-        )
-        lineage = {
-            "transform": transform_label,
-            "inputs": input_paths or [],
-            "bucket_expr": bucket_expr,
-            "num_buckets": num_buckets,
-        }
         writer = (
-            part.writeTo(table)
+            part.observe(obs, F.count(F.lit(1)).alias("n"))
+            .writeTo(table)
             .partitionedBy(F.col(PID_COL))
             .option("snapshot-property.job.buckets", json.dumps(batch))
             .option("snapshot-property.job.lineage", json.dumps(lineage))
@@ -329,7 +314,6 @@ def run_checkpointed_iceberg(
         else:
             writer.using("iceberg").create()
         rows = obs.get["n"]
-        total_rows += rows
         batch_stats.append(
             {
                 "buckets": batch,
@@ -337,19 +321,13 @@ def run_checkpointed_iceberg(
                 "wall_s": round(time.monotonic() - t0, 4),
             }
         )
-        completed.extend(batch)
+        return rows
 
-    return {
-        "completed": completed,
-        "skipped": skipped,
-        "rows": total_rows,
-        # per-batch latency lives here (snapshot summaries are
-        # immutable post-commit, so wall-clock-to-commit cannot ride
-        # the snapshot itself); lineage/buckets/app_id DO ride the
-        # snapshot summary and are recoverable via
-        # completed_buckets_iceberg / the .snapshots metadata table
-        "batches": batch_stats,
-    }
+    out = _run_buckets(
+        spark, make_df, bucket_expr, num_buckets, batch_size,
+        completed_buckets_iceberg(spark, table), commit, fail_after_batches,
+    )
+    return {**out, "batches": batch_stats}
 
 
 def completed_buckets_iceberg(spark: SparkSession, table: str) -> set[int]:

@@ -33,10 +33,10 @@ The plan shape:
 4. **Cascade + native result assembly.** Certitude = first non-null of
    Exact / FromMaxSpeed / Fuzzy / Fallback positions
    (``LegalDefaultSpeeds.kt:161-183``); R1-R4 result map algebra
-   (``:250-304``) is native map expressions (see
-   ``create_result_tags_native``), with a pre-capped-per-rule fast
+   (``:250-304``) is native map expressions staged one cap level per
+   column (``_assembly_columns``), gated by a pre-capped-per-rule fast
    path for inputs that cannot influence capping (the common case —
-   proof in ``_get_bundle``).
+   proof in ``_get_bundle``): fast rows skip the staged algebra.
 
 Scale: map-only — the fact table never shuffles and never crosses into
 Python. Per-row cost is dominated by evaluating the hoisted predicate
@@ -57,7 +57,6 @@ top-level columns but cannot prune inside a MapType.
 from __future__ import annotations
 
 import warnings
-import weakref as _weakref
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
@@ -139,30 +138,6 @@ def _colon_depth(k: Column) -> Column:
     return F.length(k) - F.length(F.replace(k, F.lit(":"), F.lit("")))
 
 
-def _cap_level(m: Column, level: int, parsed: Column) -> Column:
-    """One unrolled recursion level of limitSpeedsTo
-    (LegalDefaultSpeeds.kt:263-304): cap every ``maxspeed:...`` key at
-    exactly ``level`` segments below the root with the running minimum
-    of its parsable ancestor values (the chain min equals the reference
-    recursion's effect because caps only shrink down the chain), prune
-    ``:conditional`` list entries, and drop keys at/over the cap.
-
-    ``parsed`` is the key -> unit-parsed-double map staged ONCE from
-    the merged map (the parse tree is ~400 interpreted nodes; these
-    lambdas run interpreted, so parse-call count dominates). Reading
-    ancestors from the level-0 parse is sound even though earlier
-    levels delete keys: a deleted ancestor's value was >= its own
-    chain cap, and that cap's members are ancestors of this key too,
-    so including the stale value can never lower the chain min below
-    a cap that is present anyway. (A ``:conditional`` value's parse
-    could in principle change after pruning, but a conditional key is
-    never an ancestor — no ``x:conditional:y`` keys exist.)"""
-
-    return _finalize_entries(
-        _cap_level_entries(F.map_entries(m), level, parsed)
-    )
-
-
 def _finalize_entries(entries: Column) -> Column:
     """Entries array -> map, dropping the null-valued (deleted) slots
     the level passes leave behind (deferring the drop avoids a filter +
@@ -173,8 +148,25 @@ def _finalize_entries(entries: Column) -> Column:
 
 
 def _cap_level_entries(entries: Column, level: int, parsed: Column) -> Column:
-    """Array-algebra body of one cap level (see ``_cap_level``):
-    entries-in / entries-out, deleted entries become null-valued.
+    """One unrolled recursion level of limitSpeedsTo
+    (LegalDefaultSpeeds.kt:263-304): cap every ``maxspeed:...`` key at
+    exactly ``level`` segments below the root with the running minimum
+    of its parsable ancestor values (the chain min equals the reference
+    recursion's effect because caps only shrink down the chain), prune
+    ``:conditional`` list entries, and drop keys at/over the cap.
+    Entries-in / entries-out: deleted entries become null-valued.
+
+    ``parsed`` is the key -> unit-parsed-double map staged ONCE from
+    the merged map (the parse tree is ~400 interpreted nodes; these
+    lambdas run interpreted, so parse-call count dominates). Reading
+    ancestors from the level-0 parse is sound even though earlier
+    levels delete keys: a deleted ancestor's value was >= its own
+    chain cap, and that cap's members are ancestors of this key too,
+    so including the stale value can never lower the chain min below
+    a cap that is present anyway. (A ``:conditional`` value's parse
+    could in principle change after pruning, but a conditional key is
+    never an ancestor — no ``x:conditional:y`` keys exist.)
+
     Two array passes per level — pass A stages (cm, pruned) per entry
     (each is referenced multiple times downstream and conditional
     pruning costs one parse per list item), pass B derives the final
@@ -250,70 +242,50 @@ def _cap_level_entries(entries: Column, level: int, parsed: Column) -> Column:
     return F.transform(F.transform(entries, pass_a), pass_b)
 
 
-def create_result_tags_native(
-    input_tags: Column, rule_tags: Column, max_cap_depth: int = 4
-) -> Column:
-    """Native createResultTags (R1-R4, LegalDefaultSpeeds.kt:250-304):
-    merge rule tags with non-implicit input tags (input wins), cap
-    ``maxspeed:*`` subtags/conditionals against the effective maxspeed
-    with per-subkey running minima, then subtract the non-implicit input
-    keys so only *additional* tags remain.
-
-    NOTE: this single-Column form nests each cap level inside the next,
-    which multiplies plan-conversion cost per level — fine for tests and
-    small fixtures. The operator path uses ``stage_result_tags``, which
-    stages every level as its own column (constant-size expressions)."""
-    non_impl = F.map_filter(input_tags, lambda k, v: ~_is_implicit(k, v))
-    merged = F.map_zip_with(
-        rule_tags, non_impl, lambda k, rv, iv: F.coalesce(iv, rv)
-    )
-    parsed = F.transform_values(merged, lambda k, v: _parse(v))
-    m = merged
-    for level in range(1, max_cap_depth + 1):
-        m = _cap_level(m, level, parsed)
-    return F.map_filter(m, lambda k, v: ~F.map_contains_key(non_impl, k))
-
-
 def _assembly_columns(
-    in_tags: str,
-    rule_tags: str,
-    out_col: str,
-    max_cap_depth: int,
-    prefix: str = "__nc_a",
+    in_tags: str, rule_tags: str, out_col: str, max_cap_depth: int
 ) -> list[tuple[str, Column]]:
-    """R1-R4 as an ordered list of (column_name, expression) staging
-    steps over column NAMES — pure expression data, independent of any
-    DataFrame, so it can be compiled once per ruleset and reused."""
-    nimp = f"{prefix}_nimp"
-    pv = f"{prefix}_pv"
+    """R1-R4 (LegalDefaultSpeeds.kt:250-304) as an ordered list of
+    (column_name, expression) staging steps over column NAMES: merge
+    rule tags with non-implicit input tags (input wins), cap
+    ``maxspeed:*`` subtags/conditionals against the effective maxspeed
+    with per-subkey running minima, then subtract the non-implicit
+    input keys so only *additional* tags remain. Each level is staged
+    as its own column, so the planner converts constant-size
+    expressions (the nested form is super-linear in depth) and each
+    level is evaluated once per row (Catalyst does not CSE duplicated
+    subtrees). Pure expression data, independent of any DataFrame, so
+    it is compiled once per ruleset and reused."""
     cols: list[tuple[str, Column]] = [
-        (nimp, F.map_filter(F.col(in_tags), lambda k, v: ~_is_implicit(k, v))),
         (
-            f"{prefix}_m0",
+            "__nc_a_nimp",
+            F.map_filter(F.col(in_tags), lambda k, v: ~_is_implicit(k, v)),
+        ),
+        (
+            "__nc_a_m0",
             F.map_zip_with(
                 F.col(rule_tags),
-                F.col(nimp),
+                F.col("__nc_a_nimp"),
                 lambda k, rv, iv: F.coalesce(iv, rv),
             ),
         ),
-        # every merged value unit-parsed exactly once (see _cap_level)
+        # every merged value unit-parsed exactly once (see
+        # _cap_level_entries)
         (
-            pv,
-            F.transform_values(
-                F.col(f"{prefix}_m0"), lambda k, v: _parse(v)
-            ),
+            "__nc_a_pv",
+            F.transform_values(F.col("__nc_a_m0"), lambda k, v: _parse(v)),
         ),
         # levels operate on the entries ARRAY (deleted entries become
         # null-valued slots); one map rebuild at the very end instead
         # of map_entries + filter + map_from_entries per level
-        (f"{prefix}_e0", F.map_entries(F.col(f"{prefix}_m0"))),
+        ("__nc_a_e0", F.map_entries(F.col("__nc_a_m0"))),
     ]
     for level in range(1, max_cap_depth + 1):
         cols.append(
             (
-                f"{prefix}_e{level}",
+                f"__nc_a_e{level}",
                 _cap_level_entries(
-                    F.col(f"{prefix}_e{level - 1}"), level, F.col(pv)
+                    F.col(f"__nc_a_e{level - 1}"), level, F.col("__nc_a_pv")
                 ),
             )
         )
@@ -321,35 +293,12 @@ def _assembly_columns(
         (
             out_col,
             F.map_filter(
-                _finalize_entries(F.col(f"{prefix}_e{max_cap_depth}")),
-                lambda k, v: ~F.map_contains_key(F.col(nimp), k),
+                _finalize_entries(F.col(f"__nc_a_e{max_cap_depth}")),
+                lambda k, v: ~F.map_contains_key(F.col("__nc_a_nimp"), k),
             ),
         )
     )
     return cols
-
-
-def stage_result_tags(
-    df: DataFrame,
-    input_tags: Column,
-    rule_tags: Column,
-    out_col: str,
-    max_cap_depth: int = 4,
-    prefix: str = "__nc_a",
-) -> DataFrame:
-    """R1-R4 with each step staged as a DataFrame column: every
-    expression the planner converts references the previous level by
-    column name, keeping conversion/optimization cost linear in depth
-    (the nested-Column form is super-linear) and evaluating each level
-    once per row (Catalyst does not CSE duplicated subtrees)."""
-    df = df.withColumns(
-        {f"{prefix}_in": input_tags, f"{prefix}_rt": rule_tags}
-    )
-    for name, col in _assembly_columns(
-        f"{prefix}_in", f"{prefix}_rt", out_col, max_cap_depth, prefix
-    ):
-        df = df.withColumn(name, col)
-    return df
 
 
 # --------------------------------------------------------------------------
@@ -522,8 +471,8 @@ def _dim_data(
     name_idx: dict[str, int],
     fuzzy_idx: dict[str, int],
 ):
-    """Rows + schema for the broadcast country dim (the caller builds
-    its Arrow local relation lazily, once per session). ``name_idx``
+    """Rows + schema for the broadcast country dim (each inference call
+    builds its Arrow local relation from them). ``name_idx``
     addresses a rule name's exact-stage boolean in the combined match
     array; ``fuzzy_idx`` its fuzzy-stage boolean (equal to ``name_idx``
     for names whose match cannot differ under fuzzy). Each rule also
@@ -576,6 +525,14 @@ def _dim_data(
 # --------------------------------------------------------------------------
 # the operator
 # --------------------------------------------------------------------------
+
+def effective_country(ruleset: CompiledRuleSet, cc: Column) -> Column:
+    """Subdivision -> country fallback (F14, LegalDefaultSpeeds.kt:
+    157-159): a code with rules of its own stands; otherwise the part
+    before '-' is the effective country."""
+    known = sorted(ruleset.speed_limits_by_country)
+    return F.when(cc.isin(*known), cc).otherwise(F.split(cc, "-").getItem(0))
+
 
 def _rule_cap_depth(ruleset: CompiledRuleSet) -> int:
     """Deepest ``maxspeed:*`` nesting among RULE output tags. Sound as
@@ -642,23 +599,9 @@ def infer_speed_limits_native(
         bundle["tms"].alias("__nc_tms"),
     )
 
-    # dim cache stored ON the session object, weak-keyed by a
-    # per-bundle token. A module-level session->dim map would leak: the
-    # dim DataFrame strongly references its session, so a value->key
-    # cycle defeats weak keying and pins every session forever. Stored
-    # session-side, the whole cycle (session -> cache -> dim ->
-    # session) is garbage once the session's last external reference
-    # drops, and a bundle evicted from the LRU releases its token,
-    # dropping its dims from all live sessions.
-    dims = spark.__dict__.get("_nc_dim_cache")
-    if dims is None:
-        dims = _weakref.WeakKeyDictionary()
-        spark.__dict__["_nc_dim_cache"] = dims
-    token = bundle["dim_token"]
-    dim = dims.get(token)
-    if dim is None:
-        dim = local_table_df(spark, bundle["dim_rows"], bundle["dim_schema"])
-        dims[token] = dim
+    # built per call from the bundle's rows: the bundle holds no
+    # DataFrame, so nothing here outlives or pins the session
+    dim = local_table_df(spark, bundle["dim_rows"], bundle["dim_schema"])
     out = out.join(
         F.broadcast(dim),
         F.col("__nc_eff") == F.col("__nc_cc"),
@@ -703,14 +646,6 @@ def infer_speed_limits_native(
     return out.select(*keep)
 
 
-class _DimToken:
-    """Weakref-able identity token tying a bundle's cached per-session
-    dim DataFrames to the bundle's lifetime (bare ``object()`` does not
-    support weak references)."""
-
-    __slots__ = ("__weakref__",)
-
-
 _BUNDLE_CACHE: dict = {}
 
 
@@ -747,14 +682,6 @@ def _get_bundle(
     rels = F.col(relations_col) if relations_col is not None else None
     ovr = F.col(overrides_col) if overrides_col is not None else None
 
-    # effective country (F14, LegalDefaultSpeeds.kt:157-159)
-    known = sorted(ruleset.speed_limits_by_country)
-    cc = F.col(country_col)
-    eff = (
-        F.when(cc.isin(*known), cc).otherwise(F.split(cc, "-").getItem(0))
-        if known
-        else F.lit(None).cast("string")
-    )
 
     # one unit-parsed column per distinct numeric-comparison key: the
     # parse tree is ~250 nodes and Catalyst does not CSE duplicates, so
@@ -940,14 +867,13 @@ def _get_bundle(
     )
 
     bundle = {
-        "eff": eff,
+        "eff": effective_country(ruleset, F.col(country_col)),
         "num_batch": num_batch,
         "level_batches": level_batches,
         "m_array": m_array,
         "tms": F.element_at(t, F.lit("maxspeed")),
         "dim_rows": dim_rows,
         "dim_schema": dim_schema,
-        "dim_token": _DimToken(),
         "pos_e": pos_e,
         "pos_f": pos_f,
         "pos_m": pos_m,

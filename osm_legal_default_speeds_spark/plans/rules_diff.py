@@ -42,9 +42,10 @@ import dataclasses
 import hashlib
 import json
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from osm_legal_default_speeds_spark.plans.native_cascade import (
+    effective_country,
     infer_speed_limits_native,
 )
 
@@ -92,21 +93,11 @@ def changed_countries(old_fps: dict[str, str], new_fps: dict[str, str]) -> list[
     return sorted(out)
 
 
-def effective_country_col(raw: Column, known_countries: list[str]) -> Column:
-    """Subdivision → country fallback as a Column (the cascade's F14
-    rule): a code with rules of its own stands; otherwise the part
-    before '-' is the effective country."""
-    return F.when(raw.isin(list(known_countries)), raw).otherwise(
-        F.substring_index(raw, "-", 1)
-    )
-
-
 def reinfer_changed(
     roads: DataFrame,
     old_results: DataFrame,
     new_ruleset,
     changed: list[str],
-    known_countries: list[str],
     id_col: str = "road_id",
     country_col: str = "country_code",
     project=None,
@@ -116,9 +107,9 @@ def reinfer_changed(
     unchanged; re-infer the rest under ``new_ruleset``. ``project``
     maps the raw inference output (input columns + the result struct)
     onto ``old_results``' stored schema — pass the same projection the
-    original job used; None keeps the raw columns. ``known_countries``
-    must be the NEW ruleset's country list — effective-country routing
-    follows the new rules.
+    original job used; None keeps the raw columns. Effective-country
+    routing follows the NEW ruleset's country list (the cascade's own
+    ``effective_country``).
 
     The changed set is a tiny literal IN-list (pushed into the scan),
     so at scale this is a partition-pruned read of the changed
@@ -131,9 +122,9 @@ def reinfer_changed(
     country-keyed rule under the old or the new ruleset, so its result
     (fallback-only inference) cannot change when rules change. Pinned
     by test_incremental_equals_full_recompute's NULL-country row."""
-    eff = effective_country_col(F.col(country_col), known_countries)
+    eff = effective_country(new_ruleset, F.col(country_col))
     # route by the NEW ruleset's effective country AND by the raw code:
-    # a REMOVED subdivision (in changed, absent from known_countries)
+    # a REMOVED subdivision (in changed, absent from the new ruleset)
     # makes its roads fall back to the parent country, which may itself
     # be unchanged — matching only on eff would carry their old
     # (deleted-rules) results over, the stale-correctness bug this

@@ -67,7 +67,7 @@ def drain_to_memory(
     """Drain a bounded stream (Trigger.AvailableNow) into a memory sink
     and return the sink table — ONE definition of the test/oracle drain
     shared by every memory-sink stream in this package (the image
-    drains import it too), so sink options cannot drift per site. The
+    and trajectory drains import it too), so sink options cannot drift per site. The
     memory sink is TEST-ONLY; see ``streaming_event_rollup``'s
     docstring for the production-sink story."""
     q = (

@@ -24,25 +24,13 @@ from osm_legal_default_speeds_spark.payload.images import (
     image_features,
     images_from_ids,
 )
+from osm_legal_default_speeds_spark.streaming.event_rollup import drain_to_memory
 
 
 def read_id_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """File stream of ``(id: long)`` parquet rows (one micro-batch per
     trigger; AvailableNow drains the directory)."""
     return spark.readStream.schema("id long").parquet(src_dir)
-
-
-def _drain_to_memory(
-    spark: SparkSession, df: DataFrame, checkpoint_dir: str, sink_table: str
-) -> DataFrame:
-    """Append-drain a bounded stream into a memory sink — the shared
-    package-wide drain (event_rollup.drain_to_memory), re-exported
-    under the historical name."""
-    from osm_legal_default_speeds_spark.streaming.event_rollup import (
-        drain_to_memory,
-    )
-
-    return drain_to_memory(spark, df, checkpoint_dir, sink_table)
 
 
 def streaming_image_verify(
@@ -57,7 +45,7 @@ def streaming_image_verify(
     verified = decode_and_verify(
         images_from_ids(read_id_stream(spark, src_dir))
     ).select("image_id", "fmt", "pixels_ok", "caption_ok")
-    return _drain_to_memory(spark, verified, checkpoint_dir, sink_table)
+    return drain_to_memory(spark, verified, checkpoint_dir, sink_table)
 
 
 def streaming_image_features(
@@ -72,4 +60,4 @@ def streaming_image_features(
     feats = image_features(
         images_from_ids(read_id_stream(spark, src_dir))
     ).select("image_id", "w", "h", "lum_total", "edge_total")
-    return _drain_to_memory(spark, feats, checkpoint_dir, sink_table)
+    return drain_to_memory(spark, feats, checkpoint_dir, sink_table)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from osm_legal_default_speeds_spark.operators.spatial import RectBoundary
 from osm_legal_default_speeds_spark.operators.trajectory import leg_metrics
+from osm_legal_default_speeds_spark.streaming.event_rollup import drain_to_memory
 
 PINGS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, lon double, lat double"
@@ -150,13 +151,4 @@ def streaming_speeding_legs(
     )
     legs = streaming_trajectory_legs(stream)
     flagged = flag_speeding(legs, boundaries, limits_kmh, index_res=index_res)
-    q = (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink_table)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return drain_to_memory(spark, flagged, checkpoint_dir, sink_table)

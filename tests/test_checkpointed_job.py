@@ -199,42 +199,110 @@ def test_input_scanned_once_per_run(spark, tmp_path):
     assert n_input <= acc.value < int(n_input * 1.5), acc.value
 
 
-def test_make_batch_df_pushdown_receives_buckets(spark, tmp_path):
-    """Source-level pushdown path: each batch asks the caller for just
-    its buckets; union of requests covers exactly the todo set."""
-    requested: list[list[int]] = []
+def test_iceberg_commit_runs_the_shared_bucket_loop(spark, monkeypatch):
+    """The Iceberg job without Iceberg jars: ``writeTo`` is faked by a
+    writer whose commit runs a noop write of the batch, and the table's
+    existence and snapshot read-back are stubbed from what it commits.
+    The first batch creates the table and later ones overwrite
+    partitions, each snapshot carries the job's properties, a resume
+    skips the recorded buckets, and the input is computed once per run
+    (the parquet job's persisted input)."""
+    from pyspark.sql.catalog import Catalog
 
-    def make_batch(spark_, buckets):
-        requested.append(sorted(buckets))
-        from osm_legal_default_speeds_spark.operators.spatial import (
-            assign_tiles,
-        )
-        from osm_legal_default_speeds_spark.plans.driver_queries import (
-            _roads_df,
-        )
+    from osm_legal_default_speeds_spark.plans import checkpointed_job
 
-        roads = _roads_df(spark_, SF_DIR).select("road_id", "lon", "lat")
-        return assign_tiles(roads, tile_res=6)
+    table = "cat.db.ckpt"
+    snapshots: list[dict] = []
 
-    out = str(tmp_path / "pushdown")
-    res = run_checkpointed(
-        spark,
-        _pipeline,
-        out,
-        bucket_expr="tile_id",
-        num_buckets=NUM_BUCKETS,
-        batch_size=3,
-        make_batch_df=make_batch,
+    class FakeWriter:
+        def __init__(self, df):
+            self.df = df
+            self.props = {}
+
+        def partitionedBy(self, *cols):
+            return self
+
+        def option(self, key, value):
+            self.props[key] = value
+            return self
+
+        def using(self, provider):
+            assert provider == "iceberg"
+            return self
+
+        def _commit(self, op):
+            self.df.write.format("noop").mode("overwrite").save()
+            snapshots.append({"op": op, **self.props})
+
+        def create(self):
+            self._commit("create")
+
+        def overwritePartitions(self):
+            self._commit("overwritePartitions")
+
+    def committed(spark_, table_):
+        assert table_ == table
+        return {
+            b
+            for snap in snapshots
+            for b in json.loads(snap["snapshot-property.job.buckets"])
+        }
+
+    # the session's concrete DataFrame class defines its own writeTo
+    monkeypatch.setattr(
+        type(spark.range(1)), "writeTo", lambda df, t: FakeWriter(df)
     )
-    assert sorted(b for req in requested for b in req) == list(range(NUM_BUCKETS))
-    # output identical to the persisted-input plan
-    out2 = str(tmp_path / "persisted")
-    run_checkpointed(
-        spark, _pipeline, out2, bucket_expr="tile_id",
-        num_buckets=NUM_BUCKETS, batch_size=3,
+    monkeypatch.setattr(
+        Catalog, "tableExists", lambda self, t, dbName=None: bool(snapshots)
     )
-    assert _collect_output(spark, out) == _collect_output(spark, out2)
-    assert res["rows"] > 0
+    monkeypatch.setattr(checkpointed_job, "completed_buckets_iceberg", committed)
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(v):
+        acc.add(1)
+        return v
+
+    def make_df(s):
+        # the bucket key reads the counted column, so no filter on it
+        # can run before the count
+        ids = s.range(0, 200, 1, 4).select(counted(F.col("id")).alias("id"))
+        return ids.withColumn("tile_id", F.col("id") * 3)
+
+    kw = dict(
+        bucket_expr="tile_id", num_buckets=NUM_BUCKETS, batch_size=2,
+        input_paths=["in.parquet"], transform_label="tiles",
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        checkpointed_job.run_checkpointed_iceberg(
+            spark, make_df, table, fail_after_batches=2, **kw
+        )
+    first = committed(spark, table)
+    assert len(first) == 4
+    assert [snap["op"] for snap in snapshots] == ["create", "overwritePartitions"]
+
+    acc.value = 0
+    res = checkpointed_job.run_checkpointed_iceberg(spark, make_df, table, **kw)
+    assert res["skipped"] == sorted(first)
+    assert sorted(res["completed"]) == sorted(set(range(NUM_BUCKETS)) - first)
+    assert committed(spark, table) == set(range(NUM_BUCKETS))
+    assert [snap["op"] for snap in snapshots[2:]] == ["overwritePartitions"] * 2
+    assert [b["buckets"] for b in res["batches"]] == [
+        json.loads(snap["snapshot-property.job.buckets"]) for snap in snapshots[2:]
+    ]
+    for snap in snapshots:
+        assert json.loads(snap["snapshot-property.job.lineage"]) == {
+            "transform": "tiles", "inputs": ["in.parquet"],
+            "bucket_expr": "tile_id", "num_buckets": NUM_BUCKETS,
+        }
+        assert snap["snapshot-property.job.app_id"] == (
+            spark.sparkContext.applicationId
+        )
+    # the resumed run wrote every row of its buckets once: 2 batches
+    # over one computation of the 200 input rows, not one per batch
+    assert 0 < res["rows"] < 200
+    assert 200 <= acc.value < 300, acc.value
 
 
 def test_iceberg_smoke_or_skip(spark, tmp_path):

@@ -4,6 +4,7 @@ and its physical plan must be map-only: no Python evaluation nodes and
 no shuffle exchange."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -18,9 +19,7 @@ from osm_legal_default_speeds_spark.operators.spatial import (
 )
 from osm_legal_default_speeds_spark.plans.driver_queries import synth_boundaries
 from osm_legal_default_speeds_spark.plans.native_cascade import (
-    create_result_tags_native,
     infer_speed_limits_native,
-    stage_result_tags,
 )
 from osm_legal_default_speeds_spark.plans.reference_engine import (
     create_result_tags,
@@ -150,37 +149,69 @@ ASSEMBLY_CASES = [
     ),
     # minspeed-style unrelated keys pass through untouched
     ({"maxspeed": "60", "minspeed": "30", "surface": "asphalt"}, {}),
+    # a parsable input root below the rule's caps the rule's subtag
+    ({"maxspeed": "100", "maxspeed:hgv": "80"}, {"maxspeed": "60"}),
 ]
 
 
 def test_native_result_assembly_matches_python(spark):
-    rows = [
-        Row(case_id=i, rule_tags=rt, in_tags=it)
+    """Each case through the operator: one country per case whose only
+    rule is a fallback with the case's rule tags. Every case runs
+    twice: as given (the pre-capped fast path where it applies) and
+    with an input ``maxspeed:zz`` key, which forces the staged R1-R4
+    algebra; both must equal the Python kernel on the same input."""
+    from osm_legal_default_speeds_spark.plans.rules_model import RoadTypeDef
+
+    ruleset = compile_ruleset(
+        {},
+        {f"C{i}": [RoadTypeDef(None, rt)] for i, (rt, _) in enumerate(ASSEMBLY_CASES)},
+    )
+    inputs = [
+        (f"C{i}", rt, variant)
         for i, (rt, it) in enumerate(ASSEMBLY_CASES)
+        for variant in (it, {**it, "maxspeed:zz": "999"})
     ]
     df = spark.createDataFrame(
-        rows,
-        "case_id int, rule_tags map<string,string>, in_tags map<string,string>",
+        [(j, cc, tags) for j, (cc, _, tags) in enumerate(inputs)],
+        "road_id int, country_code string, tags map<string,string>",
     )
-    out = stage_result_tags(
-        df, F.col("in_tags"), F.col("rule_tags"), "result", max_cap_depth=4
-    ).select("case_id", "result")
-    got = {r["case_id"]: r["result"] for r in out.collect()}
-    for i, (rt, it) in enumerate(ASSEMBLY_CASES):
-        assert got[i] == create_result_tags(it, rt), f"case {i}: {rt} / {it}"
+    got = {
+        r["road_id"]: r["speed_limit"]
+        for r in infer_speed_limits_native(df, ruleset).collect()
+    }
+    for j, (_, rt, tags) in enumerate(inputs):
+        assert got[j].certitude == "Fallback", (rt, tags)
+        assert got[j].tags == create_result_tags(tags, rt), (rt, tags)
 
 
-def test_create_result_tags_native_single_column(spark):
-    """The nested single-Column form (used by fixtures/tests) agrees
-    with the staged form on a shallow case."""
-    df = spark.createDataFrame(
-        [({"maxspeed": "60"}, {"maxspeed": "100", "maxspeed:hgv": "80"})],
-        "t map<string,string>, rt map<string,string>",
-    )
-    r = df.select(
-        create_result_tags_native(F.col("t"), F.col("rt"), 2).alias("r")
-    ).collect()[0]["r"]
-    assert r == create_result_tags({"maxspeed": "60"}, {"maxspeed": "100", "maxspeed:hgv": "80"})
+def plan_operators(df) -> list[str]:
+    """Operator names of ``df``'s executed plan, top-down, with ids,
+    codegen stage markers and arguments stripped."""
+    out = []
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        body = re.sub(r"^\*(\(\d+\))? ", "", line.lstrip(" :+-"))
+        out.append(re.match(r"[A-Za-z]+", body).group(0))
+    return out
+
+
+# executed-plan operators of resolve -> tiles -> cascade, top-down
+FLAGSHIP_PLAN_SHAPE = [
+    "AdaptiveSparkPlan",
+    # result struct, winner, first-match positions
+    "Project", "Project", "Project",
+    "BroadcastHashJoin",  # the country dim
+    # match array, hoisted predicates, input tags + effective country
+    "Project", "Project", "Project",
+    "Project",  # kNN region coalesce
+    "BroadcastHashJoin",  # kNN index
+    "Project",  # PIP containment
+    "BroadcastHashJoin",  # PIP index
+    "Project",  # PIP grid cell
+    "Scan",
+    "BroadcastExchange", "LocalTableScan",
+    "BroadcastExchange", "LocalTableScan",
+    "BroadcastExchange", "LocalTableScan",
+]
 
 
 def test_native_cascade_plan_is_map_only(spark):
@@ -215,33 +246,29 @@ def test_native_cascade_plan_is_map_only(spark):
     )
     flagship = infer_speed_limits_native(located, ruleset, country_col="region_code")
     assert_broadcasts_are_local(flagship, 3)
+    # the plan's shape: PIP join, kNN join, tiles and the cascade's
+    # projections, each broadcast from a local relation
+    assert plan_operators(flagship) == FLAGSHIP_PLAN_SHAPE
 
 
-def test_dim_cache_is_per_session_and_unpinned(spark):
-    """The compiled bundle's broadcast-dim DataFrame cache lives ON the
-    session object (weak-keyed by a per-bundle token): the same session
-    reuses its dim, a different session (same-JVM newSession here; a
-    full restart in production) builds its OWN dim instead of reusing a
-    DataFrame bound to a dead/foreign session, and this module adds NO
-    global reference that would pin a dropped session. (A module-level
-    session->dim map cannot do this: the dim DataFrame strongly
-    references its session, so the value->key cycle defeats weak keying
-    and pins every session forever — the design this test replaced.)"""
+def test_inference_does_not_pin_a_dropped_session(spark):
+    """The compiled bundle is cached per rule set but holds no
+    DataFrame: each call builds its broadcast dim on the caller's
+    session. So once PySpark's OWN last-session pins move on
+    (SparkSession._activeSession, set by createDataFrame, and the
+    RDD.toDF monkey-patch closure, both of which hold the most recent
+    session by design), a dropped session that ran an inference is
+    collected with everything it owns."""
     import gc
     import weakref
+
+    from pyspark.sql import DataFrame
 
     from osm_legal_default_speeds_spark.plans.native_cascade import (
         _get_bundle,
     )
 
     ruleset = compile_ruleset(*za_defs())
-    # the SAME bundle cache entry the inference calls below use: keyed
-    # on (ruleset, country/relations/overrides cols)
-    bundle = _get_bundle(
-        ruleset, "country_code", "relations_tags", "overrides"
-    )
-    token = bundle["dim_token"]
-
     rows = [
         Row(
             road_id="r0",
@@ -251,56 +278,27 @@ def test_dim_cache_is_per_session_and_unpinned(spark):
             overrides=None,
         )
     ]
-    df = spark.createDataFrame(rows, INPUT_SCHEMA)
-    infer_speed_limits_native(
-        df, ruleset, relations_col="relations_tags",
-        overrides_col="overrides",
-    ).collect()
-    dims = spark.__dict__.get("_nc_dim_cache")
-    assert dims is not None and token in dims
-    dim_a = dims[token]
-
-    # same session, second run: the dim DataFrame is REUSED
-    infer_speed_limits_native(
-        df, ruleset, relations_col="relations_tags",
-        overrides_col="overrides",
-    ).collect()
-    assert dims[token] is dim_a
-
-    # a NEW session object (same JVM) must get its own entry — a dim
-    # created under another session must never be served to it
     s2 = spark.newSession()
     df2 = s2.createDataFrame(rows, INPUT_SCHEMA)
-    infer_speed_limits_native(
+    out2 = infer_speed_limits_native(
         df2, ruleset, relations_col="relations_tags",
         overrides_col="overrides",
-    ).collect()
-    dims2 = s2.__dict__.get("_nc_dim_cache")
-    assert dims2 is not None and dims2 is not dims
-    assert dims2[token] is not dim_a
-    assert dims[token] is dim_a  # the main session's dim is untouched
+    )
+    assert out2.collect()[0]["speed_limit"] is not None
+    bundle = _get_bundle(ruleset, "country_code", "relations_tags", "overrides")
+    assert not any(isinstance(v, DataFrame) for v in bundle.values())
 
-    # no module-level pin: once PySpark's OWN last-session pins move on
-    # (SparkSession._activeSession, set by createDataFrame, and the
-    # RDD.toDF monkey-patch closure, both of which hold the most recent
-    # session by design), dropping the last external reference to s2
-    # collects the session AND its cached dim — proving the cache adds
-    # no reference of its own
     s2_ref = weakref.ref(s2)
-    dim2_ref = weakref.ref(dims2[token])
-    del df2, dims2, s2
+    out2_ref = weakref.ref(out2)
+    del df2, out2, s2
     _ = spark.newSession()  # steal the RDD.toDF monkey-patch pin
     # reset SparkSession._activeSession back to the main session
     spark.createDataFrame(rows, INPUT_SCHEMA).collect()
     gc.collect()
     assert s2_ref() is None, (
-        "a dropped session survived — the dim cache (or another module "
-        "global) is pinning sessions"
+        "a dropped session survived — a module global is pinning sessions"
     )
-    assert dim2_ref() is None, "a dropped session's dim DataFrame survived"
-
-    # the main session's cache is unaffected by s2's collection
-    assert spark.__dict__["_nc_dim_cache"][token] is dim_a
+    assert out2_ref() is None, "a dropped session's inference output survived"
 
 
 def test_max_cap_depth_reaches_slow_assembly(spark):

@@ -8,7 +8,6 @@ from osm_legal_default_speeds_spark.plans.rules_compiler import compile_ruleset
 from osm_legal_default_speeds_spark.plans.rules_diff import (
     changed_countries,
     country_fingerprints,
-    effective_country_col,
     reinfer_changed,
 )
 from osm_legal_default_speeds_spark.plans.rules_model import (
@@ -65,15 +64,20 @@ def test_fingerprints_detect_rule_and_roadtype_edits():
 
 
 def test_effective_country_fallback(spark):
+    """The cascade's F14 expression, which reinfer_changed routes by."""
+    from osm_legal_default_speeds_spark.plans.native_cascade import (
+        effective_country,
+    )
+
     df = spark.createDataFrame(
         [("ZA",), ("ZA-NC",), ("FR-IDF",), ("DE-BY",), (None,)],
         "country_code string",
     )
-    known = ["ZA", "DE", "FR-IDF"]
+    ruleset = compile_ruleset(_road_types(), _rules())  # ZA, DE, FR-IDF
     got = [
         r["eff"]
         for r in df.select(
-            effective_country_col(F.col("country_code"), known).alias("eff")
+            effective_country(ruleset, F.col("country_code")).alias("eff")
         ).collect()
     ]
     assert got == ["ZA", "ZA", "FR-IDF", "DE", None]
@@ -128,13 +132,11 @@ def test_incremental_equals_full_recompute(spark, roads):
         )
 
     old_results = flat(infer_speed_limits_native(roads, old_rs))
-    known = sorted(new_rules.keys())
     inc = reinfer_changed(
         roads,
         old_results,
         new_rs,
         changed,
-        known,
         project=flat,
     )
     # the incremental path must equal a full recompute under new rules
@@ -175,7 +177,7 @@ def test_empty_change_set_is_pure_carry_over(spark, roads):
     )
     r2 = F.col("speed_limit")
     inc = reinfer_changed(
-        roads, old_results, rs, [], sorted(_rules().keys()),
+        roads, old_results, rs, [],
         project=lambda df: df.select(
             "road_id", "country_code",
             r2.getField("certitude").alias("cert"),
@@ -215,7 +217,7 @@ def test_removed_subdivision_reinfers_under_parent(spark, roads):
 
     old_results = proj(infer_speed_limits_native(roads, old_rs))
     inc = reinfer_changed(
-        roads, old_results, new_rs, changed, sorted(new_rules.keys()),
+        roads, old_results, new_rs, changed,
         project=proj,
     )
     full = proj(infer_speed_limits_native(roads, new_rs))
@@ -348,7 +350,7 @@ def test_composed_road_and_rule_changesets(spark, roads):
     # axis 2: rules changed — needs the NEW corpus for routing
     new_corpus = roads.where(~F.col("road_id").isin([3, 10, 0])).unionByName(upserted)
     step2 = reinfer_changed(
-        new_corpus, step1, new_rs, changed, sorted(new_rules.keys()),
+        new_corpus, step1, new_rs, changed,
         project=flat,
     )
     full = flat(infer_speed_limits_native(new_corpus, new_rs))

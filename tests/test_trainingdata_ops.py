@@ -1115,6 +1115,28 @@ def test_kmv_null_values_and_null_groups(spark):
     assert groups_seen == {"a", None}  # "b" (all nulls) absent, NULL kept
     assert ("a", 2.0, 2) in a and (None, 2.0, 2) in a
 
+    # a DOUBLE group column holding both NULL and NaN keys: three groups
+    # in Spark's own groupBy, so three in the default path too (pandas
+    # holds NULL and NaN alike as NaN). Compared on collected Spark rows,
+    # not through toPandas, which has the same NULL -> NaN conflation.
+    fdf = spark.createDataFrame(
+        [(None, "a"), (float("nan"), "b"), (1.0, "c")], "g double, v string"
+    )
+
+    def key(g):
+        return "NULL" if g is None else "NaN" if math.isnan(g) else g
+
+    want = {
+        (key(r["g"]), float(r["n"]), r["n"])
+        for r in fdf.groupBy("g").agg(F.countDistinct("v").alias("n")).collect()
+    }
+    got = {
+        (key(r["g"]), r["est_distinct"], r["kmv_k"])
+        for r in kmv_distinct(fdf, "v", k=4, group_cols=["g"]).collect()
+    }
+    assert len(want) == 3
+    assert got == want
+
 
 def test_assign_cells_np_duplicate_centroid_boundary_tie(spark):
     """Duplicate centroid vectors whose tie straddles the n-keep cutoff:
