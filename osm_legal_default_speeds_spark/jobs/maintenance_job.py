@@ -19,10 +19,10 @@ travel, base-snapshot compaction every ``--compact-every`` commits,
 exactly-once replay from the checkpoint across job restarts/kills.
 STORE PATH CONTRACT: the ``--tile-store`` / ``--results-store`` paths
 must be POSIX mounts shared between the driver and readers (local disk
-in local mode, NFS under cluster submission) — the store's pointer/
-manifest/lock files use driver-local atomic-rename IO, and the writer
-refuses URI-schemed paths up front (see delta_store's
-``_require_posix_store``).
+in local mode, NFS under cluster submission) that support atomic hard
+links — each version's manifest is published write-once by a
+driver-local create-if-absent link, and the writer refuses URI-schemed
+paths up front (see delta_store's ``_require_posix_store``).
 GC/memory notes: see pipeline_job (must go on the submit command)."""
 
 from __future__ import annotations
@@ -90,7 +90,6 @@ def main(argv: list[str] | None = None) -> None:
                 os.path.join(args.checkpoint, "tiles"),
                 args.tile_store,
                 args.tile_res,
-                available_now=True,
                 compact_every=args.compact_every,
                 broadcast_dirty=not args.bulk,
             )
@@ -116,7 +115,6 @@ def main(argv: list[str] | None = None) -> None:
                 args.results_store,
                 ruleset,
                 project=project,
-                available_now=True,
                 compact_every=args.compact_every,
             )
         )

@@ -20,7 +20,10 @@ Structured Streaming (SURVEY.md §2.9, §7.6):
   mid-batch + rerun is idempotent), then writes one manifest JSON per
   bucket. **Manifest presence is the commit marker**: a bucket with
   data but no manifest is re-processed on resume, so a kill between
-  data-write and manifest-write cannot produce wrong output.
+  data-write and manifest-write cannot produce wrong output. Every
+  commit record goes through :func:`publish_once` (write-once,
+  create-if-absent), which the versioned delta store under
+  ``streaming/`` shares for its version manifests and stream binding.
 - The manifest records lineage (input paths, transform label, input
   row fingerprint) and metrics (row count, batch wall-clock seconds,
   Spark application id), satisfying the per-partition
@@ -51,6 +54,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from collections.abc import Callable
 
 from pyspark import StorageLevel
@@ -62,6 +66,35 @@ PID_COL = "pid"
 
 def _manifest_path(output_dir: str, pid: int) -> str:
     return os.path.join(output_dir, MANIFEST_DIR, f"pid-{pid}.json")
+
+
+def publish_once(path: str, text: str) -> bool:
+    """Publish the commit record ``path`` holding ``text``: True if this
+    call created it, False if ``path`` already existed (another writer
+    published first; its record is left as it was). The text goes to a
+    temp file in the target directory, which is then hard-linked to
+    ``path``: ``link`` is an atomic create-if-absent, so no reader ever
+    sees a partial record and a crash at any step leaves at most a
+    stray dot-named temp file, never a half-written ``path``. Needs a
+    POSIX filesystem with atomic hard links; this is the one place a
+    port to another store (an object store's conditional put) would
+    change."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    fd = os.open(tmp, os.O_WRONLY | os.O_CREAT, 0o666)
+    try:
+        try:
+            data = text.encode()
+            while data:
+                data = data[os.write(fd, data):]
+        finally:
+            os.close(fd)
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
 
 
 def completed_buckets(output_dir: str) -> set[int]:
@@ -209,10 +242,11 @@ def run_checkpointed(
                 },
                 "app_id": spark.sparkContext.applicationId,
             }
-            tmp = _manifest_path(output_dir, b) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, _manifest_path(output_dir, b))
+            # False only if a concurrent run committed the bucket
+            # first: its rows are the same deterministic slice
+            publish_once(
+                _manifest_path(output_dir, b), json.dumps(manifest, indent=1)
+            )
         return rows_total
 
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")

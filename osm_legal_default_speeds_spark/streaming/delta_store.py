@@ -1,18 +1,26 @@
 """Generic versioned DELTA store: the LSM/snapshot commit-log pattern
-(Iceberg/Delta-style) hand-rolled over plain parquet + atomic pointer
-files, factored out of the tile store so every derived table maintained
-from a changeset stream shares one implementation — vector tiles
-(``tile_maintenance.py``) and inference results
+(Iceberg/Delta-style) hand-rolled over plain parquet + write-once
+manifest files, factored out of the tile store so every derived table
+maintained from a changeset stream shares one implementation — vector
+tiles (``tile_maintenance.py``) and inference results
 (``inference_maintenance.py``) today.
 
-Store layout (all committed state is immutable; only pointers move):
+Store layout (nothing is ever rewritten in place; a version exists
+exactly when its manifest does):
 
-- ``v{N}/delta``  — the rows version N changed (new values);
-- ``v{N}/dirty``  — the key set version N touched (single key column;
-  keys absent from the delta are tombstones for removed rows);
-- ``base-{N}``    — a compacted full snapshot at version N;
-- ``CURRENT`` / ``BASE`` — atomically renamed pointer files naming the
-  newest committed version and the newest base snapshot.
+- ``v{N}/<attempt>/delta`` — the rows version N changed (new values);
+- ``v{N}/<attempt>/dirty`` — the key set version N touched (single key
+  column; keys absent from the delta are tombstones for removed rows);
+- ``v{N}/manifest.json`` — version N's commit record: lineage (row
+  counts, tombstones, bytes, commit wall) and the ``attempt``
+  directory holding its tables;
+- ``base-{N}/<attempt>/`` + ``base-{N}/manifest.json`` — a compacted
+  full snapshot at version N and its commit record;
+- ``STREAM_ID`` — the streaming query the store is bound to, if any.
+
+The committed version is the highest N with a published ``v{N}`` or
+``base-{N}`` manifest; the base is the highest published ``base-{N}``.
+Readers only ever open the attempt a manifest names.
 
 Readers reconstruct any committed version by folding the delta chain
 onto the newest base at or below it:
@@ -26,193 +34,130 @@ cadence of 16); ``expire_versions`` reclaims superseded directories,
 split from compaction because retained deltas ARE the time-travel
 lineage.
 
-Exactly-once across crashes: a replayed batch id is detected
-(``CURRENT >= batch_id``) and skipped; a version is never half-visible
-because the pointer rename is atomic and happens last. SINGLE WRITER
-by contract — the commit fence (``_writer_lock``) makes a second
-concurrent writer fail loudly instead of interleaving, the
-dense-version guard rejects stale ids from a lagging writer, and
-readers only follow committed pointers either way.
+Exactly-once across crashes: a commit writes its tables under a fresh
+attempt directory and only then publishes the manifest with
+:func:`~osm_legal_default_speeds_spark.plans.checkpointed_job.publish_once`
+(write-once, create-if-absent — the same helper that commits the
+checkpointed batch job's per-bucket manifests). A replayed batch id is
+detected (a published version ``>= batch_id``) and skipped; a version
+is never half-visible because its manifest arrives complete and last;
+a crashed writer leaves only an unpublished attempt directory, which
+no reader opens and no later commit waits on, so there is no lock to
+reclaim on any host. SINGLE WRITER by contract, enforced by the
+publish: of two writers racing for version N exactly one creates
+``v{N}/manifest.json``, the other raises ``ValueError`` and its attempt
+is never read; the dense-version guard rejects stale ids from a
+lagging writer. A store written by an older release (a ``CURRENT``
+pointer file, or manifests that name no attempt) is refused with a
+re-ingest message, never read as empty or partial.
 
 STORE PATH CONTRACT: ``store_dir`` must be a POSIX path on a
 filesystem shared between the driver and whatever reads the store —
-local disk in local mode, NFS/shared mount under cluster submission.
-The parquet tables inside go through Spark's Hadoop IO, but the
-pointer/manifest/lock files use driver-local ``os`` IO for their
-atomic-rename semantics (Hadoop FS rename is not atomic on object
-stores, which is exactly where a pointer file must not be
-half-visible). A URI-schemed path (``hdfs://``, ``s3a://`` …) would
-silently split the store — parquet in the distributed FS, pointers on
-the driver's disk — so writers refuse it up front
-(:func:`_require_posix_store`). Object-store deployments should
-mount-translate (s3fs/fuse, EFS/Filestore) or keep stores on HDFS-NFS
-gateways.
+local disk in local mode, NFS/shared mount under cluster submission —
+that supports atomic hard links (``link(2)`` failing with EEXIST on an
+existing name). The parquet tables inside go through Spark's Hadoop
+IO, but manifests and the stream binding use driver-local ``os`` IO
+for that create-if-absent link (Hadoop FS has no portable atomic
+create-if-absent on object stores, which is exactly where a commit
+record must not be half-visible or silently overwritten). A
+URI-schemed path (``hdfs://``, ``s3a://`` …) would silently split the
+store — parquet in the distributed FS, manifests on the driver's disk
+— so writers refuse it up front (:func:`_require_posix_store`).
+Object-store deployments should mount-translate (s3fs/fuse,
+EFS/Filestore) or keep stores on HDFS-NFS gateways.
 """
 
 from __future__ import annotations
 
 import contextlib
-import fcntl
 import json
 import os
 import re
 import shutil
-import socket
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from osm_legal_default_speeds_spark.plans.checkpointed_job import (
+    publish_once,
+)
+
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
-_LOCK_NAME = ".writer.lock"
+_MANIFEST = "manifest.json"
 
 
 def _require_posix_store(store_dir: str) -> None:
     """Writers refuse URI-schemed store paths up front (see the STORE
     PATH CONTRACT in the module docstring): parquet would land in the
-    distributed FS while pointers/locks landed on the driver's local
-    disk — a silently split store."""
+    distributed FS while manifests landed on the driver's local disk —
+    a silently split store."""
     if _URI_SCHEME.match(store_dir):
         raise ValueError(
             f"store_dir {store_dir!r} carries a URI scheme: the "
-            "store's pointer/manifest/lock files use driver-local "
-            "POSIX IO for their atomic-rename semantics, so a "
+            "store's manifest files use driver-local POSIX IO for "
+            "their atomic create-if-absent publish, so a "
             "distributed-FS path would split the store (parquet "
-            "remote, pointers local). Point store_dir at a POSIX "
+            "remote, manifests local). Point store_dir at a POSIX "
             "mount shared between driver and readers instead."
         )
 
 
-def _holder_is_stale(holder: str) -> bool:
-    """True iff the recorded holder is a process on THIS host that no
-    longer exists — the one case a restarted job can prove the lock is
-    an orphan without a human. A different host, an unparsable record,
-    or a live pid all read as held (kill(pid, 0) with EPERM means
-    alive-but-foreign, also held)."""
-    m = re.search(r"pid=(\d+) host=(\S+)", holder)
-    if not m or m.group(2) != socket.gethostname():
-        return False
+def _old_layout(store_dir: str) -> ValueError:
+    return ValueError(
+        f"{store_dir} is not a delta-format store of this release: it "
+        f"was written by an older release (a CURRENT pointer file, or "
+        f"version manifests that name no attempt directory) or has "
+        f"been modified externally; re-ingest into a fresh store "
+        f"directory"
+    )
+
+
+def _manifest(store_dir: str, name: str) -> dict | None:
+    """The published commit record of version dir ``name`` (``v{N}``
+    or ``base-{N}``), or None when it has none."""
     try:
-        os.kill(int(m.group(1)), 0)
-        return False
-    except ProcessLookupError:
-        return True
-    except OSError:
-        return False
-
-
-def _reclaim_stale_lock(path: str, observed_holder: str) -> bool:
-    """Remove the commit lock iff it still records a provably-dead
-    same-host holder. Reclaim is serialized through a kernel-backed
-    ``flock`` on a side file — flock needs no staleness protocol of
-    its own (the kernel releases it when the holder dies), so N racing
-    restarts cannot each remove-and-recreate: only the flock winner
-    re-reads the lock UNDER the mutex, re-verifies the holder is still
-    dead, and removes it. A plain rename-aside reclaim has a TOCTOU
-    hole here (loser renames the winner's FRESH lock aside and both
-    enter the critical section). flock-over-NFS caveats don't apply:
-    :func:`_holder_is_stale` only ever proves death for same-host
-    pids, so every reclaimer shares this kernel. Returns True if the
-    caller should retry the O_EXCL acquire."""
-    rfd = os.open(f"{path}.reclaim", os.O_CREAT | os.O_WRONLY)
-    try:
-        try:
-            fcntl.flock(rfd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            # another restart is mid-reclaim; let it win and retry the
-            # normal acquire (we'll lose O_EXCL to it, which is correct)
-            return True
-        try:
-            with open(path) as fh:
-                current = fh.read().strip() or "<empty>"
-        except FileNotFoundError:
-            return True  # already reclaimed (or released) — just retry
-        except OSError:
-            return False
-        # the observed holder must STILL be on the file (not replaced
-        # by a live writer's fresh lock) and still provably dead
-        if current == observed_holder and _holder_is_stale(current):
-            try:
-                os.remove(path)
-            except FileNotFoundError:
-                pass
-            return True
-        return False
-    finally:
-        os.close(rfd)  # close releases the flock
-
-
-@contextlib.contextmanager
-def _writer_lock(store_dir: str, batch_id: int | str):
-    """Cross-process commit fence: O_CREAT|O_EXCL lock file held for
-    the commit's critical section, so a second concurrent writer fails
-    loudly instead of interleaving half-written versions. The lock
-    records holder identity (pid/host); a lock whose recorded pid is
-    provably dead ON THIS HOST is reclaimed automatically (serialized
-    through a kernel flock side-mutex — see :func:`_reclaim_stale_lock`
-    — so two racing restarts cannot both reclaim it) — that keeps the
-    job-level exactly-once-replay-across-kills contract hands-off for
-    the single-host driver topology. A lock from another host cannot
-    be liveness-checked and stays held by design (auto-expiry would
-    reintroduce the race) — an operator verifies the pid is gone and
-    calls :func:`break_writer_lock`."""
-    path = os.path.join(store_dir, _LOCK_NAME)
-    for attempt in (0, 1):
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            try:
-                with open(path) as fh:
-                    holder = fh.read().strip() or "<empty>"
-            except OSError:
-                holder = "<unreadable>"
-            if (
-                attempt == 0
-                and _holder_is_stale(holder)
-                and _reclaim_stale_lock(path, holder)
-            ):
-                continue
-            raise ValueError(
-                f"another writer holds the commit lock on {store_dir} "
-                f"({holder}): the store is single-writer by contract; "
-                f"if the holder crashed on another host, verify its "
-                f"pid is gone and call break_writer_lock()"
-            ) from None
-    try:
-        os.write(
-            fd,
-            (
-                f"pid={os.getpid()} host={socket.gethostname()} "
-                f"batch={batch_id} t={int(time.time())}"
-            ).encode(),
-        )
-        os.close(fd)
-        yield
-    finally:
-        try:
-            os.remove(path)
-        except OSError:
-            pass
-
-
-def break_writer_lock(store_dir: str) -> bool:
-    """Operator escape hatch: remove a lock left by a crashed writer
-    (verify the recorded pid first). Returns True if a lock was
-    removed."""
-    path = os.path.join(store_dir, _LOCK_NAME)
-    try:
-        os.remove(path)
-        return True
+        with open(os.path.join(store_dir, name, _MANIFEST)) as fh:
+            m = json.load(fh)
     except FileNotFoundError:
-        return False
-
-
-def _read_pointer(store_dir: str, name: str) -> int | None:
-    ptr = os.path.join(store_dir, name)
-    if not os.path.exists(ptr):
         return None
-    with open(ptr) as fh:
-        return int(fh.read().strip())
+    if "attempt" not in m:
+        raise _old_layout(store_dir)
+    return m
+
+
+def _committed_dir(store_dir: str, name: str) -> str:
+    """The attempt directory the manifest of ``name`` publishes."""
+    m = _manifest(store_dir, name)
+    if m is None:
+        raise ValueError(
+            f"{os.path.join(store_dir, name)} has no published "
+            f"manifest: the store has been modified externally or is "
+            f"corrupted; re-ingest into a fresh store directory"
+        )
+    return os.path.join(store_dir, name, m["attempt"])
+
+
+def _latest(store_dir: str, prefix: str) -> int | None:
+    """The highest N with a published ``{prefix}{N}`` manifest."""
+    try:
+        names = os.listdir(store_dir)
+    except FileNotFoundError:
+        return None
+    if "CURRENT" in names:
+        raise _old_layout(store_dir)
+    found = sorted(
+        (
+            int(m.group(1))
+            for name in names
+            if (m := re.fullmatch(prefix + r"(\d+)", name))
+        ),
+        reverse=True,
+    )
+    for n in found:
+        if os.path.exists(os.path.join(store_dir, f"{prefix}{n}", _MANIFEST)):
+            return n  # a higher N without one is an unpublished attempt
+    return None
 
 
 def _dir_bytes(path: str) -> int:
@@ -221,13 +166,6 @@ def _dir_bytes(path: str) -> int:
         for f in os.listdir(path)
         if os.path.isfile(os.path.join(path, f))
     )
-
-
-def _write_pointer(store_dir: str, name: str, value: int) -> None:
-    tmp = os.path.join(store_dir, f".{name}.{value}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(value))
-    os.replace(tmp, os.path.join(store_dir, name))  # atomic
 
 
 # a dirty set bigger than this folds as a regular (shuffle) join
@@ -246,14 +184,23 @@ BROADCAST_DIRTY_MAX_BYTES = 64 << 20
 
 
 def current_version(store_dir: str) -> int | None:
-    """The committed version (batch id), or None before first commit."""
-    return _read_pointer(store_dir, "CURRENT")
+    """The committed version (batch id), or None before first commit: the
+    highest published version or base manifest (expiry may have removed
+    every version dir at or below the base)."""
+    return max(
+        (
+            n
+            for n in (_latest(store_dir, "v"), _latest(store_dir, "base-"))
+            if n is not None
+        ),
+        default=None,
+    )
 
 
 def base_version(store_dir: str) -> int | None:
     """The latest compacted base snapshot's version, or None if the
     store has never been compacted (reconstruction starts empty)."""
-    return _read_pointer(store_dir, "BASE")
+    return _latest(store_dir, "base-")
 
 
 def read_state_at(
@@ -270,20 +217,18 @@ def read_state_at(
     if committed is None or version > committed:
         raise ValueError(
             f"version {version} has not been committed "
-            f"(CURRENT is {committed})"
+            f"(the latest is {committed})"
         )
     b = base_version(store_dir)
     if b is not None and b <= version:
-        cur = spark.read.parquet(os.path.join(store_dir, f"base-{b}"))
+        cur = spark.read.parquet(_committed_dir(store_dir, f"base-{b}"))
         lo = b + 1
     else:
         # no base at or below the asked version: the full delta chain
         # from v0 is required. Batch ids are dense, so a missing v0
         # means expire_versions reclaimed the chain — refuse rather
         # than silently reconstruct an empty/partial table.
-        if version >= 0 and not os.path.isdir(
-            os.path.join(store_dir, "v0")
-        ):
+        if _manifest(store_dir, "v0") is None:
             if b is None:
                 # never-compacted store missing its v0: commits are
                 # dense from 0 and expiry never runs below a base, so
@@ -291,7 +236,7 @@ def read_state_at(
                 # reclaimed chain
                 raise ValueError(
                     f"store at {store_dir} has committed versions but "
-                    f"no v0 directory and no base snapshot: the store "
+                    f"no published v0 and no base snapshot: the store "
                     f"has been modified externally or is corrupted; "
                     f"re-ingest into a fresh store directory"
                 )
@@ -300,35 +245,13 @@ def read_state_at(
                 f"({b}) and its delta chain has been expired — only "
                 f"versions >= {b} remain reconstructible"
             )
-        if not os.path.isdir(os.path.join(store_dir, "v0", "delta")):
-            # probe BEFORE the schema read so a pre-delta-format v0
-            # (full table directly under v0) gets the loop's friendly
-            # migration error, not a raw path-not-found
-            raise ValueError(
-                f"{os.path.join(store_dir, 'v0')} is not a "
-                f"delta-format version (no delta/ table): the store "
-                f"was written by an older full-table-per-version "
-                f"release or has been modified externally; re-ingest "
-                f"into a fresh store directory"
-            )
         cur = spark.read.parquet(
-            os.path.join(store_dir, "v0", "delta")
+            os.path.join(_committed_dir(store_dir, "v0"), "delta")
         ).limit(0)
         lo = 0
     budget = BROADCAST_DIRTY_MAX_BYTES  # cumulative across the chain
     for v in range(lo, version + 1):
-        vdir = os.path.join(store_dir, f"v{v}")
-        if not os.path.isdir(os.path.join(vdir, "dirty")):
-            # batch ids are dense and expiry only reclaims below the
-            # base, so a committed version without delta/dirty tables
-            # is a store written by a pre-delta format or external
-            # damage — refuse loudly
-            raise ValueError(
-                f"{vdir} is not a delta-format version (no dirty/ "
-                f"table): the store was written by an older "
-                f"full-table-per-version release or has been modified "
-                f"externally; re-ingest into a fresh store directory"
-            )
+        vdir = _committed_dir(store_dir, f"v{v}")
         dirty = spark.read.parquet(os.path.join(vdir, "dirty"))
         sz = _dir_bytes(os.path.join(vdir, "dirty"))
         if sz <= budget:
@@ -349,31 +272,34 @@ def compact_store(
     spark: SparkSession, store_dir: str, key: str
 ) -> int | None:
     """Materialize the current delta chain into a new base snapshot
-    ``base-{CURRENT}`` and advance the ``BASE`` pointer (atomic, last).
-    Returns the new base version, or None on an empty store. Idempotent:
-    re-compacting with no commit since the last compaction is a no-op
-    (it must be — writing base-{v} FROM base-{v} would be a
-    self-overwrite, which Spark rejects)."""
+    ``base-{v}`` at the committed version ``v`` (its manifest published
+    last). Returns the new base version, or None on an empty store.
+    Idempotent: re-compacting with no commit since the last compaction
+    is a no-op, and a compactor that loses the publish of ``base-{v}``
+    to another one returns ``v`` too — both wrote the same state."""
     _require_posix_store(store_dir)
     v = current_version(store_dir)
     if v is None:
         return None
     if base_version(store_dir) == v:
-        return v  # already compacted at CURRENT; nothing to fold
-    with _writer_lock(store_dir, f"compact@{v}"):
-        out = read_state_at(spark, store_dir, v, key)
-        out.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"base-{v}")
-        )
-        _write_pointer(store_dir, "BASE", v)
+        return v  # already compacted at the committed version
+    attempt = uuid.uuid4().hex
+    read_state_at(spark, store_dir, v, key).write.parquet(
+        os.path.join(store_dir, f"base-{v}", attempt)
+    )
+    publish_once(
+        os.path.join(store_dir, f"base-{v}", _MANIFEST),
+        json.dumps({"version": v, "key": key, "attempt": attempt}),
+    )
     return v
 
 
 def expire_versions(store_dir: str) -> list[str]:
     """Reclaim storage the latest base snapshot supersedes: delta
-    version dirs at or below BASE and older base dirs. Split from
-    compaction because retained deltas are the time-travel lineage —
-    run this only when history before the base is no longer needed.
+    version dirs at or below the base and older base dirs, each with
+    every attempt inside it (published or orphaned by a crash). Split
+    from compaction because retained deltas are the time-travel lineage
+    — run this only when history before the base is no longer needed.
     Returns the removed directory names."""
     b = base_version(store_dir)
     if b is None:
@@ -386,6 +312,11 @@ def expire_versions(store_dir: str) -> list[str]:
         m = re.fullmatch(r"base-(\d+)", name)
         if m and int(m.group(1)) < b:
             removed.append(name)
+    # unpublish every dir before deleting any: a crash mid-removal
+    # must leave no published version whose tables are partly gone
+    for name in removed:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(store_dir, name, _MANIFEST))
     for name in removed:
         shutil.rmtree(os.path.join(store_dir, name))
     return removed
@@ -395,15 +326,16 @@ def validate_batch_id(store_dir: str, batch_id: int) -> bool:
     """Pre-flight for a commit: False if ``batch_id`` is already
     committed (idempotent replay — skip the work), raises on a gap in
     the dense version sequence, True when the commit should proceed.
-    Call BEFORE computing an expensive delta; :func:`commit_delta`
-    re-checks under the same rules."""
+    Call BEFORE computing an expensive delta; a writer that passes it
+    and then loses the race for the version fails at
+    :func:`commit_delta`'s publish."""
     committed = current_version(store_dir)
     if committed is not None and committed >= batch_id:
         return False
     if batch_id != (0 if committed is None else committed + 1):
         raise ValueError(
             f"batch_id {batch_id} breaks the dense version sequence "
-            f"(CURRENT is {committed}) — readers rely on density to "
+            f"(the latest is {committed}) — readers rely on density to "
             f"fold and to detect expiry"
         )
     return True
@@ -429,9 +361,10 @@ def bind_stream(store_dir: str, stream_id: str) -> bool:
     was already bound to the SAME id (normal restart/replay), and
     raises if it is bound to a DIFFERENT id.
 
-    Why: the store's idempotent-replay rule skips any batch_id <=
-    CURRENT. That is only safe while batch numbering comes from the
-    SAME checkpoint lineage — a reset/relocated checkpoint renumbers
+    Why: the store's idempotent-replay rule skips any batch_id at or
+    below the committed version. That is only safe while batch
+    numbering comes from the SAME checkpoint lineage — a
+    reset/relocated checkpoint renumbers
     micro-batches from 0, so every genuinely NEW changeset would be
     silently skipped as a 'replay' and the store would go stale with
     no error. Binding the checkpoint's query id (the ``id`` field of
@@ -440,27 +373,24 @@ def bind_stream(store_dir: str, stream_id: str) -> bool:
     Remediation: restore the original checkpoint directory, or start a
     fresh store for the new stream; to intentionally re-home a store,
     delete its STREAM_ID file AND ensure the new stream's batch
-    numbering cannot collide with committed versions."""
-    path = os.path.join(store_dir, _STREAM_ID_NAME)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        bound = stream_binding(store_dir)
-        if bound == stream_id:
-            return False
-        raise ValueError(
-            f"store {store_dir} is bound to streaming query "
-            f"{bound!r} but this stream's checkpoint identity is "
-            f"{stream_id!r}: the checkpoint was reset or a different "
-            f"stream attached, so its restarted batch numbering would "
-            f"be silently skipped as replays. Restore the original "
-            f"checkpoint, or point the new stream at a fresh store."
-        )
-    try:
-        os.write(fd, stream_id.encode())
-    finally:
-        os.close(fd)
-    return True
+    numbering cannot collide with committed versions.
+
+    The binding is published write-once (``publish_once``), so a crash
+    mid-bind leaves either no binding or the complete one — never an
+    empty file that reads as a foreign binding."""
+    if publish_once(os.path.join(store_dir, _STREAM_ID_NAME), stream_id):
+        return True
+    bound = stream_binding(store_dir)
+    if bound == stream_id:
+        return False
+    raise ValueError(
+        f"store {store_dir} is bound to streaming query "
+        f"{bound!r} but this stream's checkpoint identity is "
+        f"{stream_id!r}: the checkpoint was reset or a different "
+        f"stream attached, so its restarted batch numbering would "
+        f"be silently skipped as replays. Restore the original "
+        f"checkpoint, or point the new stream at a fresh store."
+    )
 
 
 def guard_stream_binding(store_dir: str, checkpoint_dir: str) -> None:
@@ -477,7 +407,7 @@ def guard_stream_binding(store_dir: str, checkpoint_dir: str) -> None:
     if bind_stream(store_dir, qid) and had is not None:
         raise ValueError(
             f"stream {qid!r} attached to store {store_dir}, which "
-            f"already has committed versions (CURRENT={had}) but no "
+            f"already has committed versions (latest {had}) but no "
             f"stream binding: this stream's micro-batch numbering "
             f"starts at 0, so its commits would be silently skipped "
             f"as replays. Continue ingestion with the batch commit "
@@ -511,8 +441,9 @@ def commit_delta(
     ``touched`` the single-``key``-column set of every key the
     changeset affected (``touched ⊇ fresh[key]``; touched keys absent
     from fresh are tombstones). Returns False if ``batch_id`` is
-    already committed (idempotent replay), True after committing.
-    Version ids must be dense and ascending. A commit writes
+    already committed (idempotent replay), True after committing, and
+    raises ``ValueError`` if another writer published ``batch_id``
+    while this one wrote. Version ids must be dense and ascending. A commit writes
     O(|changeset|) rows; ``compact_every`` bounds the reconstruction
     chain every reader (including the next commit's own input fold)
     pays."""
@@ -520,58 +451,48 @@ def commit_delta(
     os.makedirs(store_dir, exist_ok=True)
     if not validate_batch_id(store_dir, batch_id):
         return False
-    with _writer_lock(store_dir, batch_id):
-        # re-validate UNDER the fence: two writers may both have
-        # passed the cheap pre-check before either acquired the lock
-        if not validate_batch_id(store_dir, batch_id):
-            return False
-        t0 = time.monotonic()
-        vdir = os.path.join(store_dir, f"v{batch_id}")
-        # delta first (it may read the old chain), then the dirty set;
-        # the version becomes visible only via the pointer
-        fresh.write.mode("overwrite").parquet(os.path.join(vdir, "delta"))
-        touched.select(key).write.mode("overwrite").parquet(
-            os.path.join(vdir, "dirty")
+    t0 = time.monotonic()
+    vdir = os.path.join(store_dir, f"v{batch_id}")
+    attempt = uuid.uuid4().hex
+    adir = os.path.join(vdir, attempt)
+    # delta first (it may read the old chain), then the dirty set; the
+    # attempt is unreachable until the manifest names it
+    fresh.write.parquet(os.path.join(adir, "delta"))
+    touched.select(key).write.parquet(os.path.join(adir, "dirty"))
+    # lineage manifest = the commit record: row counts come from the
+    # parquet footers of the files just written (metadata read, no
+    # data scan), sizes from the local dir — the audit trail a
+    # maintenance operator reads without reconstructing anything
+    delta_rows = spark.read.parquet(os.path.join(adir, "delta")).count()
+    dirty_rows = spark.read.parquet(os.path.join(adir, "dirty")).count()
+    manifest = {
+        "version": batch_id,
+        "key": key,
+        "delta_rows": delta_rows,
+        "dirty_keys": dirty_rows,
+        "tombstoned_keys": dirty_rows - delta_rows
+        if dirty_rows >= delta_rows else None,
+        "delta_bytes": _dir_bytes(os.path.join(adir, "delta")),
+        "dirty_bytes": _dir_bytes(os.path.join(adir, "dirty")),
+        "commit_wall_s": round(time.monotonic() - t0, 3),
+        "attempt": attempt,
+    }
+    if not publish_once(os.path.join(vdir, _MANIFEST), json.dumps(manifest)):
+        raise ValueError(
+            f"another writer published version {batch_id} of "
+            f"{store_dir} first: the store is single-writer by "
+            f"contract; this commit's attempt {attempt} is never read"
         )
-        # lineage manifest BEFORE the pointer (a version is visible
-        # only with its manifest): row counts come from the parquet
-        # footers of the files just written (metadata read, no data
-        # scan), sizes from the local dir — the audit trail a
-        # maintenance operator reads without reconstructing anything
-        delta_rows = spark.read.parquet(os.path.join(vdir, "delta")).count()
-        dirty_rows = spark.read.parquet(os.path.join(vdir, "dirty")).count()
-        manifest = {
-            "version": batch_id,
-            "key": key,
-            "delta_rows": delta_rows,
-            "dirty_keys": dirty_rows,
-            "tombstoned_keys": dirty_rows - delta_rows
-            if dirty_rows >= delta_rows else None,
-            "delta_bytes": _dir_bytes(os.path.join(vdir, "delta")),
-            "dirty_bytes": _dir_bytes(os.path.join(vdir, "dirty")),
-            "commit_wall_s": round(time.monotonic() - t0, 3),
-        }
-        tmp = os.path.join(vdir, ".manifest.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(vdir, "manifest.json"))
-        _write_pointer(store_dir, "CURRENT", batch_id)
-    # auto-compaction re-acquires the fence itself (outside the
-    # commit's critical section — the version is already visible)
     if compact_every and (batch_id + 1) % compact_every == 0:
         compact_store(spark, store_dir, key)
     return True
 
 
 def version_manifest(store_dir: str, version: int) -> dict | None:
-    """The lineage manifest commit_delta wrote for ``version`` (row
-    counts, tombstones, bytes, commit wall) — None for versions
-    committed before manifests existed or reclaimed by expiry."""
-    path = os.path.join(store_dir, f"v{version}", "manifest.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return json.load(fh)
+    """The lineage manifest commit_delta published for ``version`` (row
+    counts, tombstones, bytes, commit wall, attempt) — None for
+    versions not committed or reclaimed by expiry."""
+    return _manifest(store_dir, f"v{version}")
 
 
 def diff_versions(
@@ -593,16 +514,18 @@ def diff_versions(
     committed = current_version(store_dir)
     if committed is None or v_to > committed:
         raise ValueError(
-            f"version {v_to} has not been committed (CURRENT is {committed})"
+            f"version {v_to} has not been committed "
+            f"(the latest is {committed})"
         )
     parts = []
     for v in range(v_from + 1, v_to + 1):
-        vdir = os.path.join(store_dir, f"v{v}")
-        if not os.path.isdir(os.path.join(vdir, "dirty")):
+        m = _manifest(store_dir, f"v{v}")
+        if m is None:
             raise ValueError(
-                f"{vdir} has been expired or predates the delta format "
-                f"— diff is only available over retained lineage"
+                f"v{v} of {store_dir} has been expired — diff is only "
+                f"available over retained lineage"
             )
+        vdir = os.path.join(store_dir, f"v{v}", m["attempt"])
         dirty = spark.read.parquet(os.path.join(vdir, "dirty")).select(
             F.col(key), F.lit(v).alias("__v")
         )
@@ -613,27 +536,16 @@ def diff_versions(
     if not parts:
         # v_from == v_to: an empty range is a valid question with an
         # empty answer, not an error. Take the key's type from the
-        # newest RETAINED version's dirty table — the newest version
-        # CAN be expired (compact_store sets BASE == CURRENT and
-        # expire_versions then reclaims every v-dir at or below BASE),
-        # so probe downward and fall back to the base snapshot.
-        src = None
-        for v in range(committed, -1, -1):
-            d = os.path.join(store_dir, f"v{v}", "dirty")
-            if os.path.isdir(d):
-                src = d
-                break
-        if src is None:
-            b = base_version(store_dir)
-            if b is None:
-                raise ValueError(
-                    f"{store_dir} has no retained version dirs and no "
-                    f"base snapshot — store corrupted or externally "
-                    f"modified"
-                )
-            src = os.path.join(store_dir, f"base-{b}")
-        dirty0 = spark.read.parquet(src)
-        return dirty0.select(
+        # newest version's dirty table, or from the base snapshot when
+        # the base is at the newest version (expire_versions may then
+        # have reclaimed every version dir)
+        if base_version(store_dir) == committed:
+            src = _committed_dir(store_dir, f"base-{committed}")
+        else:
+            src = os.path.join(
+                _committed_dir(store_dir, f"v{committed}"), "dirty"
+            )
+        return spark.read.parquet(src).select(
             key, F.lit("upserted").alias("change")
         ).limit(0)
     allv = parts[0]

@@ -8,7 +8,9 @@ current from one OSM-diff feed without ever recomputing the corpus.
 
 The store is the generic versioned delta store
 (``streaming/delta_store.py`` — layout, fold semantics, exactly-once
-replay, single-writer contract). The per-version delta is cheap by
+replay, single-writer contract): each commit writes its tables under a
+fresh attempt directory and becomes visible only when its write-once
+``v{N}/manifest.json`` is published. The per-version delta is cheap by
 construction: inference has no cross-row dependencies, so a changeset
 touches exactly its own rows — the commit runs the broadcast rule
 cascade over the changeset-sized upserts ONLY and writes
@@ -56,13 +58,10 @@ _KEY = "road_id"
 
 
 def read_road_changeset_stream(
-    spark: SparkSession,
-    src_dir: str,
-    max_files_per_trigger: int = 1,
-    with_seq: bool = False,
+    spark: SparkSession, src_dir: str, with_seq: bool = False
 ) -> DataFrame:
-    """File stream of road-changeset rows; one file per micro-batch by
-    default so every diff commits its own result-table version.
+    """File stream of road-changeset rows; one file per micro-batch so
+    every diff commits its own result-table version.
     ``with_seq`` reads ROAD_CHANGESET_SCHEMA_SEQ so feeds that carry
     edit recency actually reach commit_road_batch's last-wins branch —
     without it the seq column in the files is silently dropped by the
@@ -71,7 +70,7 @@ def read_road_changeset_stream(
     schema = ROAD_CHANGESET_SCHEMA_SEQ if with_seq else ROAD_CHANGESET_SCHEMA
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
 
@@ -127,8 +126,8 @@ def commit_road_batch(
     commit, which must decode dirty blobs). The fresh side is
     ``rules_diff.infer_upserts``, shared with the batch twin: same
     deterministic resolution of duplicate same-id upserts within one
-    micro-batch (multiple diff files coalesced by maxFilesPerTrigger,
-    or one diff editing an object twice) — without it the store would
+    micro-batch (multiple diff files in one batch-API call, or one
+    diff editing an object twice) — without it the store would
     serve duplicate key rows.
 
     Op ordering: when the batch schema carries ``seq_col``
@@ -192,15 +191,15 @@ def streaming_inference_maintenance(
     store_dir: str,
     ruleset,
     project=None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
     compact_every: int | None = 16,
     with_seq: bool = False,
     **infer_kwargs,
 ):
     """Start the maintenance stream; returns the StreamingQuery (caller
-    awaits/stops). ``read_current_results(spark, store_dir)`` serves
-    the latest committed version at any point, including mid-stream.
+    awaits/stops). The stream drains the pending changesets, one file
+    per micro-batch (``availableNow``), then stops.
+    ``read_current_results(spark, store_dir)`` serves the latest
+    committed version at any point, including mid-stream.
     ``compact_every`` bounds the reader-side reconstruction chain
     (measured costs: PLANS.md); expiry stays manual so lineage
     retention is an operator policy. ``with_seq``: read
@@ -221,14 +220,10 @@ def streaming_inference_maintenance(
             **infer_kwargs,
         )
 
-    stream = read_road_changeset_stream(
-        spark, changeset_dir, max_files_per_trigger, with_seq=with_seq
+    return (
+        read_road_changeset_stream(spark, changeset_dir, with_seq=with_seq)
+        .writeStream.foreachBatch(_commit)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    writer = stream.writeStream.foreachBatch(_commit).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="0 seconds")
-    return writer.start()

@@ -7,7 +7,9 @@ arrive as changesets; the planet tile table must never be re-encoded).
 Architecture (all public Structured Streaming mechanics; the store is
 the generic versioned delta store of ``streaming/delta_store.py`` —
 see that module for layout, fold semantics, exactly-once replay, and
-the single-writer contract):
+the single-writer contract; a version exists once its write-once
+``v{N}/manifest.json`` is published, so a crashed commit leaves only an
+attempt directory no reader opens):
 
 - the changeset arrives as a parquet file stream of rows
   ``(seg_id, lon0, lat0, lon1, lat1, op)`` with op in
@@ -63,14 +65,12 @@ _TILES_SCHEMA = (
 _KEY = "tile_id"
 
 
-def read_changeset_stream(
-    spark: SparkSession, src_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File stream of changeset rows; one file per micro-batch by
-    default so every diff commits its own tile-table version."""
+def read_changeset_stream(spark: SparkSession, src_dir: str) -> DataFrame:
+    """File stream of changeset rows; one file per micro-batch so every
+    diff commits its own tile-table version."""
     return (
         spark.readStream.schema(CHANGESET_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
 
@@ -98,7 +98,7 @@ def read_current_tiles(spark: SparkSession, store_dir: str) -> DataFrame:
 
 def compact_tile_store(spark: SparkSession, store_dir: str) -> int | None:
     """Materialize the current delta chain into a new base snapshot and
-    advance the BASE pointer (delta_store.compact_store)."""
+    publish its manifest (delta_store.compact_store)."""
     return compact_store(spark, store_dir, _KEY)
 
 
@@ -106,14 +106,13 @@ def _apply_changeset_delta(
     tiles: DataFrame,
     batch: DataFrame,
     res: int,
-    clip: bool,
     broadcast_dirty: bool,
 ) -> tuple[DataFrame, DataFrame]:
     geom = ["seg_id", "lon0", "lat0", "lon1", "lat1"]
     removed = batch.where(F.col("op") == "remove").select(*geom)
     upserted = batch.where(F.col("op") == "upsert").select(*geom)
     return rebuild_changed_tiles_delta(
-        tiles, removed, upserted, res, clip=clip,
+        tiles, removed, upserted, res, clip=True,
         broadcast_dirty=broadcast_dirty,
     )
 
@@ -124,7 +123,6 @@ def commit_changeset(
     batch: DataFrame,
     batch_id: int,
     res: int,
-    clip: bool = True,
     compact_every: int | None = 16,
     broadcast_dirty: bool = True,
 ) -> bool:
@@ -150,7 +148,7 @@ def commit_changeset(
         return False
     tiles = read_current_tiles(spark, store_dir)
     rebuilt, dirty = _apply_changeset_delta(
-        tiles, batch, res, clip, broadcast_dirty
+        tiles, batch, res, broadcast_dirty
     )
     return commit_delta(
         spark, store_dir, rebuilt, dirty, batch_id, _KEY,
@@ -164,15 +162,15 @@ def streaming_tile_maintenance(
     checkpoint_dir: str,
     store_dir: str,
     res: int,
-    clip: bool = True,
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
     compact_every: int | None = 16,
     broadcast_dirty: bool = True,
 ):
     """Start the maintenance stream; returns the StreamingQuery (caller
-    awaits/stops). ``read_current_tiles(spark, store_dir)`` serves the
-    latest committed version at any point, including mid-stream.
+    awaits/stops). The stream drains the pending changesets, one file
+    per micro-batch (``availableNow``), then stops: the cron shape that
+    ``jobs/maintenance_job.py`` re-submits per diff window.
+    ``read_current_tiles(spark, store_dir)`` serves the latest committed
+    version at any point, including mid-stream.
 
     ``compact_every`` (default 16): every Nth commit also materializes
     a base snapshot, bounding the reconstruction chain every reader
@@ -201,16 +199,14 @@ def streaming_tile_maintenance(
     def _commit(batch: DataFrame, batch_id: int) -> None:
         guard_stream_binding(store_dir, checkpoint_dir)
         commit_changeset(
-            spark, store_dir, batch, batch_id, res, clip=clip,
+            spark, store_dir, batch, batch_id, res,
             compact_every=compact_every, broadcast_dirty=broadcast_dirty,
         )
 
-    stream = read_changeset_stream(spark, changeset_dir, max_files_per_trigger)
-    writer = stream.writeStream.foreachBatch(_commit).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        read_changeset_stream(spark, changeset_dir)
+        .writeStream.foreachBatch(_commit)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="0 seconds")
-    return writer.start()

@@ -123,6 +123,50 @@ def test_data_without_manifest_is_reprocessed(spark, tmp_path):
     assert _collect_output(spark, out) == expected
 
 
+def test_crash_before_manifest_publish_resumes_identically(
+    spark, tmp_path, monkeypatch
+):
+    """A kill after a batch's data write, between two of its manifest
+    publishes: the published bucket stays committed, the rest of the
+    batch is re-processed on resume, and the output equals an
+    uninterrupted run's."""
+    from osm_legal_default_speeds_spark.plans import checkpointed_job
+
+    ref_dir = str(tmp_path / "ref")
+    run_checkpointed(
+        spark, _pipeline, ref_dir, "tile_id", NUM_BUCKETS, batch_size=3
+    )
+    expected = _collect_output(spark, ref_dir)
+
+    real = checkpointed_job.publish_once
+    calls = []
+
+    def publish(path, text):
+        calls.append(path)
+        if len(calls) == 2:
+            raise RuntimeError("injected crash before the publish")
+        return real(path, text)
+
+    out = str(tmp_path / "crashed")
+    monkeypatch.setattr(checkpointed_job, "publish_once", publish)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_checkpointed(
+            spark, _pipeline, out, "tile_id", NUM_BUCKETS, batch_size=3
+        )
+    monkeypatch.undo()
+    first = completed_buckets(out)
+    assert len(first) == 1
+
+    res = run_checkpointed(
+        spark, _pipeline, out, "tile_id", NUM_BUCKETS, batch_size=3
+    )
+    assert sorted(res["skipped"]) == sorted(first)
+    assert sorted(res["completed"]) == sorted(
+        set(range(NUM_BUCKETS)) - first
+    )
+    assert _collect_output(spark, out) == expected
+
+
 def test_manifest_json_shape(spark, tmp_path):
     out = str(tmp_path / "shape")
     run_checkpointed(

@@ -5,6 +5,7 @@ store pins on the geometry axis), plus replay idempotence, the dense
 version guard, compaction, and expiry over the shared delta store."""
 
 import glob
+import json
 import os
 import shutil
 
@@ -32,6 +33,7 @@ from osm_legal_default_speeds_spark.streaming.delta_store import (
     base_version,
     current_version,
     expire_versions,
+    version_manifest,
 )
 
 ROAD_SCHEMA = "road_id long, country_code string, tags map<string,string>"
@@ -185,10 +187,12 @@ def test_batch_commit_replay_guard_compact_expire(spark, tmp_path):
 
 
 def test_pre_delta_format_store_refused(spark, tmp_path):
-    """A store whose v0 lacks the delta/ table (older
-    full-table-per-version layout, or external damage) must fail with
-    the migration message, not a raw path error — on BOTH the
-    schema-probe path (no base) and the fold path."""
+    """Stores in an older layout must fail with the migration message,
+    never read as empty or partial: the full-table-per-version layout
+    (v0/table), and the pointer layout of the previous release
+    (v0/{delta,dirty} beside a manifest that names no attempt, plus a
+    CURRENT pointer file) — refused by readers and writers alike, with
+    or without its pointer file."""
     store = tmp_path / "old_store"
     (store / "v0").mkdir(parents=True)
     spark.createDataFrame([(1, "x")], "road_id long, v string").write.parquet(
@@ -198,6 +202,27 @@ def test_pre_delta_format_store_refused(spark, tmp_path):
         fh.write("0")
     with pytest.raises(ValueError, match="delta-format"):
         read_results_at(spark, str(store), 0)
+
+    pointer_store = tmp_path / "pointer_store"
+    rows = spark.createDataFrame([(1, "x")], "road_id long, v string")
+    rows.write.parquet(str(pointer_store / "v0" / "delta"))
+    rows.select("road_id").write.parquet(str(pointer_store / "v0" / "dirty"))
+    with open(pointer_store / "v0" / "manifest.json", "w") as fh:
+        json.dump({"version": 0, "key": "road_id", "delta_rows": 1}, fh)
+    with open(pointer_store / "CURRENT", "w") as fh:
+        fh.write("0")
+    batch = spark.createDataFrame(
+        [(2, "ZA", {"highway": "motorway"}, "upsert")], ROAD_CHANGESET_SCHEMA
+    )
+    with pytest.raises(ValueError, match="delta-format"):
+        read_results_at(spark, str(pointer_store), 0)
+    with pytest.raises(ValueError, match="delta-format"):
+        commit_road_batch(
+            spark, str(pointer_store), batch, 1, _ruleset(), project=_flat
+        )
+    os.remove(pointer_store / "CURRENT")
+    with pytest.raises(ValueError, match="delta-format"):
+        read_results_at(spark, str(pointer_store), 0)
 
 
 def test_duplicate_upserts_in_one_batch_resolve_to_one_row(spark, tmp_path):
@@ -343,53 +368,189 @@ def test_seqless_schema_keeps_legacy_resolution(spark, tmp_path):
     assert [r["road_id"] for r in rows] == [1]
 
 
-def test_commit_fence_rejects_racing_writer(spark, tmp_path):
-    """The single-writer contract is mechanical: while one writer holds
-    the commit fence, a second commit/compaction fails loudly (naming
-    the holder) instead of interleaving; the fence is released after a
-    clean commit and breakable by an operator after a crash."""
-    from osm_legal_default_speeds_spark.streaming.delta_store import (
-        _writer_lock,
-        break_writer_lock,
-        commit_delta,
-        compact_store,
+def _attempts(store: str, name: str) -> list[str]:
+    """The attempt directories under version dir ``name``."""
+    return sorted(
+        d for d in os.listdir(os.path.join(store, name))
+        if os.path.isdir(os.path.join(store, name, d))
     )
+
+
+def _publish_fails_once(monkeypatch, suffix: str) -> None:
+    """Make the store's publish of the commit record ending in
+    ``suffix`` raise once: a writer killed after writing its tables,
+    before publishing them."""
+    from osm_legal_default_speeds_spark.streaming import delta_store
+
+    real = delta_store.publish_once
+    failed = []
+
+    def publish(path, text):
+        if path.endswith(suffix) and not failed:
+            failed.append(path)
+            raise RuntimeError("injected crash before the publish")
+        return real(path, text)
+
+    monkeypatch.setattr(delta_store, "publish_once", publish)
+
+
+def _version_batch(spark, v: int):
+    old = _corpus(v - 1) if v > 1 else {}
+    return spark.createDataFrame(
+        _changeset(old, _corpus(v)), ROAD_CHANGESET_SCHEMA
+    )
+
+
+def test_commit_fence_rejects_racing_writer(spark, tmp_path, monkeypatch):
+    """The single-writer contract is mechanical without a lock: when a
+    second writer publishes version N between the first writer's
+    pre-check and its publish, the first raises, its attempt is never
+    read, and N+1 still commits. A compactor that loses the publish of
+    base-N returns N, as a re-compaction does."""
+    from osm_legal_default_speeds_spark.streaming import delta_store
 
     store = str(tmp_path / "fence_store")
-    batch = spark.createDataFrame(
-        [(1, "ZA", {"highway": "motorway"}, "upsert")],
-        ROAD_CHANGESET_SCHEMA,
-    )
-    assert commit_road_batch(
-        spark, store, batch, 0, _ruleset(), project=_flat,
-    )  # fence acquired and released around the commit
 
-    # writer A holds the fence; writer B's commit AND compaction fail
-    with _writer_lock(store, "writer-A"):
-        with pytest.raises(ValueError, match="commit lock.*writer-A"):
-            commit_road_batch(
-                spark, store, batch, 1, _ruleset(), project=_flat,
-            )
-        with pytest.raises(ValueError, match="commit lock"):
-            compact_store(spark, store, "road_id")
-    # fence released: the next commit proceeds
-    assert commit_road_batch(
-        spark, store, batch, 1, _ruleset(), project=_flat,
-    )
-
-    # crashed-writer recovery: a leftover lock blocks until broken
-    lock_path = os.path.join(store, ".writer.lock")
-    with open(lock_path, "w") as fh:
-        fh.write("pid=999999 host=gone batch=2 t=0")
-    with pytest.raises(ValueError, match="break_writer_lock"):
-        commit_road_batch(
-            spark, store, batch, 2, _ruleset(), project=_flat,
+    def batch(road_id):
+        return spark.createDataFrame(
+            [(road_id, "ZA", {"highway": "motorway"}, "upsert")],
+            ROAD_CHANGESET_SCHEMA,
         )
-    assert break_writer_lock(store)
-    assert not break_writer_lock(store)  # idempotent
+
     assert commit_road_batch(
-        spark, store, batch, 2, _ruleset(), project=_flat,
+        spark, store, batch(1), 0, _ruleset(), project=_flat,
     )
+    real = delta_store.publish_once
+    raced = []
+
+    def racing_publish(path, text):
+        if path.endswith(os.path.join("v1", "manifest.json")) and not raced:
+            raced.append(path)
+            # writer B passed the same pre-check and publishes first
+            assert commit_road_batch(
+                spark, store, batch(2), 1, _ruleset(), project=_flat,
+            )
+        if path.endswith(os.path.join("base-2", "manifest.json")) and (
+            len(raced) == 1
+        ):
+            raced.append(path)
+            assert delta_store.compact_store(spark, store, "road_id") == 2
+        return real(path, text)
+
+    monkeypatch.setattr(delta_store, "publish_once", racing_publish)
+    with pytest.raises(ValueError, match="another writer published version 1"):
+        commit_road_batch(spark, store, batch(3), 1, _ruleset(), project=_flat)
+    winner = version_manifest(store, 1)["attempt"]
+    assert len(_attempts(store, "v1")) == 2 and winner in _attempts(store, "v1")
+    # version 1 is writer B's: the loser's road 3 is never read
+    assert sorted(_res_map(read_current_results(spark, store))) == [1, 2]
+    assert commit_road_batch(
+        spark, store, batch(4), 2, _ruleset(), project=_flat,
+    )
+    assert sorted(_res_map(read_current_results(spark, store))) == [1, 2, 4]
+
+    assert delta_store.compact_store(spark, store, "road_id") == 2
+    assert len(raced) == 2 and base_version(store) == 2
+    assert len(_attempts(store, "base-2")) == 2
+    assert sorted(_res_map(read_current_results(spark, store))) == [1, 2, 4]
+
+
+def test_crash_before_commit_publish(spark, tmp_path, monkeypatch):
+    """A commit killed between its data write and its manifest publish
+    leaves the store at its last published version; retrying the batch
+    id reconstructs every version bit-identical to an uninterrupted
+    run, and expiry reclaims the orphaned attempt with its version
+    dir."""
+    clean = str(tmp_path / "clean_store")
+    store = str(tmp_path / "crash_store")
+    for b in range(3):
+        commit_road_batch(
+            spark, clean, _version_batch(spark, b + 1), b, _ruleset(),
+            project=_flat, compact_every=None,
+        )
+    assert commit_road_batch(
+        spark, store, _version_batch(spark, 1), 0, _ruleset(),
+        project=_flat, compact_every=None,
+    )
+    _publish_fails_once(monkeypatch, os.path.join("v1", "manifest.json"))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        commit_road_batch(
+            spark, store, _version_batch(spark, 2), 1, _ruleset(),
+            project=_flat, compact_every=None,
+        )
+    assert current_version(store) == 0
+    assert version_manifest(store, 1) is None
+    [orphan] = _attempts(store, "v1")
+    assert _res_map(read_current_results(spark, store)) == _full(spark, 1)
+
+    for b in (1, 2):
+        assert commit_road_batch(
+            spark, store, _version_batch(spark, b + 1), b, _ruleset(),
+            project=_flat, compact_every=None,
+        )
+    assert version_manifest(store, 1)["attempt"] != orphan
+    for b in range(3):
+        assert _res_map(read_results_at(spark, store, b)) == _res_map(
+            read_results_at(spark, clean, b)
+        ), b
+
+    assert compact_results_store(spark, store) == 2
+    assert expire_versions(store) == ["v0", "v1", "v2"]
+    assert not os.path.exists(os.path.join(store, "v1"))
+    assert _res_map(read_current_results(spark, store)) == _res_map(
+        read_current_results(spark, clean)
+    )
+
+
+def test_crash_before_compaction_publish(spark, tmp_path, monkeypatch):
+    """A compaction killed between writing its base snapshot and
+    publishing it leaves the store serving its published chain; the
+    retried compaction serves the same state bit-identically, and the
+    orphaned attempt goes with its base dir once a newer base
+    supersedes it, also through an expiry killed midway."""
+    store = str(tmp_path / "compact_crash_store")
+    for b in range(2):
+        commit_road_batch(
+            spark, store, _version_batch(spark, b + 1), b, _ruleset(),
+            project=_flat, compact_every=None,
+        )
+    before = _res_map(read_current_results(spark, store))
+    _publish_fails_once(
+        monkeypatch, os.path.join("base-1", "manifest.json")
+    )
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_results_store(spark, store)
+    assert base_version(store) is None and current_version(store) == 1
+    [orphan] = _attempts(store, "base-1")
+    assert _res_map(read_current_results(spark, store)) == before
+
+    assert compact_results_store(spark, store) == 1
+    assert base_version(store) == 1
+    assert _res_map(read_current_results(spark, store)) == before
+    assert before == _full(spark, 2)
+    assert orphan in _attempts(store, "base-1")
+
+    commit_road_batch(
+        spark, store, _version_batch(spark, 3), 2, _ruleset(),
+        project=_flat, compact_every=None,
+    )
+    assert compact_results_store(spark, store) == 2
+    # an expiry killed before it removed anything has already
+    # unpublished every dir it reclaims: pre-base versions refuse
+    # instead of reading partly deleted tables, and a rerun finishes
+    def crash(path):
+        raise RuntimeError("injected crash in the expiry")
+
+    monkeypatch.setattr(shutil, "rmtree", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        expire_versions(store)
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match="expired"):
+        read_results_at(spark, store, 1)
+    assert _res_map(read_current_results(spark, store)) == _full(spark, 3)
+    assert expire_versions(store) == ["base-1", "v0", "v1", "v2"]
+    assert not os.path.exists(os.path.join(store, "base-1"))
+    assert _res_map(read_current_results(spark, store)) == _full(spark, 3)
 
 
 def test_equal_seq_across_ops_upsert_wins(spark, tmp_path):
@@ -414,34 +575,6 @@ def test_equal_seq_across_ops_upsert_wins(spark, tmp_path):
         got = _res_map(read_current_results(spark, store))
         assert sorted(got) == [1, 2], tag
         assert got[1][1] == "motorway", tag
-
-
-def test_stale_same_host_lock_reclaimed(spark, tmp_path):
-    """A lock whose recorded pid is provably dead ON THIS HOST is an
-    orphan a restarted job can reclaim without a human — the case a
-    driver kill mid-commit leaves behind. A foreign-host lock stays
-    held (test_commit_fence_rejects_racing_writer pins that side)."""
-    import socket
-    import subprocess
-
-    store = str(tmp_path / "stale_lock_store")
-    batch = spark.createDataFrame(
-        [(1, "ZA", {"highway": "motorway"}, "upsert")],
-        ROAD_CHANGESET_SCHEMA,
-    )
-    assert commit_road_batch(
-        spark, store, batch, 0, _ruleset(), project=_flat,
-    )
-    p = subprocess.Popen(["true"])
-    p.wait()  # reaped -> the pid is provably dead
-    lock_path = os.path.join(store, ".writer.lock")
-    with open(lock_path, "w") as fh:
-        fh.write(f"pid={p.pid} host={socket.gethostname()} batch=1 t=0")
-    # hands-off recovery: the next commit reclaims and proceeds
-    assert commit_road_batch(
-        spark, store, batch, 1, _ruleset(), project=_flat,
-    )
-    assert not os.path.exists(lock_path)  # released after the commit
 
 
 def test_diff_versions_empty_range_survives_expiry(spark, tmp_path):
@@ -491,7 +624,7 @@ def test_commit_road_batch_refuses_uri_path_before_work(
 
 def test_uri_schemed_store_path_refused(spark, tmp_path):
     """A URI-schemed store path would split the store (parquet via
-    Hadoop IO, pointers via driver-local POSIX IO) — writers refuse it
+    Hadoop IO, manifests via driver-local POSIX IO) — writers refuse it
     up front (STORE PATH CONTRACT in delta_store's docstring)."""
     from osm_legal_default_speeds_spark.streaming.delta_store import (
         commit_delta,
@@ -506,70 +639,6 @@ def test_uri_schemed_store_path_refused(spark, tmp_path):
         )
     with pytest.raises(ValueError, match="URI scheme"):
         compact_store(spark, "hdfs://nn/store", "road_id")
-
-
-def test_reclaim_refuses_replaced_lock(tmp_path):
-    """The TOCTOU the old rename-aside reclaim had: restart B observed
-    a dead holder, but by the time B acts, restart A has already
-    reclaimed and written its own LIVE lock. B's reclaim must leave
-    A's lock untouched and report not-reclaimed (B then fails the
-    acquire loudly) — otherwise two writers enter the commit critical
-    section together."""
-    import socket
-    import subprocess
-
-    from osm_legal_default_speeds_spark.streaming.delta_store import (
-        _reclaim_stale_lock,
-    )
-
-    path = str(tmp_path / ".writer.lock")
-    p = subprocess.Popen(["true"])
-    p.wait()  # reaped -> provably dead
-    host = socket.gethostname()
-    stale = f"pid={p.pid} host={host} batch=1 t=0"
-    live = f"pid={os.getpid()} host={host} batch=2 t=1"  # A's fresh lock
-    with open(path, "w") as fh:
-        fh.write(live)
-    assert _reclaim_stale_lock(path, stale) is False
-    with open(path) as fh:
-        assert fh.read() == live  # A's live lock untouched
-
-    # the genuinely-stale case still reclaims...
-    with open(path, "w") as fh:
-        fh.write(stale)
-    assert _reclaim_stale_lock(path, stale) is True
-    assert not os.path.exists(path)
-    # ...and an already-removed lock just means "retry the acquire"
-    assert _reclaim_stale_lock(path, stale) is True
-
-
-def test_reclaim_defers_to_concurrent_reclaimer(tmp_path):
-    """While another restart holds the reclaim flock, a reclaimer must
-    NOT remove the lock itself — it defers (returns True to retry the
-    normal acquire and lose it to the mutex holder). flock conflicts
-    across separate open() fds even within one process, so the test
-    can hold the mutex directly."""
-    import fcntl
-    import socket
-    import subprocess
-
-    from osm_legal_default_speeds_spark.streaming.delta_store import (
-        _reclaim_stale_lock,
-    )
-
-    path = str(tmp_path / ".writer.lock")
-    p = subprocess.Popen(["true"])
-    p.wait()
-    stale = f"pid={p.pid} host={socket.gethostname()} batch=1 t=0"
-    with open(path, "w") as fh:
-        fh.write(stale)
-    rfd = os.open(f"{path}.reclaim", os.O_CREAT | os.O_WRONLY)
-    try:
-        fcntl.flock(rfd, fcntl.LOCK_EX)
-        assert _reclaim_stale_lock(path, stale) is True  # deferred
-        assert os.path.exists(path)  # mutex holder owns the removal
-    finally:
-        os.close(rfd)
 
 
 def test_fold_broadcast_budget_is_cumulative(spark, tmp_path, monkeypatch):
@@ -587,9 +656,7 @@ def test_fold_broadcast_budget_is_cumulative(spark, tmp_path, monkeypatch):
             ROAD_CHANGESET_SCHEMA,
         )
         commit_road_batch(spark, store, batch, v, _ruleset(), project=_flat)
-    first_dirty = delta_store._dir_bytes(
-        os.path.join(store, "v0", "dirty")
-    )
+    first_dirty = delta_store.version_manifest(store, 0)["dirty_bytes"]
     monkeypatch.setattr(
         delta_store, "BROADCAST_DIRTY_MAX_BYTES", first_dirty
     )
@@ -617,6 +684,34 @@ def test_bind_stream_primitives(tmp_path):
     assert bind_stream(store, "qid-a") is False  # same stream: replay
     with pytest.raises(ValueError, match="bound to streaming query"):
         bind_stream(store, "qid-b")
+
+
+def test_bind_stream_crash_mid_bind_does_not_wedge(tmp_path, monkeypatch):
+    """A crash while writing the binding must not leave an empty
+    binding that reads as a foreign stream: binding the same query id
+    again succeeds."""
+    from osm_legal_default_speeds_spark.streaming.delta_store import (
+        bind_stream,
+        stream_binding,
+    )
+
+    store = str(tmp_path / "wedge_store")
+    os.makedirs(store)
+    real_write = os.write
+    crashed = []
+
+    def write(fd, data):
+        if data == b"qid-a" and not crashed:
+            crashed.append(fd)
+            raise OSError("injected crash in the binding's write")
+        return real_write(fd, data)
+
+    monkeypatch.setattr(os, "write", write)
+    with pytest.raises(OSError, match="injected crash"):
+        bind_stream(store, "qid-a")
+    assert crashed and stream_binding(store) is None
+    assert bind_stream(store, "qid-a") is True
+    assert stream_binding(store) == "qid-a"
 
 
 def test_reset_checkpoint_fails_loudly(spark, tmp_path):

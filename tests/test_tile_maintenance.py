@@ -18,6 +18,7 @@ from osm_legal_default_speeds_spark.operators.spatial import (
 )
 from osm_legal_default_speeds_spark.streaming.delta_store import (
     expire_versions,
+    version_manifest,
 )
 from osm_legal_default_speeds_spark.streaming.tile_maintenance import (
     base_version,
@@ -106,7 +107,7 @@ def test_streaming_maintenance_matches_full_rebuild_per_version(
     src = _stage_changesets(spark, tmp_path, range(1, 4))
     store = str(tmp_path / "store")
     q = streaming_tile_maintenance(
-        spark, src, str(tmp_path / "ck"), store, RES, clip=True
+        spark, src, str(tmp_path / "ck"), store, RES
     )
     q.awaitTermination()
     assert current_version(store) == 2  # batch ids 0, 1, 2
@@ -124,8 +125,11 @@ def test_streaming_maintenance_matches_full_rebuild_per_version(
     # dir holds changeset-proportional rows, not the whole corpus
     full_n = len(_full_build(spark, 3))
     for batch_id in (1, 2):
-        delta_n = spark.read.parquet(f"{store}/v{batch_id}/delta").count()
-        dirty_n = spark.read.parquet(f"{store}/v{batch_id}/dirty").count()
+        vdir = f"{store}/v{batch_id}/" + version_manifest(store, batch_id)[
+            "attempt"
+        ]
+        delta_n = spark.read.parquet(f"{vdir}/delta").count()
+        dirty_n = spark.read.parquet(f"{vdir}/dirty").count()
         assert 0 < delta_n <= dirty_n < full_n, (batch_id, delta_n, dirty_n)
 
 
@@ -137,7 +141,7 @@ def test_compaction_and_expiry(spark, tmp_path):
     src = _stage_changesets(spark, tmp_path, range(1, 3))
     store = str(tmp_path / "store")
     ck = str(tmp_path / "ck")
-    q = streaming_tile_maintenance(spark, src, ck, store, RES, clip=True)
+    q = streaming_tile_maintenance(spark, src, ck, store, RES)
     q.awaitTermination()
     assert current_version(store) == 1 and base_version(store) is None
 
@@ -164,7 +168,7 @@ def test_compaction_and_expiry(spark, tmp_path):
         dst = f"{src}/f{v:03d}.parquet"
         shutil.copy(part, dst)
         os.utime(dst, (1_700_000_000 + v, 1_700_000_000 + v))
-    q = streaming_tile_maintenance(spark, src, ck, store, RES, clip=True)
+    q = streaming_tile_maintenance(spark, src, ck, store, RES)
     q.awaitTermination()
     assert _tiles_map(read_current_tiles(spark, store)) == _full_build(
         spark, 3
@@ -193,8 +197,7 @@ def test_streaming_compact_every(spark, tmp_path):
     src = _stage_changesets(spark, tmp_path, range(1, 4))
     store = str(tmp_path / "store")
     q = streaming_tile_maintenance(
-        spark, src, str(tmp_path / "ck"), store, RES, clip=True,
-        compact_every=2,
+        spark, src, str(tmp_path / "ck"), store, RES, compact_every=2,
     )
     q.awaitTermination()
     assert current_version(store) == 2
@@ -208,13 +211,13 @@ def test_streaming_maintenance_restart_and_replay(spark, tmp_path):
     src = _stage_changesets(spark, tmp_path, range(1, 3))
     store = str(tmp_path / "store")
     ck = str(tmp_path / "ck")
-    q = streaming_tile_maintenance(spark, src, ck, store, RES, clip=True)
+    q = streaming_tile_maintenance(spark, src, ck, store, RES)
     q.awaitTermination()
     assert current_version(store) == 1
 
     # restart with no new input: checkpoint replays nothing, the
     # committed pointer is untouched
-    q = streaming_tile_maintenance(spark, src, ck, store, RES, clip=True)
+    q = streaming_tile_maintenance(spark, src, ck, store, RES)
     q.awaitTermination()
     assert current_version(store) == 1
     assert _tiles_map(read_current_tiles(spark, store)) == _full_build(
@@ -233,7 +236,7 @@ def test_streaming_maintenance_restart_and_replay(spark, tmp_path):
         dst = f"{src}/f{v:03d}.parquet"
         shutil.copy(part, dst)
         os.utime(dst, (1_700_000_000 + v, 1_700_000_000 + v))
-    q = streaming_tile_maintenance(spark, src, ck, store, RES, clip=True)
+    q = streaming_tile_maintenance(spark, src, ck, store, RES)
     q.awaitTermination()
     assert current_version(store) == 2
     assert _tiles_map(read_current_tiles(spark, store)) == _full_build(
@@ -300,18 +303,18 @@ def test_batch_commit_random_differential(spark, tmp_path, seed):
         rows = _changeset(old, corpus)
         batch = spark.createDataFrame(rows, SCHEMA + ", op string")
         assert commit_changeset(
-            spark, store, batch, b, RES, clip=True, compact_every=2
+            spark, store, batch, b, RES, compact_every=2
         )
     assert not commit_changeset(  # replay
         spark, store,
         spark.createDataFrame([], SCHEMA + ", op string"),
-        len(versions) - 1, RES, clip=True,
+        len(versions) - 1, RES,
     )
     with pytest.raises(ValueError, match="dense"):
         commit_changeset(
             spark, store,
             spark.createDataFrame([], SCHEMA + ", op string"),
-            len(versions) + 3, RES, clip=True,
+            len(versions) + 3, RES,
         )
     assert base_version(store) is not None  # compaction really ran
     for b, corpus in enumerate(versions):
@@ -393,7 +396,7 @@ def test_one_changeset_maintains_both_derived_tables(spark, tmp_path):
         rows = _changeset(old, _corpus(v))
         batch = spark.createDataFrame(rows, SCHEMA + ", op string")
         # geometry axis: delta commit to the versioned tile store
-        assert commit_changeset(spark, store, batch, v - 1, RES, clip=True)
+        assert commit_changeset(spark, store, batch, v - 1, RES)
         # tag axis: the same changeset's ids update the result table
         removed_df = batch.where("op = 'remove'").select(
             F.col("seg_id").alias("road_id")
