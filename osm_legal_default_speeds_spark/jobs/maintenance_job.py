@@ -22,7 +22,7 @@ must be POSIX mounts shared between the driver and readers (local disk
 in local mode, NFS under cluster submission) that support atomic hard
 links — each version's manifest is published write-once by a
 driver-local create-if-absent link, and the writer refuses URI-schemed
-paths up front (see delta_store's ``_require_posix_store``).
+paths up front (see checkpointed_job's ``_require_posix_store``).
 GC/memory notes: see pipeline_job (must go on the submit command)."""
 
 from __future__ import annotations

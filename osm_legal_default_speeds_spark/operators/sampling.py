@@ -72,32 +72,31 @@ def stratified_sample(
     exclusion below it would silently consume a winner slot and the
     group would return n-1 rows. Null-key rows are never sampled,
     matching hash_sample's null contract. The n smallest salted unit
-    hashes of ``key_col`` win. Two-stage partial top-k — stage 1
-    slices n per (partition, group), so no reducer ever sorts a
-    group's full membership in one task (the collect_list partial
-    buffers themselves are not truncated before the exchange; see
-    similarity.topk_per_query partial="arrow" for the variant that
-    is). A NULL group VALUE is a group like any other (matching the
-    SQL twin's PARTITION BY) — the semi-join compares groups with
-    eqNullSafe."""
+    hashes of ``key_col`` win, picked by ``similarity.topk_per_query``
+    over the score -hash (negation is exact, so its (-score, key) order
+    is (hash, key)): stage 1 slices n per (partition, group), so no
+    reducer ever sorts a group's full membership in one task (the
+    collect_list partial buffers themselves are not truncated before
+    the exchange). A NULL group VALUE is a group like any other
+    (matching the SQL twin's PARTITION BY) — the semi-join compares
+    groups with eqNullSafe."""
+    from osm_legal_default_speeds_spark.operators.similarity import (
+        topk_per_query,
+    )
+
     u = _salted_unit(F.col(key_col), salt).alias("__u")
     base = df.withColumn("__u", u)
-    entry = F.struct(F.col("__u"), F.col(key_col).alias("__k"))
-    partial = (
-        base.where(F.col(key_col).isNotNull())
-        .groupBy(F.spark_partition_id().alias("__pid"), group_col)
-        .agg(F.slice(F.array_sort(F.collect_list(entry)), 1, n).alias("__t"))
-        .select(group_col, F.explode("__t").alias("__e"))
+    ranked = topk_per_query(
+        base.where(F.col(key_col).isNotNull()).select(
+            group_col, key_col, (-F.col("__u")).alias("__s")
+        ),
+        n,
+        query_id_col=group_col,
+        id_col=key_col,
+        sim_col="__s",
     )
-    winners = (
-        partial.groupBy(group_col)
-        .agg(
-            F.slice(F.array_sort(F.collect_list("__e")), 1, n).alias("__t")
-        )
-        .select(
-            F.col(group_col).alias("__wg"), F.explode("__t").alias("__e")
-        )
-        .select("__wg", F.col("__e.__k").alias("__wk"))
+    winners = ranked.select(
+        F.col(group_col).alias("__wg"), F.col(key_col).alias("__wk")
     )
     return (
         base.join(

@@ -12,8 +12,8 @@ Scale shape:
 - Brute force broadcasts the (small) query set; per input row the work
   is an O(Q*d) map-side loop in codegen — no shuffle until the final
   per-query top-k, which carries only (query_id, vec_id, sim).
-  Top-k uses a window over query_id — Q partitions; for large Q swap in
-  groupBy(query_id).agg(max_by-style partial top-k).
+  Top-k uses a window over query_id — Q partitions; for large Q,
+  ``topk_per_query`` is the two-stage alternative.
 - The LSH variant buckets both sides with random-hyperplane signatures
   (deterministic +-1 planes shipped as literals), joins on the bucket,
   and ranks within buckets: candidate count drops from N*Q to
@@ -70,6 +70,20 @@ def _default_centroids(
     )
 
 
+def _window_topk(
+    scored: DataFrame, k: int, q: str, i: str, s: str
+) -> DataFrame:
+    """The per-query rank every ANN entry point ends with: row_number
+    over (``s`` desc, ``i`` asc) within ``q``, keep ranks <= k. Ties
+    break by id ascending (deterministic); output (q, i, s, rank)."""
+    w = Window.partitionBy(q).orderBy(F.col(s).desc(), F.col(i).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(q, i, s, "rank")
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -87,14 +101,7 @@ def brute_force_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col(query_vec_col)).alias("sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    return _window_topk(scored, k, query_id_col, id_col, "sim")
 
 
 def hyperplanes(dim: int, num_planes: int, seed: int = 1) -> list[list[float]]:
@@ -148,14 +155,9 @@ def lsh_topk(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     probe_radius: int = 0,
-    partial_topk: bool = False,
 ) -> DataFrame:
     """Approximate top-k: equi-join on the hyperplane bucket, exact
     cosine rank within the probed buckets.
-
-    ``partial_topk``: rank via ``topk_per_query`` (two-stage partial
-    top-k) instead of a global per-query window — the large-Q serving
-    path; identical output rows.
 
     ``probe_radius``: multi-probe recall control — each query also
     probes every bucket within this Hamming distance of its own
@@ -193,18 +195,7 @@ def lsh_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col(query_vec_col)).alias("sim"),
     )
-    if partial_topk:
-        return topk_per_query(
-            scored, k, query_id_col=query_id_col, id_col=id_col
-        )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    return _window_topk(scored, k, query_id_col, id_col, "sim")
 
 
 def assign_cells(
@@ -530,49 +521,12 @@ def train_codebook(
     )
 
 
-def _topk_partials_arrow(
-    scored: DataFrame, k: int, q: str, i: str, s: str
-) -> DataFrame:
-    """True map-side-truncating stage 1 of ``topk_per_query``: one
-    ``mapInPandas`` pass keeps a running per-query top-k (total order
-    -sim, id asc) across the partition's Arrow batches and emits at
-    most Q x k rows per partition — so nothing larger ever reaches the
-    exchange. Same accumulate-then-trim pattern as
-    ``sketches._kmv_partials_arrow``."""
-    proj = scored.select(q, i, s)
-    out_schema = proj.schema
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: pd.DataFrame | None = None
-        for pdf in batches:
-            pdf = pdf[[q, i, s]]
-            acc = (
-                pdf
-                if acc is None
-                else pd.concat([acc, pdf], ignore_index=True)
-            )
-            acc = (
-                acc.sort_values(
-                    [q, s, i],
-                    ascending=[True, False, True],
-                    kind="mergesort",
-                )
-                .groupby(q, sort=False, dropna=False)
-                .head(k)
-            )
-        if acc is not None and len(acc):
-            yield acc
-
-    return proj.mapInPandas(kern, out_schema)
-
-
 def topk_per_query(
     scored: DataFrame,
     k: int,
     query_id_col: str = "query_id",
     id_col: str = "vec_id",
     sim_col: str = "sim",
-    partial: str = "column",
 ) -> DataFrame:
     """Scalable per-query top-k over a (query_id, vec_id, sim) frame —
     the large-Q alternative to ``Window.partitionBy(query_id)``.
@@ -584,50 +538,27 @@ def topk_per_query(
     partials with a tiny final agg per query; no global per-query sort
     ever happens and no reducer sees more than one chunk's candidates.
 
-    ``partial`` picks the stage-1 implementation (identical results,
-    pinned by pytest — same split as ``kmv_distinct``):
-
-    - ``"column"`` (default): groupBy(partition_id, query) +
-      collect_list + slice. All-native and plan-transparent, but
-      ``collect_list``'s partial aggregation cannot truncate, so the
-      stage-1 exchange still carries every candidate row (inside
-      per-(partition, query) buffers) — the win over the window is
-      skew-spreading and chunked sorts, NOT shuffle volume.
-    - ``"arrow"``: one ``mapInPandas`` pass emits at most Q x k rows
-      per input partition BEFORE the exchange — true map-side
-      truncation; the shuffle carries at most #partitions x Q x k
-      rows. The production mode when candidates >> Q x k.
+    Stage 1 is groupBy(partition_id, query) + collect_list + slice:
+    all-native and plan-transparent, but ``collect_list``'s partial
+    aggregation cannot truncate, so the stage-1 exchange still carries
+    every candidate row (inside per-(partition, query) buffers) — the
+    win over the window is skew-spreading and chunked sorts, NOT
+    shuffle volume.
 
     Output rows/order semantics are identical to the window form:
     rank by (-sim, id asc), deterministic. One divergence at the edges:
     a NULL sim (zero-norm vector) sorts LAST under the window's
-    DESC-nulls-last but FIRST in the struct array_sort (and is dropped
-    by the arrow path's descending sort); callers feeding zero-norm
-    vectors should filter them (the ANN entry points never produce
-    null sims on the unit-norm embeddings they document)."""
+    DESC-nulls-last but FIRST in the struct array_sort; callers feeding
+    zero-norm vectors should filter them (the ANN entry points never
+    produce null sims on the unit-norm embeddings they document)."""
     entry = F.struct(
         (-F.col(sim_col)).alias("negsim"), F.col(id_col).alias("vid")
     )
-    if partial == "arrow":
-        part = _topk_partials_arrow(
-            scored, k, query_id_col, id_col, sim_col
-        )
-        partial_df = part.select(query_id_col, entry.alias("__e"))
-    elif partial == "column":
-        partial_df = (
-            scored.groupBy(
-                F.spark_partition_id().alias("__pid"), query_id_col
-            )
-            .agg(
-                F.slice(F.array_sort(F.collect_list(entry)), 1, k).alias(
-                    "__tk"
-                )
-            )
-            .select(query_id_col, F.explode("__tk").alias("__e"))
-        )
-    else:
-        raise ValueError(f"unknown partial mode {partial!r}")
-    partial = partial_df
+    partial = (
+        scored.groupBy(F.spark_partition_id().alias("__pid"), query_id_col)
+        .agg(F.slice(F.array_sort(F.collect_list(entry)), 1, k).alias("__tk"))
+        .select(query_id_col, F.explode("__tk").alias("__e"))
+    )
     merged = (
         partial.groupBy(query_id_col)
         .agg(F.slice(F.array_sort(F.collect_list("__e")), 1, k).alias("__tk"))
@@ -653,7 +584,6 @@ def ivf_topk(
     query_vec_col: str = "query_vec",
     centroids: DataFrame | None = None,
     np_assign: bool = False,
-    partial_topk: bool = False,
     tree_probe: int | None = None,
 ) -> DataFrame:
     """IVF-style ANN: a coarse quantizer partitions vectors into
@@ -678,11 +608,6 @@ def ivf_topk(
     the fold path would evaluate C higher-order cosines per row. The
     codebook is collected driver-side (C x d doubles — MBs even at
     2^16 x 768) and ships in the UDF closure.
-
-    ``partial_topk``: use ``topk_per_query`` (two-stage partial top-k,
-    shuffle carries partials only) instead of the global per-query
-    window — required when the query set outgrows a broadcastable
-    window partitioning. Identical output rows either way.
 
     ``tree_probe``: two-level CORPUS-side cell assignment (see
     ``assign_cells_np``) — at 10^9 rows with a grown-with-corpus C,
@@ -743,18 +668,7 @@ def ivf_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col(query_vec_col)).alias("sim"),
     )
-    if partial_topk:
-        return topk_per_query(
-            scored, k, query_id_col=query_id_col, id_col=id_col
-        )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    return _window_topk(scored, k, query_id_col, id_col, "sim")
 
 
 def brute_force_topk_np(
@@ -829,14 +743,7 @@ def brute_force_topk_np(
     partial = vectors.select(id_col, vec_col).mapInPandas(
         score, f"query_id long, {id_col} long, sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, "sim", "rank")
-    )
+    return _window_topk(partial, k, "query_id", id_col, "sim")
 
 
 def embedding_near_dup_pairs(
@@ -1091,14 +998,7 @@ def pq_adc_topk(
     partial = codes_df.select(id_col, "codes").mapInPandas(
         score, f"query_id long, {id_col} long, score double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, "score", "rank")
-    )
+    return _window_topk(partial, k, "query_id", id_col, "score")
 
 
 def _exact_rerank(
@@ -1129,14 +1029,7 @@ def _exact_rerank(
             cosine(F.col(vec_col), F.col("query_vec")).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, "sim", "rank")
-    )
+    return _window_topk(scored, k, "query_id", id_col, "sim")
 
 
 def pq_adc_rerank_topk(
@@ -1375,14 +1268,7 @@ def ivfpq_topk(
         score, f"query_id long, {id_col} long, score double"
     )
     kk = k if rerank_shortlist is None else rerank_shortlist
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    short = (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= kk)
-        .select("query_id", id_col, "score", "rank")
-    )
+    short = _window_topk(partial, kk, "query_id", id_col, "score")
     if rerank_shortlist is None:
         return short
     return _exact_rerank(

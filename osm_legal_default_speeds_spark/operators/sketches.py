@@ -13,32 +13,19 @@ count is exact, otherwise estimate (k-1) / kth_smallest. Standard
 error ~ 1/sqrt(k-2).
 
 Scale shape (the reason to sketch at all): stage 1 truncates to the k
-smallest distinct hashes PER INPUT PARTITION before anything crosses
-an exchange, so the shuffle carries at most partitions x k doubles per
-group — versus COUNT(DISTINCT), whose exchange carries every distinct
-value. Two stage-1 implementations with IDENTICAL results:
-
-- ``partial="arrow"`` (default, the production path): one
-  ``mapInPandas`` pass accumulates the per-group k-smallest set across
-  the partition's Arrow batches and emits <= groups x k rows per
-  partition. True map-side truncation.
-- ``partial="column"`` (the all-native twin): groupBy(group,
-  partition_id) + collect_list + slice. Declarative, but
-  ``collect_list``'s partial aggregation cannot truncate, so the
-  stage-1 exchange carries one 8-byte hash per input row (still far
-  narrower than raw values). Kept as the plan-transparent differential
-  twin; the two paths are pinned equal by pytest and either one
-  matches the DuckDB oracle bit-for-bit.
+smallest distinct hashes PER INPUT PARTITION — groupBy(group,
+partition_id) + collect_list + slice — before the merge, so the merge
+exchange carries at most partitions x k doubles per group, versus
+COUNT(DISTINCT), whose exchange carries every distinct value.
+``collect_list``'s partial aggregation cannot truncate, so the stage-1
+exchange still carries one 8-byte hash per input row (far narrower than
+raw values). The plan is all-native: no Python worker runs, and the
+output matches the DuckDB oracle bit-for-bit.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import DoubleType, FloatType
 
 _UNIT_DENOM = float(1 << 60)  # md5 15-hex-digit prefix spans [0, 16^15)
 
@@ -51,64 +38,19 @@ def unit_hash(col: Column) -> Column:
     return h / F.lit(_UNIT_DENOM)
 
 
-def _kmv_partials_arrow(
-    hashed: DataFrame, groups: list[str], k: int
-) -> DataFrame:
-    """Partition-local k-smallest-distinct truncation: one mapInPandas
-    pass per partition; emits <= groups x k (group, __u) rows."""
-    schema = hashed.drop("__pid").schema
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, np.ndarray] = {}
-        for pdf in batches:
-            if groups:
-                # dropna=False: NULL group keys are real groups in
-                # Spark/DuckDB GROUP BY — the column twin would keep
-                # them, so the arrow path must too
-                it = pdf.groupby(groups, sort=False, dropna=False)
-            else:
-                it = [((), pdf)]
-            for key, sub in it:
-                if not isinstance(key, tuple):
-                    key = (key,)
-                u = sub["__u"].to_numpy()
-                # NULL input values hash to NULL -> NaN here; the
-                # column twin's collect_list drops nulls, so drop NaN
-                # (np.unique would otherwise keep it and inflate k)
-                u = np.unique(u[~np.isnan(u)])
-                prev = acc.get(key)
-                if prev is not None:
-                    u = np.unique(np.concatenate([prev, u]))
-                acc[key] = u[:k]
-            del pdf
-        rows = {g: [] for g in groups}
-        rows["__u"] = []
-        for key, u in acc.items():
-            for g, v in zip(groups, key):
-                rows[g].extend([v] * len(u))
-            rows["__u"].extend(u.tolist())
-        yield pd.DataFrame(rows, columns=[*groups, "__u"])
-
-    return hashed.drop("__pid").mapInPandas(partial, schema)
-
-
 def kmv_distinct(
     df: DataFrame,
     col: str,
     k: int = 64,
     group_cols: list[str] | None = None,
-    partial: str = "arrow",
 ) -> DataFrame:
     """Per-group KMV distinct-count estimate for ``col``.
 
     Output: group cols + ``est_distinct`` (double; EXACT when the group
     has fewer than k distinct hashes) + ``kmv_k`` (the k actually
     available, = min(k, distinct), letting a reader judge the error
-    bar). ``partial``: 'arrow' (map-side truncation, production) or
-    'column' (all-native twin) — identical results, see module
-    docstring. A FLOAT/DOUBLE group column always takes the column
-    stage 1: pandas holds both SQL NULL and NaN keys as float NaN, so
-    the arrow partials would merge two groups Spark keeps apart.
+    bar). NULL and NaN group keys stay distinct groups, as in Spark's
+    and DuckDB's GROUP BY; see the module docstring for the plan.
     """
     if k < 2:
         # the estimator divides (k-1) by the kth smallest hash: k=0
@@ -119,40 +61,19 @@ def kmv_distinct(
     groups = list(group_cols or [])
     u = unit_hash(F.col(col)).alias("__u")
     part = F.spark_partition_id().alias("__pid")
-    # null values are ignored BEFORE grouping (matches the oracle's
-    # WHERE col IS NOT NULL): a group with only null values emits no
-    # row in every path, instead of diverging between them
+    # null values are ignored BEFORE grouping (the oracle's WHERE col
+    # IS NOT NULL): a group with only null values emits no row
     hashed = df.where(F.col(col).isNotNull()).select(*groups, u, part)
 
-    if partial == "arrow" and any(
-        isinstance(f.dataType, (FloatType, DoubleType))
-        for f in hashed.schema.fields[: len(groups)]
-    ):
-        partial = "column"
-    if partial == "arrow":
-        stage1 = _kmv_partials_arrow(hashed, groups, k).select(
-            *groups, F.col("__u")
-        )
-    elif partial == "column":
-        stage1 = (
-            hashed.groupBy(*groups, "__pid")
-            .agg(
-                F.slice(
-                    F.array_sort(F.array_distinct(F.collect_list("__u"))),
-                    1,
-                    k,
-                ).alias("__ks")
-            )
-            .select(*groups, F.explode("__ks").alias("__u"))
-        )
-    else:
-        raise ValueError(f"unknown partial mode {partial!r}")
-
-    merged = stage1.groupBy(*groups).agg(
-        F.slice(
-            F.array_sort(F.array_distinct(F.collect_list("__u"))), 1, k
-        ).alias("__ks")
+    k_smallest = F.slice(
+        F.array_sort(F.array_distinct(F.collect_list("__u"))), 1, k
+    ).alias("__ks")
+    stage1 = (
+        hashed.groupBy(*groups, "__pid")
+        .agg(k_smallest)
+        .select(*groups, F.explode("__ks").alias("__u"))
     )
+    merged = stage1.groupBy(*groups).agg(k_smallest)
     n = F.size("__ks")
     est = F.when(n < k, n.cast("double")).otherwise(
         F.lit(float(k - 1)) / F.element_at("__ks", k)
@@ -175,7 +96,7 @@ WITH hashed AS (
   SELECT {gsel}
     (('0x' || substring(md5({col}), 1, 15))::BIGINT / {_UNIT_DENOM!r}) AS u
   FROM {table_expr}
-  WHERE {col} IS NOT NULL  -- null inputs are ignored (both Spark paths)
+  WHERE {col} IS NOT NULL  -- null inputs are ignored, as in Spark
 ),
 merged AS (
   SELECT {gsel}

@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from collections.abc import Callable
@@ -66,6 +67,27 @@ PID_COL = "pid"
 
 def _manifest_path(output_dir: str, pid: int) -> str:
     return os.path.join(output_dir, MANIFEST_DIR, f"pid-{pid}.json")
+
+
+_URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+
+
+def _require_posix_store(path: str) -> None:
+    """Refuse a URI-schemed ``path`` up front, before anything is
+    written: :func:`publish_once` and the manifest reads use
+    driver-local POSIX IO, so the parquet would land in the target FS
+    while the commit records landed on the driver's local disk (for
+    ``file://``, under a relative ``file:/`` directory in its working
+    directory) — a silently split store."""
+    if _URI_SCHEME.match(path):
+        raise ValueError(
+            f"{path!r} carries a URI scheme: the commit records use "
+            "driver-local POSIX IO for their atomic create-if-absent "
+            "publish, so a URI path would split the store (parquet "
+            "in the target FS, commit records on the driver's disk). "
+            "Use a plain POSIX path on a mount shared between driver "
+            "and readers instead."
+        )
 
 
 def publish_once(path: str, text: str) -> bool:
@@ -180,8 +202,12 @@ def run_checkpointed(
     identical to a single uninterrupted run. The input is computed
     once per run (``_run_buckets``).
 
+    ``output_dir`` must be a plain POSIX path: a URI-schemed one
+    raises ``ValueError`` (:func:`_require_posix_store`).
+
     Returns ``{"completed": [...], "skipped": [...], "rows": int}``.
     """
+    _require_posix_store(output_dir)
 
     def commit(part: DataFrame, batch: list[int]) -> int:
         t0 = time.monotonic()

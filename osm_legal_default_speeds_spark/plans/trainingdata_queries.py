@@ -31,10 +31,9 @@ Coverage added on top of plans.driver_queries:
   pii_redact         typed PII redaction + per-category counts
   ann_topk           brute-force cosine top-k over embeddings
   ann_lsh_topk       random-hyperplane LSH bucketed approximate top-k
-  ann_lsh_topk_partial  same, ranked via two-stage partial top-k (large-Q path)
   ann_multiprobe     Hamming-radius-1 multi-probe LSH (recall control)
   ann_ivf_topk       IVF coarse-quantizer cells + nprobe probing
-  ann_ivf_topk_np    production IVF: matmul assign + partial top-k
+  ann_ivf_topk_np    production IVF: matmul cell assignment
                      (integer rank surface, hash-oracled)
   ann_pq_topk        product-quantization ANN: deterministic-init
                      codebooks, distributed encode, ADC top-k over
@@ -818,20 +817,6 @@ SELECT query_id, vec_id, sim, rank FROM ranked WHERE rank <= {LSH_K}
 """
 
 
-def q_ann_lsh_topk_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lsh_topk through the two-stage PARTIAL top-k rank
-    (operators.similarity.topk_per_query — the large-Q serving path,
-    shuffle carries per-partition partials only). Bit-identical rows to
-    the window rank, so it shares ann_lsh_topk's oracle."""
-    return lsh_topk(
-        _read(spark, sf_dir, "embeddings", wide=True),
-        _queries_df(spark, sf_dir),
-        LSH_PLANES,
-        k=LSH_K,
-        partial_topk=True,
-    )
-
-
 def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH top-k (Hamming-radius-1 probes): recall control
     over the single-probe baseline, same bucket join shape."""
@@ -902,14 +887,13 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_ivf_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-path twin of ann_ivf_topk: NumPy matmul cell
-    assignment (assign_cells_np via mapInPandas) + two-stage partial
-    top-k. Projects the INTEGER surface (query_id, vec_id, rank):
-    numpy's pairwise-summation dot products differ from the oracle's
-    sequential fold in the last ulps, so the float sim can't be
-    value-hashed — but the id/rank ordering is ulp-stable on the
-    deterministic fixture (and pinned independently by
-    test_ivf_topk_np_assign_parity / test_partial_topk_matches_window),
-    making the rank projection a full hash-verified driver oracle."""
+    assignment (assign_cells_np via mapInPandas). Projects the INTEGER
+    surface (query_id, vec_id, rank): numpy's pairwise-summation dot
+    products differ from the oracle's sequential fold in the last ulps,
+    so the float sim can't be value-hashed — but the id/rank ordering
+    is ulp-stable on the deterministic fixture (and pinned
+    independently by test_ivf_topk_np_assign_parity), making the rank
+    projection a full hash-verified driver oracle."""
     from osm_legal_default_speeds_spark.operators.similarity import ivf_topk
 
     return ivf_topk(
@@ -919,7 +903,6 @@ def q_ann_ivf_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=IVF_NPROBE,
         k=ANN_K,
         np_assign=True,
-        partial_topk=True,
     ).select(
         "query_id", "vec_id", F.col("rank").cast("long").alias("rank")
     )
@@ -2745,7 +2728,6 @@ TRAININGDATA_QUERIES = {
     "line_dedup": q_line_dedup,
     "ann_topk": q_ann_topk,
     "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_lsh_topk_partial": q_ann_lsh_topk_partial,
     "ann_multiprobe": q_ann_multiprobe,
     "ann_ivf_topk": q_ann_ivf_topk,
     "ann_ivf_topk_np": q_ann_ivf_topk_np,
@@ -3051,8 +3033,6 @@ TRAININGDATA_ORACLES = {
     "line_dedup": SQL_LINE_DEDUP,
     "ann_topk": SQL_ANN_TOPK,
     "ann_lsh_topk": SQL_ANN_LSH_TOPK,
-    # partial top-k is an exact reformulation of the window rank
-    "ann_lsh_topk_partial": SQL_ANN_LSH_TOPK,
     "ann_multiprobe": SQL_ANN_MULTIPROBE,
     "ann_ivf_topk": SQL_ANN_IVF_TOPK,
     # the PQ tier's integer surfaces (query_id, vec_id, rank) — float

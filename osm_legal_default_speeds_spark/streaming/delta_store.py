@@ -62,7 +62,7 @@ create-if-absent on object stores, which is exactly where a commit
 record must not be half-visible or silently overwritten). A
 URI-schemed path (``hdfs://``, ``s3a://`` …) would silently split the
 store — parquet in the distributed FS, manifests on the driver's disk
-— so writers refuse it up front (:func:`_require_posix_store`).
+— so writers refuse it up front (``checkpointed_job._require_posix_store``).
 Object-store deployments should mount-translate (s3fs/fuse,
 EFS/Filestore) or keep stores on HDFS-NFS gateways.
 """
@@ -80,27 +80,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from osm_legal_default_speeds_spark.plans.checkpointed_job import (
+    _require_posix_store,
     publish_once,
 )
 
-_URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 _MANIFEST = "manifest.json"
-
-
-def _require_posix_store(store_dir: str) -> None:
-    """Writers refuse URI-schemed store paths up front (see the STORE
-    PATH CONTRACT in the module docstring): parquet would land in the
-    distributed FS while manifests landed on the driver's local disk —
-    a silently split store."""
-    if _URI_SCHEME.match(store_dir):
-        raise ValueError(
-            f"store_dir {store_dir!r} carries a URI scheme: the "
-            "store's manifest files use driver-local POSIX IO for "
-            "their atomic create-if-absent publish, so a "
-            "distributed-FS path would split the store (parquet "
-            "remote, manifests local). Point store_dir at a POSIX "
-            "mount shared between driver and readers instead."
-        )
 
 
 def _old_layout(store_dir: str) -> ValueError:

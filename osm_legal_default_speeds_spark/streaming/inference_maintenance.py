@@ -33,8 +33,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from osm_legal_default_speeds_spark.streaming.delta_store import (
+from osm_legal_default_speeds_spark.plans.checkpointed_job import (
     _require_posix_store,
+)
+from osm_legal_default_speeds_spark.streaming.delta_store import (
     commit_delta,
     compact_store,
     current_version,

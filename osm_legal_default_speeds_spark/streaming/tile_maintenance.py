@@ -42,8 +42,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from osm_legal_default_speeds_spark.operators.spatial import (
     rebuild_changed_tiles_delta,
 )
-from osm_legal_default_speeds_spark.streaming.delta_store import (  # noqa: F401
+from osm_legal_default_speeds_spark.plans.checkpointed_job import (
     _require_posix_store,
+)
+from osm_legal_default_speeds_spark.streaming.delta_store import (  # noqa: F401
     base_version,
     bind_stream,
     checkpoint_query_id,

@@ -107,6 +107,30 @@ def test_resume_on_complete_dir_is_noop(spark, tmp_path):
     assert res["rows"] == 0
 
 
+def test_uri_schemed_output_dir_refused(spark, tmp_path, monkeypatch):
+    """A ``file://`` output_dir would split the output: Spark writes the
+    parquet to the path, while the driver-local manifest publish would
+    create a relative ``file:/...`` directory in the working directory,
+    which a rerun from there reads as every bucket committed. The path
+    is refused before the input is built or any Spark job runs."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = f"file://{tmp_path}/out"
+    built = []
+
+    def make_df(s):
+        built.append(True)
+        return _pipeline(s)
+
+    with pytest.raises(ValueError, match="URI scheme") as err:
+        run_checkpointed(spark, make_df, out, "tile_id", NUM_BUCKETS)
+    assert out in str(err.value)
+    assert built == []
+    assert not (tmp_path / "out").exists()
+    assert os.listdir(cwd) == []
+
+
 def test_data_without_manifest_is_reprocessed(spark, tmp_path):
     """Manifest presence is the commit marker: deleting a manifest (the
     crash-between-write-and-commit case) forces reprocessing of exactly

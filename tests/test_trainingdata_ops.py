@@ -2,6 +2,7 @@
 (exact/MinHash/SimHash/Jaccard), embedding similarity search."""
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -565,33 +566,6 @@ def test_ivf_topk_np_assign_parity(vectors):
         assert fold[key][1] == pytest.approx(fast[key][1], abs=1e-9)
 
 
-def test_partial_topk_matches_window(vectors):
-    """topk_per_query (two-stage partial top-k, the large-Q path) must
-    produce bit-identical rows to the global window rank, on both
-    lsh_topk and ivf_topk."""
-    from osm_legal_default_speeds_spark.operators.similarity import ivf_topk
-
-    dim = len(vectors.first()["embedding"])
-    planes = hyperplanes(dim, 4)
-    queries = vectors.limit(4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-    def rows(df):
-        return sorted(
-            (r["query_id"], r["rank"], r["vec_id"], r["sim"])
-            for r in df.collect()
-        )
-
-    assert rows(lsh_topk(vectors, queries, planes, k=3)) == rows(
-        lsh_topk(vectors, queries, planes, k=3, partial_topk=True)
-    )
-    kw = dict(n_centroids=4, nprobe=2, k=5)
-    assert rows(ivf_topk(vectors, queries, **kw)) == rows(
-        ivf_topk(vectors, queries, partial_topk=True, **kw)
-    )
-
-
 def test_train_codebook_init_filter_matches_sort(vectors):
     """The filter-based deterministic init (no full sort) must produce
     the same 0-iteration codebook as the old orderBy.limit init would:
@@ -831,26 +805,38 @@ def test_kmv_distinct_accuracy_and_exactness(spark):
     assert a == est_mode["est_distinct"]
 
 
-def test_kmv_partial_modes_identical(spark):
-    """The arrow (map-side truncation) and column (declarative twin)
-    stage-1 paths must produce identical sketches, grouped and global."""
+def test_kmv_partition_invariant(spark):
+    """The sketch must not depend on how the input is partitioned:
+    stage 1 truncates per partition, so 1 and 8 partitions take
+    different stage-1 routes to the same k smallest hashes. Both must
+    equal the DuckDB twin, grouped and global."""
+    import duckdb
+
     from osm_legal_default_speeds_spark.operators.sketches import (
         kmv_distinct,
+        kmv_sql,
     )
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
-    ).repartition(8)
+    )
+    con = duckdb.connect()
+    con.register("t", docs.select("source", "text").toPandas())
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
+    def rows(it):
+        return sorted(
+            (tuple(r[:-2]), round(r[-2], 9), int(r[-1])) for r in it
+        )
 
-    for groups in (["source"], None):
-        a = kmv_distinct(docs, "text", k=16, group_cols=groups,
-                         partial="arrow")
-        c = kmv_distinct(docs, "text", k=16, group_cols=groups,
-                         partial="column")
-        assert rows(a) == rows(c), groups
+    for groups in (["source"], []):
+        one = rows(kmv_distinct(docs.repartition(1), "text", k=16,
+                                group_cols=groups).collect())
+        eight = rows(kmv_distinct(docs.repartition(8), "text", k=16,
+                                  group_cols=groups).collect())
+        oracle = rows(con.execute(kmv_sql("t", "text", 16, groups)).fetchall())
+        assert one == eight == oracle, groups
+        assert oracle
+    con.close()
 
 
 def test_sampling_deterministic_and_stratified(spark):
@@ -1072,10 +1058,9 @@ def test_decontaminate_drops_planted_overlap(spark, docs):
 # --------------------------------------------- review-fix regressions
 
 def test_kmv_null_values_and_null_groups(spark):
-    """NULL handling must be identical across all three stage-1 paths:
-    null VALUES are ignored before grouping (a group with only null
-    values emits no row anywhere), null GROUP KEYS are real groups —
-    arrow partial == column partial == DuckDB SQL twin."""
+    """NULL handling must match the DuckDB SQL twin: null VALUES are
+    ignored before grouping (a group with only null values emits no
+    row), null GROUP KEYS are real groups."""
     import duckdb
 
     from osm_legal_default_speeds_spark.operators.sketches import (
@@ -1097,10 +1082,7 @@ def test_kmv_null_values_and_null_groups(spark):
             key=lambda t: (t[0] is None, t[0] or ""),
         )
 
-    a = norm(kmv_distinct(df, "v", k=8, group_cols=["g"],
-                          partial="arrow").collect())
-    c = norm(kmv_distinct(df, "v", k=8, group_cols=["g"],
-                          partial="column").collect())
+    c = norm(kmv_distinct(df, "v", k=8, group_cols=["g"]).collect())
 
     con = duckdb.connect()
     con.register("t", df.toPandas())
@@ -1110,15 +1092,15 @@ def test_kmv_null_values_and_null_groups(spark):
     )
     con.close()
 
-    assert a == c == o
-    groups_seen = {g for g, _, _ in a}
+    assert c == o
+    groups_seen = {g for g, _, _ in c}
     assert groups_seen == {"a", None}  # "b" (all nulls) absent, NULL kept
-    assert ("a", 2.0, 2) in a and (None, 2.0, 2) in a
+    assert ("a", 2.0, 2) in c and (None, 2.0, 2) in c
 
     # a DOUBLE group column holding both NULL and NaN keys: three groups
-    # in Spark's own groupBy, so three in the default path too (pandas
-    # holds NULL and NaN alike as NaN). Compared on collected Spark rows,
-    # not through toPandas, which has the same NULL -> NaN conflation.
+    # in Spark's own groupBy, so three in the sketch too. Compared on
+    # collected Spark rows, not through toPandas, which holds NULL and
+    # NaN alike as NaN.
     fdf = spark.createDataFrame(
         [(None, "a"), (float("nan"), "b"), (1.0, "c")], "g double, v string"
     )
@@ -1321,10 +1303,13 @@ def test_repetition_stats_signals(spark):
     assert got[2]["top_token_frac"] == 0.5
 
 
-def test_topk_partial_arrow_matches_column(vectors):
-    """The map-side-truncating arrow stage 1 and the declarative column
-    stage 1 of topk_per_query must produce identical (query, id, sim,
-    rank) rows — including at duplicate-sim ties."""
+def test_topk_per_query_matches_window(vectors):
+    """The two-stage top-k of topk_per_query must produce the same
+    (query, id, sim, rank) rows as a global per-query window rank over
+    the same repartitioned candidate frame — including at duplicate-sim
+    ties, planted by copying every candidate under a shifted id."""
+    from pyspark.sql import Window
+
     from osm_legal_default_speeds_spark.operators.similarity import (
         brute_force_topk,
         topk_per_query,
@@ -1338,7 +1323,16 @@ def test_topk_partial_arrow_matches_column(vectors):
     # brute_force_topk ranks internally, with ALL candidates kept
     scored = brute_force_topk(
         vectors, queries, k=vectors.count()
-    ).select("query_id", "vec_id", "sim").repartition(8)
+    ).select("query_id", "vec_id", "sim")
+    scored = scored.unionByName(
+        scored.withColumn("vec_id", F.col("vec_id") + 1_000_000)
+    ).repartition(8)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("vec_id").asc()
+    )
+    window = scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= 5
+    )
 
     def rows(df):
         return sorted(
@@ -1346,10 +1340,50 @@ def test_topk_partial_arrow_matches_column(vectors):
             for r in df.collect()
         )
 
-    col_rows = rows(topk_per_query(scored, 5, partial="column"))
-    arr_rows = rows(topk_per_query(scored, 5, partial="arrow"))
-    assert col_rows == arr_rows
-    assert len(col_rows) == 4 * 5
+    got = rows(topk_per_query(scored, 5))
+    assert got == rows(window)
+    assert len(got) == 4 * 5
+    # the ties are real: each query's top 5 holds equal sims
+    assert len({(q, s) for q, _, _, s in got}) <= 4 * 3
+
+
+def test_topk_and_kmv_plan_shapes(spark, vectors):
+    """Plan pins: the KMV sketch and the stratified sample run no
+    Python worker, and lsh_topk / ivf_topk rank with one window."""
+    from osm_legal_default_speeds_spark.operators.sampling import (
+        stratified_sample,
+    )
+    from osm_legal_default_speeds_spark.operators.similarity import ivf_topk
+    from osm_legal_default_speeds_spark.operators.sketches import (
+        kmv_distinct,
+    )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    docs = spark.createDataFrame(
+        [(i, f"t{i % 7}", f"s{i % 3}") for i in range(50)],
+        "doc_id long, text string, source string",
+    )
+    for df in (
+        kmv_distinct(docs, "text", k=16, group_cols=["source"]),
+        stratified_sample(docs, "source", "doc_id", 3),
+    ):
+        p = plan(df)
+        assert "MapInPandas" not in p and "ArrowEvalPython" not in p, p
+
+    queries = vectors.limit(4).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    planes = hyperplanes(len(vectors.first()["embedding"]), 4)
+    for df in (
+        lsh_topk(vectors, queries, planes, k=3),
+        ivf_topk(vectors, queries, n_centroids=4, nprobe=2, k=5),
+    ):
+        p = plan(df)
+        assert len(re.findall(r"(?m)^[ :+-]*Window \[", p)) == 1, p
+        assert "row_number()" in p
 
 
 # ---------------------------------------------------------------------------
